@@ -68,33 +68,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // split-size knob (at real scale it sizes scan partitions to executor
-      // memory). NOTE: the sf fixtures are single-row-group files, so scan
-      // parallelism is capped at one task per file whatever this is set to
-      // — measured 1 MB/4 MB/128 MB all within jitter; default kept.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-table queries use saveAsTable: keep the warehouse out of cwd
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: rounds 5-7 produced "parsed": null BENCH artifacts
-    // because the driver captures a bounded TAIL of interleaved
-    // stdout+stderr, and thousands of WindowExec "No Partition Defined"
-    // WARN lines (every one tagged [error] by sbt) flushed the JSON line
-    // out of the window. The warnings themselves are machine-checked
-    // in-repo instead (PlanShapeSpec's inventory-wide unpartitioned-window
-    // sweep), which is strictly stronger than grepping bench stderr.
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local("graft-bench", cpus)
 
     // TIMING-sweep door mode (round-13 verdict task 7): the
     // split-invariant document doors run 2 micro-batches here instead of
@@ -102,16 +77,11 @@ object Bench {
     // StreamingSpec and the per-door scaladocs), so the sweep times the
     // same computation minus half the fixed per-micro-batch engine
     // overhead that was growing linearly with every new door (~60 s of
-    // the 260 s round-13 full sweep across 16 doors). Verify and the
-    // specs never set this property, so every CORRECTNESS run still
-    // drives the full 4-batch ingest; the grow doors' deterministic
-    // 4-group folds ignore the knob entirely.
-    // Cleared in the finally below: the property is JVM-global, so any
-    // correctness code run later in the same process (Verify, specs)
-    // would otherwise silently inherit the 2-batch sweep mode instead of
-    // the documented 4-batch ingest (round-14 ADVICE).
-    System.setProperty("graft.door.batches", "2")
-    try {
+    // the 260 s round-13 full sweep across 16 doors). The conf is
+    // session-scoped: Verify and the specs never set it, so every
+    // CORRECTNESS run still drives the full 4-batch ingest; the grow
+    // doors' deterministic 4-group folds ignore the knob entirely.
+    spark.conf.set(graft.streaming.Streaming.DoorBatchesConf, "2")
 
     val setupFailed = runSetup(spark, sfDir)
 
@@ -183,6 +153,5 @@ object Bench {
     // must end with the JSON.
     spark.stop()
     println(headlineJson)
-    } finally System.clearProperty("graft.door.batches")
   }
 }

@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{BigramMd5Buckets, ChunkMd5Ids64, CosineSimilarity, HyperplaneBits, MinHashFromHashes, NgramHashes, PolyTokenHash, SimHash64, SpanMd5Ids, SpanMd5s, TryParseInt}
+import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point: makes graft's native expressions
-  * available to pure-SQL users without touching session internals.
+  * available to pure-SQL users without touching session internals. It
+  * injects the same function table [[GraftFunctions.register]] installs.
   *
   * Usage:
   *   SparkSession.builder()
@@ -16,38 +17,9 @@ import graft.functions.{BigramMd5Buckets, ChunkMd5Ids64, CosineSimilarity, Hyper
   * then `SELECT cosine_sim(a.embedding, b.embedding) FROM ...`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, clazz: Class[_], builder: Seq[Expression] => Expression): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(clazz.getName, name), builder))
-    inject("cosine_sim", classOf[CosineSimilarity], es => CosineSimilarity(es(0), es(1)))
-    inject("poly_hash", classOf[PolyTokenHash], es => PolyTokenHash(es.head))
-    inject("ngram_hashes", classOf[NgramHashes], es => NgramHashes(es.head))
-    inject("minhash64", classOf[MinHashFromHashes], es => MinHashFromHashes(es.head))
-    inject("hyperplane_bits", classOf[HyperplaneBits], es => HyperplaneBits(es.head))
-    inject("simhash64_fp", classOf[SimHash64], es => SimHash64(es.head))
-    inject("try_parse_int", classOf[TryParseInt], es => TryParseInt(es.head))
-    inject("span_md5s", classOf[SpanMd5s], es => SpanMd5s(es.head))
-    inject("bigram_md5_buckets", classOf[BigramMd5Buckets],
-      es => BigramMd5Buckets(es.head))
-    inject("span_md5_ids", classOf[SpanMd5Ids], es => SpanMd5Ids(es.head,
-      constWidth(es, "span_md5_ids")))
-    inject("chunk_md5_ids64", classOf[ChunkMd5Ids64],
-      es => ChunkMd5Ids64(es.head, constWidth(es, "chunk_md5_ids64")))
-  }
-
-  /** The optional width argument must be a CONSTANT integer (the
-    * expression bakes it into codegen): a non-foldable second argument —
-    * e.g. a column reference — would otherwise eval against a null input
-    * row and die with an opaque ClassCastException/NPE at analysis time.
-    */
-  private def constWidth(es: Seq[Expression], fn: String): Int =
-    if (es.length <= 1) 4
-    else if (!es(1).foldable) throw new IllegalArgumentException(
-      s"$fn: the width argument must be a constant integer, got ${es(1).sql}")
-    else es(1).eval(null) match {
-      case n: Number => n.intValue
-      case other => throw new IllegalArgumentException(
-        s"$fn: the width argument must be a constant integer, got $other")
+        new ExpressionInfo(GraftFunctions.getClass.getName, name), builder))
     }
 }

@@ -1,44 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
 
 /** Local measurement probe for the optimization rounds — NOT part of the
-  * driver contract. Runs ONE query like [[OptProbe]] but with a
-  * SparkListener that prints every job's (start-offset, duration,
-  * description) relative to the query's t0, so the per-door fixed costs
-  * (engine WAL/commit gaps, per-batch planning, src-write jobs) are
-  * attributable: the GAPS between jobs are driver-side work (planning,
-  * codegen, streaming-engine bookkeeping, commit protocol), the jobs
-  * themselves are cluster work.
+  * driver contract. Same session and methodology as [[Bench]] (noop
+  * sink, per-query clearCache, 2-batch doors), but runs each named query
+  * `reps` times. A SparkListener prints every job's (start-offset,
+  * duration, description) relative to the rep's t0, so the per-door
+  * fixed costs (engine WAL/commit gaps, per-batch planning, src-write
+  * jobs) are attributable: the GAPS between jobs are driver-side work
+  * (planning, codegen, streaming-engine bookkeeping, commit protocol),
+  * the jobs themselves are cluster work. Each query ends with its MIN
+  * and median rep, so a change can be adjudicated under bursty ambient
+  * load (BASELINE.md method: the minimum of several reps is the
+  * load-robust statistic; a single "warm second run" is not).
   *
-  * Usage: runMain graft.JobTrace <query> [reps]
+  * Usage: runMain graft.JobTrace <q1,q2,...> [reps]
   */
 object JobTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = args(0).split(",").toSeq
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-jobtrace")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-jobtrace",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.conf.set(graft.streaming.Streaming.DoorBatchesConf, "2")
+    // optional runtime conf overrides for A/B probes, e.g.
+    // SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=134217728"
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
     })
-    System.setProperty("graft.door.batches", "2")
     try {
       Bench.runSetup(spark, sfDir)
       @volatile var t0 = System.nanoTime()
@@ -62,23 +54,24 @@ object JobTrace {
         }
       })
       names.foreach { name =>
-      (1 to reps).foreach { r =>
-        println(s"=== $name rep $r ===")
-        starts.clear()
-        t0 = System.nanoTime()
-        traceOn = true
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        traceOn = false
-        // listener delivery is async: give the bus a beat before the
-        // next rep clears the start map
-        Thread.sleep(300)
-        spark.catalog.clearCache()
-        println(f"[trace] $name rep$r TOTAL $dt%.2f s")
+        val ts = (1 to reps).map { r =>
+          println(s"=== $name rep $r ===")
+          starts.clear()
+          t0 = System.nanoTime()
+          traceOn = true
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.mode("overwrite").format("noop").save()
+          val dt = (System.nanoTime() - t0) / 1e9
+          traceOn = false
+          // listener delivery is async: give the bus a beat before the
+          // next rep clears the start map
+          Thread.sleep(300)
+          spark.catalog.clearCache()
+          println(f"[trace] $name rep$r TOTAL $dt%.2f s")
+          dt
+        }.sorted
+        println(f"[trace] $name MIN ${ts.head}%.2f MED ${ts(ts.size / 2)}%.2f")
       }
-      }
-      spark.stop()
-    } finally System.clearProperty("graft.door.batches")
+    } finally spark.stop()
   }
 }

@@ -1,24 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints physical-plan audit markers for the headline queries — the
   * .explain loop the builder uses to keep plans scale-shaped.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE off: un-executed adaptive plans hide Exchange nodes and codegen
-      // ids from explain; the audit wants the static plan shape (AQE stays
-      // on in Bench/Verify where it acts at runtime)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-planaudit", 8)
+    // AQE off: un-executed adaptive plans hide Exchange nodes and codegen
+    // ids from explain; the audit wants the static plan shape (AQE stays
+    // on in Bench/Verify where it acts at runtime)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val interesting = Seq("q_scan_project", "q1_agg", "q_join_inner",
       "q_join_broadcast", "q_join_range", "q_topk_global", "q_wordcount",
       "q_window_frames", "q_ann_bruteforce", "q_dedup_minhash",

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for named queries to files — the
   * plans/r15 evidence the optimization rounds commit alongside each
   * change (guide §1: capture the plan before and after).
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]
   * writes <outDir>/<query>_<suffix>.txt per query.
   *
-  * Same session shape as Bench (AQE ON — the executed configuration;
+  * Same session as Bench (GraftSession, AQE ON — the executed configuration;
   * the initial plan is what explain shows pre-execution, and Exchange
   * placement/join strategy are already decided there).
   */
@@ -19,18 +17,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-plandump",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val t0 = System.nanoTime()

@@ -101,17 +101,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val _ = factor // force the env parse/require before any Spark setup
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-smoke", 32)
     ensureScaled(spark, src)
     spark.range(1000000).selectExpr("sum(id)").write.mode("overwrite").format("noop").save()
     // one-time stores for the scaled dir (ingest, not measured)

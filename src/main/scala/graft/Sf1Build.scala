@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1-scale fixture builder for the ORACLE spot-sweep (one-time tool;
@@ -25,15 +24,8 @@ object Sf1Build {
   def main(args: Array[String]): Unit = {
     val src = "/root/testdata/sf0.1"
     val factor = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-sf1-build")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-sf1-build", 32)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val marker = new java.io.File(s"$root/_built")
     if (marker.exists()) { println(s"[sf1] already built at $root"); spark.stop(); return }
     val docs = spark.read.parquet(s"$src/documents.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Planted-clique sf1 fixture for the near-dup CLUSTERING contracts
@@ -11,8 +10,9 @@ import org.apache.spark.sql.functions._
   * because their brute-force oracles are quadratic in docs AND sample
   * restriction is unsound for cluster membership (an in-sample doc may
   * cluster through out-of-sample links). This builder makes the links
-  * impossible BY CONSTRUCTION — the ContainDoorScale vocabulary-
-  * disjointness trick applied to document text instead of gram hashes:
+  * impossible BY CONSTRUCTION — the vocabulary-disjointness trick of
+  * the containment-door flatness probe (SCALE.md round-13) applied to
+  * document text instead of gram hashes:
   *
   *   - corpus = the full 50k-doc sf1 corpus (/tmp/graft_sf1_v1,
   *     graft.Sf1Build) ∪ ~250 PLANTED docs in ids >= 9e8;
@@ -88,13 +88,7 @@ object Sf1CliqueBuild {
     if (src == Sf1Build.root)
       require(new java.io.File(s"$src/_built").exists(),
         s"$src missing — run graft.Sf1Build first")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-sf1-clique-build")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-sf1-clique-build", 32)
     import spark.implicits._
     val marker = new java.io.File(s"$root/_built")
     if (marker.exists()) { println(s"[sf1clique] already built at $root"); spark.stop(); return }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,22 +10,10 @@ object Verify {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // int64 micros so DuckDB/pyarrow read the same instants back
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.ts is TIMESTAMP(NANOS); read as long, Tables converts to us
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-table queries use saveAsTable: keep the warehouse out of cwd
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    // int64 micros so DuckDB/pyarrow read the same instants back
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     val selected = only match {
       case Some(f) => SparkEntry.queries.filter { case (n, _) => f(n) }

@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -64,111 +66,89 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for graft's SQL-callable functions. Idempotent —
-  * query builders call it on entry; also injectable via
-  * [[graft.GraftExtensions]] for `spark.sql` users.
+/** graft's SQL-callable functions: one (name, builder) table that both
+  * [[GraftFunctions.register]] and [[graft.GraftExtensions]] install, so
+  * the session registration and the `spark.sql.extensions` surface
+  * cannot drift apart.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyTokenHash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_hashes", exprs => NgramHashes(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash64", exprs => MinHashFromHashes(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_bits", exprs => HyperplaneBits(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64_fp", exprs => SimHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "try_parse_int", exprs => TryParseInt(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "span_md5s", exprs => SpanMd5s(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_md5_buckets", exprs => BigramMd5Buckets(exprs.head), "built-in")
-    // optional second arg = window width, so call sites keep their local
-    // k as the single source of truth instead of silently coupling to
-    // the expression's default; it must be a CONSTANT (folded into
-    // codegen) — a non-foldable arg would eval against a null row here
-    // and die with an opaque ClassCastException, so reject it by name
-    def constWidth(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-        fn: String): Int =
-      if (exprs.length <= 1) 4
-      else if (!exprs(1).foldable) throw new IllegalArgumentException(
-        s"$fn: the width argument must be a constant integer, got ${exprs(1).sql}")
-      else exprs(1).eval(null) match {
-        case n: Number => n.intValue
-        case other => throw new IllegalArgumentException(
-          s"$fn: the width argument must be a constant integer, got $other")
-      }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "span_md5_ids", exprs => SpanMd5Ids(exprs.head,
-        constWidth(exprs, "span_md5_ids")), "built-in")
-    // second argument REQUIRED for the profile/battery functions
-    // (round-14 review): constWidth's silent 4 default is
-    // span_md5_ids' window, semantically meaningless here (profiles
-    // use a rank depth K=150, the battery n=2..10) — an omitted
-    // argument must be a clear arity error, not a silently-wrong
-    // 4-wide computation. `paramName` keeps the diagnostic honest per
-    // function (K is a rank DEPTH, not a window width), and the arity
-    // check runs BEFORE any exprs.head access so a zero-argument call
-    // also gets the real message instead of head-of-empty-Seq.
-    def reqSecond(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-        fn: String, paramName: String): Int = {
-      if (exprs.length != 2) throw new IllegalArgumentException(
-        s"$fn requires exactly two arguments (input, constant $paramName), " +
-          s"got ${exprs.length}")
-      constWidth(exprs, fn)
+  // optional second arg = window width, so call sites keep their local
+  // k as the single source of truth instead of silently coupling to
+  // the expression's default; it must be a CONSTANT (folded into
+  // codegen) — a non-foldable arg would eval against a null row here
+  // and die with an opaque ClassCastException, so reject it by name
+  private def constWidth(exprs: Seq[Expression], fn: String): Int =
+    if (exprs.length <= 1) 4
+    else if (!exprs(1).foldable) throw new IllegalArgumentException(
+      s"$fn: the width argument must be a constant integer, got ${exprs(1).sql}")
+    else exprs(1).eval(null) match {
+      case n: Number => n.intValue
+      case other => throw new IllegalArgumentException(
+        s"$fn: the width argument must be a constant integer, got $other")
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rep_rle_stats", exprs => RepRleStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "trigram_rank_profile", exprs => {
-        val k = reqSecond(exprs, "trigram_rank_profile", "rank depth k")
-        TrigramRankProfile(exprs.head, k)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "trigram_profile_size", exprs => {
-        val k = reqSecond(exprs, "trigram_profile_size", "rank depth k")
-        TrigramProfileSize(exprs.head, k)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rep_gram_stats", exprs => {
-        val n = reqSecond(exprs, "rep_gram_stats", "window width n")
-        RepGramStats(exprs.head, n)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "chunk_md5_ids64", exprs => ChunkMd5Ids64(exprs.head,
-        constWidth(exprs, "chunk_md5_ids64")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy_stats", exprs => CharEntropyStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "eval_once", exprs => EvalOnce(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "span_mask_stats", exprs => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          "span_mask_stats requires exactly two arguments " +
-            s"(tokens, intervals), got ${exprs.length}")
-        SpanMaskStats(exprs.head, exprs(1))
-      }, "built-in")
+
+  // second argument REQUIRED for the profile/battery functions
+  // (round-14 review): constWidth's silent 4 default is
+  // span_md5_ids' window, semantically meaningless here (profiles
+  // use a rank depth K=150, the battery n=2..10) — an omitted
+  // argument must be a clear arity error, not a silently-wrong
+  // 4-wide computation. `paramName` keeps the diagnostic honest per
+  // function (K is a rank DEPTH, not a window width), and the arity
+  // check runs BEFORE any exprs.head access so a zero-argument call
+  // also gets the real message instead of head-of-empty-Seq.
+  private def reqSecond(exprs: Seq[Expression], fn: String, paramName: String): Int = {
+    if (exprs.length != 2) throw new IllegalArgumentException(
+      s"$fn requires exactly two arguments (input, constant $paramName), " +
+        s"got ${exprs.length}")
+    constWidth(exprs, fn)
+  }
+
+  val all: Seq[(String, FunctionBuilder)] = Seq(
+    "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
+    "poly_hash" -> (es => PolyTokenHash(es.head)),
+    "ngram_hashes" -> (es => NgramHashes(es.head)),
+    "minhash64" -> (es => MinHashFromHashes(es.head)),
+    "hyperplane_bits" -> (es => HyperplaneBits(es.head)),
+    "simhash64_fp" -> (es => SimHash64(es.head)),
+    "try_parse_int" -> (es => TryParseInt(es.head)),
+    "jaro_winkler" -> (es => JaroWinkler(es(0), es(1))),
+    "span_md5s" -> (es => SpanMd5s(es.head)),
+    "bigram_md5_buckets" -> (es => BigramMd5Buckets(es.head)),
+    "span_md5_ids" -> (es => SpanMd5Ids(es.head, constWidth(es, "span_md5_ids"))),
+    "rep_rle_stats" -> (es => RepRleStats(es.head)),
+    "trigram_rank_profile" -> { es =>
+      val k = reqSecond(es, "trigram_rank_profile", "rank depth k")
+      TrigramRankProfile(es.head, k)
+    },
+    "trigram_profile_size" -> { es =>
+      val k = reqSecond(es, "trigram_profile_size", "rank depth k")
+      TrigramProfileSize(es.head, k)
+    },
+    "rep_gram_stats" -> { es =>
+      val n = reqSecond(es, "rep_gram_stats", "window width n")
+      RepGramStats(es.head, n)
+    },
+    "chunk_md5_ids64" -> (es => ChunkMd5Ids64(es.head, constWidth(es, "chunk_md5_ids64"))),
+    "char_entropy_stats" -> (es => CharEntropyStats(es.head)),
+    "eval_once" -> (es => EvalOnce(es.head)),
+    "span_mask_stats" -> { es =>
+      if (es.length != 2) throw new IllegalArgumentException(
+        "span_mask_stats requires exactly two arguments " +
+          s"(tokens, intervals), got ${es.length}")
+      SpanMaskStats(es.head, es(1))
+    },
     // Spark ships BloomFilterAggregate / BloomFilterMightContain for its
     // internal runtime-filter rewrite but does not register them as SQL
     // functions; surface them for the bloom-accelerated dedup pipeline
     // (the same pair InjectRuntimeFilter plants — q_join_bloom pins that).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
-  }
+    "bloom_filter_agg" -> (es =>
+      new BloomFilterAggregate(es(0), es(1), es(2)).toAggregateExpression()),
+    "bloom_might_contain" -> (es => BloomFilterMightContain(es(0), es(1))))
+
+  /** Installs [[all]] in `spark`'s function registry. Idempotent —
+    * query builders call it on entry. */
+  def register(spark: SparkSession): Unit =
+    all.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
 }

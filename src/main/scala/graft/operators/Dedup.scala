@@ -234,7 +234,7 @@ object Dedup {
     semanticSeedsK(e, semanticK(e.count()))
 
   /** [[semanticSeeds]] at an explicit seed count — the diagnostic knob
-    * behind the recall-vs-k curve (graft.SemKScale / SCALE.md): the
+    * behind the recall-vs-k curve (SCALE.md, SemDeDup probe-cost ladder): the
     * production operating point stays [[semanticK]]'s n/128, chosen
     * from that measured curve.
     */
@@ -260,69 +260,10 @@ object Dedup {
         (-col("best.neg_seed")).as("cluster_id"),
         col("best.ccos").as("centroid_cos"))
 
-  /** BANDED nearest-seed assignment — a candidate mitigation for the
-    * family's one measured superlinear edge (SCALE.md round-11 64×
-    * table): exact [[assignToSeeds]] is a batch × k cross join and
-    * k = n/128 grows with the corpus, so assignment work is ~n²/128.
-    * Here both seeds and vectors get the 64-bit hyperplane code; a
-    * vector scores ONLY the seeds colliding with it on ≥ 1 band, and
-    * vectors whose bands catch no seed fall back to the exact
-    * broadcast pass.
-    *
-    * MEASURED AND REJECTED in favor of [[assignToSeedsIvf]] (SCALE.md
-    * round-11): at 64× (n=128k, k=1000) this is only 1.6× faster than
-    * exact with 0.50 agreement, and at bench scale it costs the most
-    * recall of the three (0.185 vs exact 0.211, IVF 0.198) — organic
-    * nearest-seed cosines are weak (~0.4), so ~20 of 64 bits differ
-    * and the true nearest seed rarely collides on any band. Kept as
-    * the recorded negative result the IVF variant is judged against.
-    *
-    * Caching contract (both assigners): the coded seed/vector frames
-    * persist for the lifetime of the returned lazy frame (the result
-    * reads them); callers release via `spark.catalog.clearCache()` when
-    * done — the harness convention for queries, made explicit here for
-    * library callers (SemIdxScale and the DedupSpec law do so).
-    */
-  def assignToSeedsIndexed(e: DataFrame, seeds: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
-    val se = seeds
-      .withColumn("code", call_function("hyperplane_bits", col("s_emb")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val bits = Lsh.bandBits(se.count())
-    val sb = Lsh.explodeBands(se.select(col("seed_id"), col("code")), "code", bits)
-      .select(col("seed_id"), col("band"), col("bv"))
-    val ve = e
-      .withColumn("code", call_function("hyperplane_bits", col("embedding")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vb = Lsh.explodeBands(ve.select(col("vec_id"), col("code")), "code", bits)
-      .select(col("vec_id"), col("band"), col("bv"))
-    // candidate (vec, seed) pairs: collide on >= 1 band; ids only, then
-    // embeddings join back once per DISTINCT pair (the band-join discipline)
-    val cand = vb.join(broadcast(sb), Seq("band", "bv"))
-      .select("vec_id", "seed_id").distinct()
-      .join(ve.select("vec_id", "embedding"), "vec_id")
-      .join(broadcast(se.select(col("seed_id"), col("s_emb"))), "seed_id")
-    val assigned = cand
-      .select(col("vec_id"), col("embedding"), col("seed_id"),
-        call_function("cosine_sim", col("embedding"), col("s_emb")).as("ccos"))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("ccos"), (-col("seed_id")).as("neg_seed")),
-          struct(col("ccos"), -col("seed_id"))).as("best"),
-        first(col("embedding")).as("embedding"))
-      .select(col("vec_id"), col("embedding"),
-        (-col("best.neg_seed")).as("cluster_id"),
-        col("best.ccos").as("centroid_cos"))
-    // exact fallback for band-orphans (no seed collided): anti-join is
-    // corpus-grain but the fallback cross join runs on the orphans only
-    val orphans = ve.select("vec_id", "embedding")
-      .join(assigned.select("vec_id"), Seq("vec_id"), "left_anti")
-    assigned.unionByName(
-      assignToSeeds(orphans, se.select(col("seed_id"), col("s_emb"))))
-  }
-
   /** IVF two-level nearest-seed assignment — the MEASURED mitigation
-    * for the superlinear-assignment edge (the banded variant above was
-    * measured and found insufficient — see its scaladoc). Self-similar
+    * for the superlinear-assignment edge (a banded hyperplane-code
+    * variant was measured and rejected: 1.6× faster than exact at 64×
+    * with 0.50 agreement — SCALE.md round-11). Self-similar
     * design: the seed table gets its own coarse layer (an md5-subsample
     * of ~√k seeds, the family's sampling idiom), every seed is exactly
     * assigned to its nearest coarse cell (k × √k — index build), and a
@@ -332,7 +273,7 @@ object Dedup {
     * may live outside the probed coarse cells — the same
     * boundary-straddle SemDeDup itself accepts, now in seed space with
     * a 2-probe. Measured agreement/recall/wall-time in SCALE.md
-    * (graft.SemIdxScale). Production wiring: the oracled
+    * (round-11, sub-quadratic seed assignment). Production wiring: the oracled
     * q_dedup_semantic and the streaming door use the ADAPTIVE wrappers
     * below — exact (bit-identical to every oracle) while
     * k <= [[ExactAssignMaxSeeds]], this path beyond.
@@ -343,8 +284,8 @@ object Dedup {
     // persisted: `assigned` feeds BOTH the orphan anti-join and the final
     // union — without it the whole candidate stage (coarse cross join +
     // window + groupBy, including the k × √k index build) re-runs 2-3×
-    // per call. Released under the same clearCache contract as the seed
-    // and code frames (assignToSeedsIndexed scaladoc).
+    // per call. Like the seed frame it persists for the lifetime of the
+    // returned lazy frame; callers release both via clearCache().
     val assigned = ivfCandidates(e, sdf, probes, index)
       .groupBy("vec_id")
       .agg(max_by(struct(col("ccos"), (-col("seed_id")).as("neg_seed")),
@@ -496,7 +437,7 @@ object Dedup {
   }
 
   /** Occupancy-CAPPED IVF assignment — the measured mitigation for the
-    * flip's one surprise (SCALE.md round-12, graft.SemFlipScale): coarse-
+    * flip's one surprise (SCALE.md round-12, the adaptive IVF flip): coarse-
     * cell geometry concentrates IVF assignments into fewer, larger
     * clusters, and the downstream SemDeDup prune pays sum(cluster²) for
     * it (67.7 s vs the exact arm's 12.8 s at n=256k, k=2000). Capping a
@@ -667,7 +608,7 @@ object Dedup {
   /** The SemDeDup WITHIN-cluster prune over an assigned frame
     * (vec_id, embedding, cluster_id, centroid_cos) — q_dedup_semantic's
     * second stage, factored so the k > ExactAssignMaxSeeds flip can be
-    * driven end-to-end at scale (graft.SemFlipScale): mark for removal
+    * driven end-to-end at scale (SCALE.md round-12): mark for removal
     * any member with a same-cluster neighbor at cosine >= tau that the
     * keep-rule prefers (LOWER centroid similarity keeps; ties to the
     * smaller vec_id). Cost is sum(cluster_size²), bounded because k
@@ -1078,14 +1019,14 @@ object Dedup {
     // measured ×1/×2/×3 probe-cost ladder recorded in SCALE.md. A
     // margin-ADAPTIVE 2-probe was measured and REJECTED (see
     // assignToSeedsTop3's scaladoc): the ladder is the honest knob.
-    // The cluster count k was ALSO measured (graft.SemKScale, SCALE.md
-    // round-11): recall falls monotonically as k rises (0.457 at the
+    // The cluster count k was ALSO measured (SCALE.md round-11,
+    // SemDeDup probe-cost ladder): recall falls monotonically as k rises (0.457 at the
     // production n/128 vs 0.345 at n/64 vs 0.298 at n/32, 2-probe at
     // sf0.1), so n/128 stays the operating point — more probes, not
     // more clusters, is how recall is bought at linear cost. Beyond the
     // ladder, the measured union lever (2-probe ∪ hyperplane-band
     // collisions: 0.457 → 0.552 at sf0.1 for one banded self-join —
-    // SemKScale, SCALE.md) is the next knob; the door keeps the
+    // SCALE.md round-11) is the next knob; the door keeps the
     // oracled 2-probe (assignment itself is ADAPTIVE — exact below
     // k=1024, IVF beyond — result-identical at every oracle scale). The
     // brute-force arm is a BENCH-SCALE DIAGNOSTIC (quadratic by
@@ -1140,7 +1081,7 @@ object Dedup {
     // contract, and DedupSpec pins union ⊇ 2-probe plus the planted-
     // copy structural floor. Measured at sf0.1: 0.457 → 0.552 for one
     // banded self-join, families complementary (overlap ~0.09) —
-    // SemKScale, SCALE.md round-11.
+    // SCALE.md round-11.
     "q_dedup_semantic_recall_union" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
@@ -1222,7 +1163,7 @@ object Dedup {
   }
 
   /** q_containment's body over any (doc_id, grams) frame — factored so
-    * the dedup-first mitigation can be MEASURED (graft.ContainScale):
+    * the dedup-first mitigation can be MEASURED (SCALE.md, 64× growth rows):
     * run the same one-sided PPJoin over the near-dup cluster CANONICALS
     * instead of the raw corpus. Probe side is the doc_id%3 slice; sound
     * one-sided prefix filter (o = ceil(t·|A|)); exact verify on

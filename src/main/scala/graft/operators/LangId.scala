@@ -54,9 +54,9 @@ object LangId {
     * shows the algebra is depth-independent). */
   val K = 150
 
-  // private[graft]: LangDoorScale's stage decomposition must measure
-  // the EXACT normalization the door runs, not an inline copy that
-  // could drift (round-15 review)
+  // private[graft]: the lang door's stage decomposition (SCALE.md
+  // round-15) measured the EXACT normalization the door runs, not an
+  // inline copy that could drift (round-15 review)
   private[graft] def normTextCol(c: Column): Column =
     trim(regexp_replace(lower(c), "\\s+", " "))
 

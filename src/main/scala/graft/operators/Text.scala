@@ -1200,13 +1200,6 @@ object Text {
     * (the training is minutes, and deterministic) or switch to reliable
     * `checkpoint()` with a configured checkpoint dir.
     */
-  /** Per-round training telemetry for scale tools: (round, merges
-    * selected, seconds, pool rows collected, approx pool bytes — UTF-16
-    * symbol chars + the 8-byte count per row).
-    */
-  type BpeRoundHook = (Int, Int, Double, Int, Long) => Unit
-  val BpeNoHook: BpeRoundHook = (_, _, _, _, _) => ()
-
   /** likelihoodScore = false ranks candidate pairs by raw weighted count
     * (Sennrich BPE); true ranks by count(a,b) / (count(a) · count(b)) —
     * the WordPiece selection rule (Schuster & Nakajima 2012; the score
@@ -1219,8 +1212,6 @@ object Text {
     */
   def bpeTrainVocab(wordFreq: DataFrame, rounds: Int,
       mergesPerRound: Int = 1,
-      roundHook: BpeRoundHook = BpeNoHook,
-      poolFactor: Int = 16,
       reliableCheckpoint: Boolean = false,
       likelihoodScore: Boolean = false)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
@@ -1232,21 +1223,18 @@ object Text {
     require(mergesPerRound >= 1 && mergesPerRound <= 64,
       s"mergesPerRound $mergesPerRound: the batch is applied as ONE fold " +
         "whose when-chain grows with k — keep it codegen-sized (<= 64)")
-    require(poolFactor >= 1 && poolFactor * mergesPerRound <= 4096,
-      s"poolFactor $poolFactor: pool = poolFactor × k rows collect to the " +
-        "driver each round — keep it <= 4096 rows")
-    // driver-memory bound of the per-round collect: poolFactor (default
-    // 16) × mergesPerRound (a, b, cnt) rows — two short strings + a long
+    // driver-memory bound of the per-round collect: 16 ×
+    // mergesPerRound (a, b, cnt) rows — two short strings + a long
     // each, tens of KB per round whatever the corpus. Pool-width
-    // sensitivity MEASURED at k=64/16 rounds (SCALE.md round-12,
-    // graft.BpePoolScale): 4×k starves selection (8.3 merges/round —
+    // sensitivity MEASURED at k=64/16 rounds (SCALE.md round-12, BPE
+    // pool-width sensitivity): 4×k starves selection (8.3 merges/round —
     // hub symbols crowd the top of the ranking), 16×k reaches ~17,
     // 64×k ~30 merges/round at LOWER wall/round (0.55 vs 0.60 s — more
     // merges amortize the fixed per-round agg) and still-trivial driver
-    // traffic (~51 KiB/round). 16×k stays the default as the
-    // fidelity-leaning point (deeper pools admit merges from further
-    // down the ranking than sequential BPE would reach this early);
-    // throughput-bound trainings should pass poolFactor = 64.
+    // traffic (~51 KiB/round). 16×k is the fidelity-leaning point
+    // (deeper pools admit merges from further down the ranking than
+    // sequential BPE would reach this early).
+    val poolRows = 16 * mergesPerRound
     var vocab = wordFreq
       // Spark split('') keeps a trailing empty string (Java limit -1);
       // DuckDB's does not — drop empties so both engines see bare chars
@@ -1264,7 +1252,6 @@ object Text {
       var rnd = 1
       var exhausted = false
       while (rnd <= rounds && !exhausted) {
-        val tRound = System.nanoTime()
         // candidate pool: 16×k slack — disjoint survivors are scarcer
         // than 4×k assumed (hub symbols dominate the top of the ranking:
         // measured ~8-14 disjoint out of 256 candidates on the
@@ -1298,7 +1285,7 @@ object Text {
           }
         val pool = ranked
           .select("a", "b", "cnt")
-          .limit(poolFactor * mergesPerRound)
+          .limit(poolRows)
           .collect()
         if (pool.isEmpty) exhausted = true
         else {
@@ -1350,10 +1337,6 @@ object Text {
           selected.foreach { case (a, b, cnt) =>
             merges += ((rnd, a, b, a + b, cnt))
           }
-          val poolBytes = pool.iterator.map(r =>
-            (r.getString(0).length + r.getString(1).length) * 2L + 8L).sum
-          roundHook(rnd, selected.size, (System.nanoTime() - tRound) / 1e9,
-            pool.length, poolBytes)
           rnd += 1
         }
       }
@@ -1374,18 +1357,16 @@ object Text {
     */
   trait Tokenizer {
     def name: String
-    def trainVocab(wordFreq: DataFrame, rounds: Int,
-        mergesPerRound: Int = 1, roundHook: BpeRoundHook = BpeNoHook)
+    def trainVocab(wordFreq: DataFrame, rounds: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame)
   }
 
   /** Sennrich et al. 2016 count-ranked merges — the default instance. */
   object BpeTokenizer extends Tokenizer {
     val name = "bpe"
-    def trainVocab(wordFreq: DataFrame, rounds: Int,
-        mergesPerRound: Int = 1, roundHook: BpeRoundHook = BpeNoHook)
+    def trainVocab(wordFreq: DataFrame, rounds: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) =
-      Text.bpeTrainVocab(wordFreq, rounds, mergesPerRound, roundHook)
+      Text.bpeTrainVocab(wordFreq, rounds)
   }
 
   /** WordPiece-scored merges (Schuster & Nakajima 2012): same merge
@@ -1396,11 +1377,9 @@ object Text {
     */
   object WordPieceTokenizer extends Tokenizer {
     val name = "wordpiece"
-    def trainVocab(wordFreq: DataFrame, rounds: Int,
-        mergesPerRound: Int = 1, roundHook: BpeRoundHook = BpeNoHook)
+    def trainVocab(wordFreq: DataFrame, rounds: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) =
-      Text.bpeTrainVocab(wordFreq, rounds, mergesPerRound, roundHook,
-        likelihoodScore = true)
+      Text.bpeTrainVocab(wordFreq, rounds, likelihoodScore = true)
   }
 
   /** One-time trained-TOKENIZER store (the gram/LM/DSIR-store
@@ -1438,32 +1417,6 @@ object Text {
       .filter(length(col("word")) >= 2)
       .groupBy("word").agg(count(lit(1)).as("f"))
 
-  /** The word table behind the FOUR-DIGIT-merge demonstration: the
-    * documents fixture deliberately has a ~31-word vocabulary (its BPE
-    * merge tree EXHAUSTS at 90 merges — measured, SCALE.md round-11),
-    * so sustained four-digit training uses the customer-name table
-    * instead: ~15k distinct structured words at sf0.1 over a 19-char
-    * alphabet, whose digit-suffix diversity sustains thousands of
-    * merges. Same trainer, same laws — only the corpus differs.
-    */
-  def bpeK64WordFreq(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "customer")
-      .select(lower(col("c_name")).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("f"))
-
-  /** FOUR-DIGIT-scale batched training artifact (tag bpe_k64_v2 — the
-    * 5-merge oracled bpe_v1 store is untouched): >= 1000 merges at
-    * k = 64 over [[bpeK64WordFreq]], built ONCE by the
-    * [[graft.BpeScale]] tool (which records the per-round wall-time
-    * table in SCALE.md). Up to 64 rounds × up to 64 disjoint merges;
-    * the per-round driver traffic stays the ≤ 256-row candidate
-    * collect whatever the corpus size.
-    */
-  def ensureBpeK64Store(s: SparkSession, dir: String,
-      roundHook: BpeRoundHook = BpeNoHook): String =
-    ensureBpeStoreOf(s, dir, "bpe_k64_v2", bpeK64WordFreq(s, dir),
-      rounds = 64, mergesPerRound = 64, roundHook = roundHook)
-
   /** The CLEANED-corpus WordPiece store — the second [[Tokenizer]]
     * instance trained on the SAME survivor word table as
     * [[ensureCleanBpeStore]] (tag `wp_clean_v1`), so the
@@ -1474,13 +1427,10 @@ object Text {
       tok = WordPieceTokenizer)
 
   private def ensureBpeStoreOf(s: SparkSession, dir: String, tag: String,
-      wordFreq: => DataFrame, rounds: Int = 5, mergesPerRound: Int = 1,
-      roundHook: BpeRoundHook = BpeNoHook,
-      tok: Tokenizer = BpeTokenizer): String =
+      wordFreq: => DataFrame, tok: Tokenizer = BpeTokenizer): String =
     Sources.ensureStore(dir, tag) { tmp =>
       import s.implicits._
-      val (merges, vocab) =
-        tok.trainVocab(wordFreq, rounds, mergesPerRound, roundHook)
+      val (merges, vocab) = tok.trainVocab(wordFreq, rounds = 5)
       try {
         merges.toDF("rnd", "left_sym", "right_sym", "merged", "cnt")
           .coalesce(1)

@@ -196,34 +196,42 @@ object Streaming {
     * verdict task 7 — sweep-cost control): each door pays a fixed
     * ~per-micro-batch engine overhead, so 16 doors × 4 batches was ~60 s
     * of the 260 s full bench sweep, growing with every new door. Bench
-    * sets `graft.door.batches=2` for its TIMING sweep; Verify and the
-    * specs never set it, so every correctness gate still drives the full
-    * 4-micro-batch ingest. Only doors whose output is documented
-    * batch-split-INVARIANT (per-row/per-doc verdicts against a frozen
-    * base) read this knob — the growing doors and sequential folds keep
-    * their deterministic 4-group arrival order, and the event-time doors
-    * (upsert/topk/sample) keep 4 so their watermark/merge cadence stays
-    * the measured configuration.
+    * sets the session conf `spark.graft.door.batches=2` for its TIMING
+    * sweep; Verify and the specs never set it, so every correctness gate
+    * still drives the full 4-micro-batch ingest. The conf is session
+    * scoped, so a timing session cannot leak the 2-batch mode into any
+    * other session in the same JVM. Only doors whose output is
+    * documented batch-split-INVARIANT (per-row/per-doc verdicts against
+    * a frozen base) read this knob — the growing doors and sequential
+    * folds keep their deterministic 4-group arrival order, and the
+    * event-time doors (upsert/topk/sample) keep 4 so their
+    * watermark/merge cadence stays the measured configuration.
     */
-  private def doorSplit: Int =
-    Integer.parseInt(System.getProperty("graft.door.batches", "4"))
+  private[graft] def doorSplit(s: SparkSession): Int =
+    s.conf.get(DoorBatchesConf, "4").toInt
+
+  /** Session conf key of [[doorSplit]]. */
+  val DoorBatchesConf = "spark.graft.door.batches"
+
+  /** Arrival-file size at or above which a door spreads its batches. */
+  private val SpreadMinBytes = 1L << 20
 
   /** Scale-ADAPTIVE batch-parallelism spread (round-15 optimization;
     * guide §2 — partitioning must derive from input size, not a
     * constant tuned for one scale). One micro-batch = one arrival file
     * = 1-2 scan tasks, so a CPU-bound per-row door body (regex
     * battery, gram pass, trigram profile) runs single-task unless the
-    * batch is spread across the box — the LangDoorScale finding that
-    * cut the 64× lang door 105.5 → 15.5 s. But the spread is a
-    * round-robin shuffle of the whole batch (plus the
+    * batch is spread across the box — the lang-door finding that cut
+    * the 64× lang door 105.5 → 15.5 s (SCALE.md round-15). But the
+    * spread is a round-robin shuffle of the whole batch (plus the
     * sortBeforeRepartition local sort), a fixed ~0.5-1 s per batch at
     * ingest grain: on a sub-MB sf0.1 micro-batch it costs MORE than
     * single-task compute saves (measured on the containment door:
     * warm 2-batch run 9.1 s spread vs 5.6 s unspread — per-batch
     * 2.2 s vs 1.5 s). So spread ONLY when the arrival files carry
-    * enough bytes that 32-way CPU wins: threshold default 1 MiB
-    * (`graft.spread.minBytes`), far below the 16×/64× SCALE batches
-    * (2-40 MB — those keep the spread and their receipts) and above
+    * enough bytes that 32-way CPU wins: [[SpreadMinBytes]] = 1 MiB, far
+    * below the 16×/64× SCALE batches (2-40 MB — those keep the spread
+    * and their receipts) and above
     * every sf0.001-0.1 door batch. Result-invariant by construction:
     * repartition changes layout, never rows, and every door output is
     * an unordered set (StreamingSpec's split-invariance laws hold
@@ -238,14 +246,11 @@ object Streaming {
     * the files near-uniform, so "largest data file ≥ threshold" is the
     * per-batch decision. */
   private[graft] def spreadArrivals(s: SparkSession, src: String): Boolean = {
-    val minBytes =
-      java.lang.Long.parseLong(System.getProperty("graft.spread.minBytes",
-        (1L << 20).toString))
     val p = new org.apache.hadoop.fs.Path(src)
     // fail OPEN on a listing error (round-15 ADVICE): spreading is
     // result-invariant and costs ~1 s/batch when wrong, while silently
     // NOT spreading an at-scale door regresses it ~7× (the 105.5 s vs
-    // 15.5 s LangDoorScale case) — and log the error unconditionally so
+    // 15.5 s lang-door case) — and log the error unconditionally so
     // a transient FS failure at door setup is never invisible.
     val sizes =
       try Some(p.getFileSystem(s.sessionState.newHadoopConf()).listStatus(p)
@@ -260,13 +265,7 @@ object Streaming {
               s"${e.getMessage}) — failing open, spread=true")
           None
       }
-    val doSpread = sizes.forall(sz => sz.nonEmpty && sz.max >= minBytes)
-    if (sys.env.contains("GRAFT_SPREAD_DEBUG"))
-      System.err.println(s"[spreadArrivals] src=$src " +
-        s"files=${sizes.map(_.length).getOrElse(-1)} " +
-        s"max=${sizes.map(sz => if (sz.isEmpty) 0L else sz.max).getOrElse(-1L)} " +
-        s"spread=$doSpread")
-    doSpread
+    sizes.forall(sz => sz.nonEmpty && sz.max >= SpreadMinBytes)
   }
 
   /** Driver-side parquet row count from file footers — metadata work,
@@ -660,7 +659,7 @@ object Streaming {
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text")
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
       val q = stream.writeStream
@@ -735,7 +734,7 @@ object Streaming {
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text")
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
       val q = stream.writeStream
@@ -893,7 +892,7 @@ object Streaming {
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") % 53 =!= 0)
         .select("doc_id", "text")
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val doSpread = spreadArrivals(s, src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -952,7 +951,7 @@ object Streaming {
         .createTempDirectory("graft_mediastream").toString
       val src = s"$root/src"
       M.mediaArrivals(s, dir)
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
       val q = stream.writeStream
@@ -1015,7 +1014,7 @@ object Streaming {
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text")
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val doSpread = spreadArrivals(s, src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -1047,7 +1046,7 @@ object Streaming {
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text")
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val doSpread = spreadArrivals(s, src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -1097,7 +1096,7 @@ object Streaming {
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") % 2 === 1)
         .select("doc_id", "lang", "text")
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val doSpread = spreadArrivals(s, src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -1145,7 +1144,7 @@ object Streaming {
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text")
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val doSpread = spreadArrivals(s, src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -1201,7 +1200,7 @@ object Streaming {
     // The door's band-UNION mode, selectable (round-11 verdict task 3):
     // cluster-probe candidates OR-ed with hyperplane-band collisions
     // against a base band store built once beside the cluster store —
-    // the measured +0.095 recall lever (SemKScale, SCALE.md round-11;
+    // the measured +0.095 recall lever (SCALE.md round-11;
     // the two candidate families overlap only ~0.09). Band collisions
     // are HASH-specific, so this mode is rows-only by contract (the
     // oracled 2-probe row above stays the default); its laws: survivor
@@ -1269,7 +1268,7 @@ object Streaming {
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") % 3 === 0)
         .select("doc_id", "text")
-        .repartition(doorSplit).write.mode("overwrite").parquet(src)
+        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val doSpread = spreadArrivals(s, src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -1278,7 +1277,7 @@ object Streaming {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           releasingBatchCaches(s) {
             // adaptive spread before the CPU-bound gram pass (the
-            // LangDoorScale finding, size-gated — see spreadBatch)
+            // lang-door finding, size-gated — see spreadBatch)
             D.containmentProbeStoredOrder(D.batchGrams(spreadBatch(batch, doSpread)),
                 sets, postings, cnt, broadcastProbe = true)
               .write.mode("overwrite").parquet(s"$root/found/batch_b$batchId")
@@ -1308,7 +1307,7 @@ object Streaming {
         .createTempDirectory("graft_piistream").toString
       val src = s"$root/src"
       val aug = T.piiAugmentedDocs(graft.Tables(s, dir, "documents"))
-      aug.repartition(doorSplit).write.mode("overwrite").parquet(src)
+      aug.repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
       val doSpread = spreadArrivals(s, src)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -1316,7 +1315,7 @@ object Streaming {
         .option("checkpointLocation", s"$root/ckpt")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // single-file batch → spread before the CPU-bound regex
-          // battery (the LangDoorScale finding)
+          // battery (the lang-door finding, SCALE.md round-15)
           T.piiScrubProfile(spreadBatch(batch, doSpread))
             .filter(T.piiFlagged) // generated from PiiPatterns — class
                                   // additions reach the door untouched
@@ -1467,7 +1466,7 @@ object Streaming {
       .createTempDirectory("graft_langstream").toString
     val src = s"$root/src"
     docs.select("doc_id", "text")
-      .repartition(doorSplit).write.mode("overwrite").parquet(src)
+      .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
     val doSpread = spreadArrivals(s, src)
     val stream = s.readStream.schema(s.read.parquet(src).schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
@@ -1476,7 +1475,7 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // one micro-batch = one arrival file = 1-2 scan tasks; the
         // native profile is CPU-bound O(bytes) per row, so without the
-        // spread the whole box idles behind one core (LangDoorScale:
+        // spread the whole box idles behind one core (SCALE.md round-15:
         // the profile stage alone ran 4.5× its static cost — THE lang
         // door premium; same fix as the repetition door)
         L.predictionsOf(L.classify(spreadBatch(batch, doSpread), prof))
@@ -1528,7 +1527,7 @@ object Streaming {
       .createTempDirectory("graft_langroute").toString
     val src = s"$root/src"
     val arrivals = docs.select("doc_id", "text")
-    arrivals.repartition(doorSplit).write.mode("overwrite").parquet(src)
+    arrivals.repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
     // schema from the frame, not the written dir: an EMPTY arrival set
     // writes no part files, and read.parquet on a part-less dir dies
     // with "Unable to infer schema" (the empty-partition guard law)
@@ -2035,7 +2034,7 @@ object Streaming {
             else baseFp.select("fp")
               .unionByName(s.read.parquet(earlier: _*))
           // single-file batch → spread before the CPU-bound battery
-          // (the LangDoorScale finding)
+          // (the lang-door finding, SCALE.md round-15)
           val kept = T.batteryKeptDocs(spreadBatch(batch, doSpread))
             .select("doc_id", "fp")
             .join(grow, Seq("fp"), "left_anti")
@@ -2249,8 +2248,8 @@ object Streaming {
         releasingBatchCaches(s) {
         // one micro-batch = one coalesced group file = one scan task;
         // the battery + encode are CPU-bound per-row work, so spread
-        // the batch across the box first (the lang-door LangDoorScale
-        // finding; same fix as the repetition/quality doors)
+        // the batch across the box first (the lang-door finding,
+        // SCALE.md round-15; same fix as the repetition/quality doors)
         val kept = T.batteryKeptDocs(spreadBatch(batch, doSpread))
           .join(baseFp, Seq("fp"), "left_anti") // exact-dedup vs the base
           .select("doc_id", "w")
@@ -2352,7 +2351,7 @@ object Streaming {
       .createTempDirectory("graft_semstream").toString
     val src = s"$root/src"
     e.filter(col("vec_id") % 2 === 1)
-      .repartition(doorSplit).write.mode("overwrite").parquet(src)
+      .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
     val stream = s.readStream.schema(s.read.parquet(src).schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
     val q = stream.writeStream

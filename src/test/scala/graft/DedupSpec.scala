@@ -915,8 +915,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("law: batched BPE holds prefix stability and per-round disjointness at k = 64") {
-    // the four-digit-scale schedule (BpeScale / bpe_k64_v2 store) runs
-    // at mergesPerRound = 64 — the same laws must hold at the wider k:
+    // the four-digit-scale schedule (SCALE.md, batched BPE at k = 64)
+    // ran at mergesPerRound = 64 — the same laws must hold at the wider k:
     // each round depends only on the rounds before it, and no two
     // merges of one round share a symbol. Thin rounds are expected
     // (the small-alphabet round 1 yields few disjoint pairs).

@@ -162,6 +162,22 @@ class SourcesSpec extends SparkSpec {
     val hp = s2.sql(
       "SELECT hyperplane_bits(embedding) AS code FROM emb LIMIT 5").collect()
     assert(hp.length === 5)
+    // the extension injects every function register installs: the names
+    // register adds to a fresh session equal the names the extension
+    // adds to an empty registry (registerFunctions is private[sql] in
+    // source, public in bytecode)
+    def names(r: org.apache.spark.sql.catalyst.analysis.FunctionRegistry) =
+      r.listFunction().map(_.funcName).toSet
+    val byRegister = names(s2.sessionState.functionRegistry) --
+      names(spark.newSession().sessionState.functionRegistry)
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val injected = ext.getClass
+      .getMethod("registerFunctions",
+        classOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
+      .invoke(ext, new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry)
+      .asInstanceOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry]
+    assert(byRegister.nonEmpty && names(injected) === byRegister)
   }
 
   test("ensureStore: a throwing build leaks no tmp dir, propagates, and retries clean") {

@@ -27,16 +27,24 @@ class StreamingSpec extends SparkSpec {
       .repartition(2).write.mode("overwrite").parquet(s"$root/src")
     // sub-MB sf0.001 files: below the default 1 MiB threshold
     assert(!Streaming.spreadArrivals(spark, s"$root/src"))
-    // with the threshold floored the same layout must spread
-    System.setProperty("graft.spread.minBytes", "1")
-    try assert(Streaming.spreadArrivals(spark, s"$root/src"))
-    finally System.clearProperty("graft.spread.minBytes")
+    // one arrival file of >= 1 MiB must spread: 50k sha2 hex digests
+    // (~3.2 MB) stay above the threshold whatever the codec does
+    spark.range(50000).select(sha2(col("id").cast("string"), 256).as("text"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/big")
+    assert(Streaming.spreadArrivals(spark, s"$root/big"))
     // and the spread itself is a pure layout change
     val df = spark.read.parquet(s"$root/src")
     val spreadDf = Streaming.spreadBatch(df, doSpread = true)
     assert(spreadDf.rdd.getNumPartitions ===
       spark.sparkContext.defaultParallelism)
     assert(spreadDf.exceptAll(df).isEmpty && df.exceptAll(spreadDf).isEmpty)
+  }
+
+  test("door split is session-scoped: a forked session set to 2 leaves its parent at 4") {
+    val fork = spark.newSession()
+    fork.conf.set(Streaming.DoorBatchesConf, "2")
+    assert(Streaming.doorSplit(fork) === 2)
+    assert(Streaming.doorSplit(spark) === 4)
   }
 
   test("batch sessionize (shared fold) matches the SQL-oracled window query") {
