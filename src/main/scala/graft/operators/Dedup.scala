@@ -1162,14 +1162,6 @@ object Dedup {
     prefixSimilarityJoinOnGrams(g, threshold)
   }
 
-  /** q_containment's body over any (doc_id, grams) frame — factored so
-    * the dedup-first mitigation can be MEASURED (SCALE.md, 64× growth rows):
-    * run the same one-sided PPJoin over the near-dup cluster CANONICALS
-    * instead of the raw corpus. Probe side is the doc_id%3 slice; sound
-    * one-sided prefix filter (o = ceil(t·|A|)); exact verify on
-    * candidates only. See the q_containment query comment for the
-    * completeness argument.
-    */
   /** Shared exact-verify + emission stage of BOTH containment joins
     * (the raw self-corpus form and the probe/index form): candidates
     * re-join their rarity-ordered gram sets, the one-sided size filter
@@ -1192,6 +1184,14 @@ object Dedup {
         col("doc_id_b").as("container"),
         col("n_a").as("n_grams"), col("inter_cnt"), col("containment"))
 
+  /** q_containment's body over any (doc_id, grams) frame — factored so
+    * the dedup-first mitigation can be MEASURED (SCALE.md, 64× growth rows):
+    * run the same one-sided PPJoin over the near-dup cluster CANONICALS
+    * instead of the raw corpus. Probe side is the doc_id%3 slice; sound
+    * one-sided prefix filter (o = ceil(t·|A|)); exact verify on
+    * candidates only. See the q_containment query comment for the
+    * completeness argument.
+    */
   def containmentJoinOnGrams(g: DataFrame, t: Double = 0.8): DataFrame = {
     // persisted: feeds the doc-frequency counts and the rarity-ordered
     // sets (one store explode, not two); the candidate index below

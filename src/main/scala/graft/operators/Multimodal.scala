@@ -308,31 +308,31 @@ object Multimodal {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       bandBits)
 
-  /** Ingest-time exact-dup media filter for ONE batch of (doc_id,
-    * payload) against the once-built base [[MediaIndex]]: decode the
-    * batch (the only decode at the door — the base is touched purely
-    * through its compact signature store), hyperplane-code, band-join
-    * BLOCKED on (nbytes, width, height) (the q_dedup_media convention),
-    * verify on full signature equality, anti-join verified dups away,
-    * and hand the survivor signatures to `use`. Loan pattern: the batch
-    * decode is persisted for the band + verify sides and released
-    * afterwards (withNearDupSurvivors' contract).
-    */
+  /** Loan form of [[mediaSurvivors]] for ONE batch of (doc_id, payload):
+    * decodes the batch (the only decode at the door — the base is
+    * touched purely through its compact signature store), hands the
+    * survivors to `use`, then releases the decode. */
   def withMediaSurvivors[T](batch: DataFrame, index: MediaIndex)(
       use: DataFrame => T): T = {
     val bsig = decodedSig(batch).persist()
-    try {
-      val cand = index.bands
-        .join(mediaBandsOf(bsig, "b", index.bandBits), mediaBlockKeys)
-        .select("doc_id_a", "doc_id_b").distinct()
-      val dupIds = cand
-        .join(index.sigs, "doc_id_a")
-        .join(bsig.select(col("doc_id").as("doc_id_b"),
-          mediaSigStruct.as("sig_b")), "doc_id_b")
-        .filter(col("sig_a") === col("sig_b"))
-        .select(col("doc_id_b").as("doc_id")).distinct()
-      use(bsig.join(dupIds, Seq("doc_id"), "left_anti"))
-    } finally { bsig.unpersist(); () }
+    try use(mediaSurvivors(bsig, index)) finally { bsig.unpersist(); () }
+  }
+
+  /** Ingest-time exact-dup media filter: the survivors of a decoded
+    * batch `bsig` (persisted by the caller — the band and verify sides
+    * both read it) against the base [[MediaIndex]]: band-join BLOCKED on
+    * (nbytes, width, height) (the q_dedup_media convention), verify on
+    * full signature equality, anti-join verified dups away. */
+  def mediaSurvivors(bsig: DataFrame, index: MediaIndex): DataFrame = {
+    val dupIds = index.bands
+      .join(mediaBandsOf(bsig, "b", index.bandBits), mediaBlockKeys)
+      .select("doc_id_a", "doc_id_b").distinct()
+      .join(index.sigs, "doc_id_a")
+      .join(bsig.select(col("doc_id").as("doc_id_b"),
+        mediaSigStruct.as("sig_b")), "doc_id_b")
+      .filter(col("sig_a") === col("sig_b"))
+      .select(col("doc_id_b").as("doc_id")).distinct()
+    bsig.join(dupIds, Seq("doc_id"), "left_anti")
   }
 
   /** The ingest door's arrival fixture — ONE definition shared by

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming extension layer (SURVEY.md §2.2 "Streaming"):
   * absent from the reference (batch-only FSM, mincemeat.py:294-297), so
@@ -151,26 +152,6 @@ object Streaming {
       .toDF()
   }
 
-  /** Gap-based sessionization (30 min) with explicit state — the streaming
-    * twin of q_sessionize. State per user: (#closed sessions, current
-    * session (start, end, count)). ProcessingTimeTimeout flushes the open
-    * session when the group goes quiet.
-    *
-    * Within one invocation events are sorted by (sec, event_id) — same
-    * total order as the batch window — so on a replayed bounded source the
-    * emitted sessions match the batch query exactly.
-    */
-  /** Driver-visible queries: the streaming layer's green CORRECTNESS rows.
-    * q_stream_sessionize replays the EXACT fold the stateful
-    * flatMapGroupsWithState path runs (foldSessions) in batch; StreamingSpec
-    * pins the streaming execution to this fold, and the DuckDB oracle (same
-    * SQL as q_sessionize) pins the fold. q_stream_tumbling goes further:
-    * it executes the real Structured Streaming engine (file source ->
-    * watermark -> windowed agg -> memory sink, complete mode so the sink
-    * holds the final aggregation regardless of micro-batching) and returns
-    * the sink table — the driver's oracle checks the streaming engine
-    * end-to-end.
-    */
   /** Runs a streaming frame into a uniquely-named memory sink until the
     * bounded source drains, then returns the sink table. One definition
     * of the lifecycle the engine queries share (start → drain → stop →
@@ -190,6 +171,34 @@ object Streaming {
       try q.processAllAvailable() finally q.stop()
       s.table(sink)
     } finally s.catalog.dropTempView(sink)
+  }
+
+  /** The stream-stream interval join of the two engine join queries:
+    * signups joined (`joinType`) to purchases by the same user within
+    * the following hour, both sides second-truncated BEFORE their
+    * 2-hour watermark. Stream-stream joins keep one state store per
+    * shuffle partition per side, so the partition count tracks
+    * join-key cardinality (150 users here), not the batch corpus
+    * default — on a forked session so the setting doesn't leak.
+    */
+  private def signupPurchases(s: SparkSession, dir: String,
+      joinType: String): DataFrame = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    def side(tag: String, typ: String) = eventsStream(s2, dir)
+      .filter(col("event_type") === typ)
+      .select(col("user_id").as(s"${tag}_user"),
+        col("event_id").as(s"${tag}_id"),
+        date_trunc("second", col("ts")).as(s"${tag}_ts"))
+      .withWatermark(s"${tag}_ts", "2 hours")
+    side("s", "signup").join(side("p", "purchase"),
+        col("s_user") === col("p_user") &&
+          col("p_ts") >= col("s_ts") &&
+          col("p_ts") <= col("s_ts") + expr("INTERVAL 1 HOUR"),
+        joinType)
+      .select(col("s_user").as("user_id"),
+        col("s_id").as("signup_id"), col("p_id").as("purchase_id"),
+        (unix_timestamp(col("p_ts")) - unix_timestamp(col("s_ts"))).as("delay_s"))
   }
 
   /** Micro-batch count for the SPLIT-INVARIANT document doors (round-13
@@ -216,27 +225,6 @@ object Streaming {
   /** Arrival-file size at or above which a door spreads its batches. */
   private val SpreadMinBytes = 1L << 20
 
-  /** Scale-ADAPTIVE batch-parallelism spread (round-15 optimization;
-    * guide §2 — partitioning must derive from input size, not a
-    * constant tuned for one scale). One micro-batch = one arrival file
-    * = 1-2 scan tasks, so a CPU-bound per-row door body (regex
-    * battery, gram pass, trigram profile) runs single-task unless the
-    * batch is spread across the box — the lang-door finding that cut
-    * the 64× lang door 105.5 → 15.5 s (SCALE.md round-15). But the
-    * spread is a round-robin shuffle of the whole batch (plus the
-    * sortBeforeRepartition local sort), a fixed ~0.5-1 s per batch at
-    * ingest grain: on a sub-MB sf0.1 micro-batch it costs MORE than
-    * single-task compute saves (measured on the containment door:
-    * warm 2-batch run 9.1 s spread vs 5.6 s unspread — per-batch
-    * 2.2 s vs 1.5 s). So spread ONLY when the arrival files carry
-    * enough bytes that 32-way CPU wins: [[SpreadMinBytes]] = 1 MiB, far
-    * below the 16×/64× SCALE batches (2-40 MB — those keep the spread
-    * and their receipts) and above
-    * every sf0.001-0.1 door batch. Result-invariant by construction:
-    * repartition changes layout, never rows, and every door output is
-    * an unordered set (StreamingSpec's split-invariance laws hold
-    * under any partitioning).
-    */
   /** Decision half of the adaptive spread, computed ONCE at door setup
     * from the door's OWN arrival directory (the files it just wrote and
     * is about to stream): a foreachBatch frame is an RDDScanExec — it
@@ -291,11 +279,277 @@ object Streaming {
     }.sum
   }
 
+  /** Scale-ADAPTIVE batch-parallelism spread (round-15 optimization;
+    * guide §2 — partitioning must derive from input size, not a
+    * constant tuned for one scale). One micro-batch = one arrival file
+    * = 1-2 scan tasks, so a CPU-bound per-row door body (regex
+    * battery, gram pass, trigram profile) runs single-task unless the
+    * batch is spread across the box — the lang-door finding that cut
+    * the 64× lang door 105.5 → 15.5 s (SCALE.md round-15). But the
+    * spread is a round-robin shuffle of the whole batch (plus the
+    * sortBeforeRepartition local sort), a fixed ~0.5-1 s per batch at
+    * ingest grain: on a sub-MB sf0.1 micro-batch it costs MORE than
+    * single-task compute saves (measured on the containment door:
+    * warm 2-batch run 9.1 s spread vs 5.6 s unspread — per-batch
+    * 2.2 s vs 1.5 s). So spread ONLY when the arrival files carry
+    * enough bytes that 32-way CPU wins: [[SpreadMinBytes]] = 1 MiB, far
+    * below the 16×/64× SCALE batches (2-40 MB — those keep the spread
+    * and their receipts) and above
+    * every sf0.001-0.1 door batch. Result-invariant by construction:
+    * repartition changes layout, never rows, and every door output is
+    * an unordered set (StreamingSpec's split-invariance laws hold
+    * under any partitioning).
+    */
   private[graft] def spreadBatch(batch: DataFrame, doSpread: Boolean): DataFrame =
     if (doSpread)
       batch.repartition(batch.sparkSession.sparkContext.defaultParallelism)
     else batch
 
+  /** The storage level of door-lifetime stores and spilling batch caches. */
+  private val MemoryAndDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  private def tempRoot(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A growing door's root: the caller's `rootDir` (specs inspect the
+    * grow store there), else a fresh temp dir. */
+  private def growRoot(rootDir: String, prefix: String): String =
+    if (rootDir.nonEmpty) rootDir else tempRoot(prefix)
+
+  /** A door's arrivals, staged under `root/src` as one file per
+    * micro-batch (maxFilesPerTrigger = 1). */
+  private sealed trait Arrivals { def schema: StructType }
+
+  /** One frame written as `n` near-equal files: the doors whose verdict
+    * is per row against a frozen store, so any split gives the same
+    * output (the [[doorSplit]] knob). */
+  private final case class Split(frame: DataFrame, n: Int) extends Arrivals {
+    def schema: StructType = frame.schema
+  }
+
+  /** Rows tagged with their group index 0 until `n` in [[GroupCol]],
+    * one file per group in index order: the growing doors, whose
+    * verdicts depend on arrival order (see [[orderedGroupStream]]). */
+  private final case class Ordered(tagged: DataFrame, n: Int) extends Arrivals {
+    def schema: StructType = tagged.drop(GroupCol).schema
+  }
+
+  private val GroupCol = "__g"
+
+  private def ordered(groups: Seq[DataFrame]): Ordered =
+    Ordered(groups.zipWithIndex.map { case (g, k) => g.withColumn(GroupCol, lit(k)) }
+      .reduce(_ unionByName _), groups.size)
+
+  /** The odd-doc_id delta half of the documents table as (doc_id,
+    * text): the arrivals of most document doors. */
+  private def oddDocs(s: SparkSession, dir: String): DataFrame =
+    graft.Tables(s, dir, "documents").filter(col("doc_id") % 2 === 1)
+      .select("doc_id", "text")
+
+  /** [[oddDocs]] in the four deterministic arrival groups of the
+    * growing document doors: doc_id % 8 = 1, 3, 5, 7. */
+  private def oddGroups(s: SparkSession, dir: String): Seq[DataFrame] = {
+    val delta = oddDocs(s, dir)
+    Seq(1L, 3L, 5L, 7L).map(k => delta.filter(col("doc_id") % 8 === k))
+  }
+
+  /** The two arrival groups of the exact-fingerprint grow doors: g0 =
+    * verbatim %13 re-submissions (+5e6 ids) ∪ " graftdelta"-suffixed %7
+    * docs (+6e6); g1 = the %7 docs re-submitted verbatim (+7e6) ∪ fresh
+    * " graftfresh"-suffixed %11 docs (+8e6). */
+  private def fpGrowGroups(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val doc = graft.Tables(s, dir, "documents")
+    def shifted(mod: Int, shift: Long, suffix: String) =
+      doc.filter(col("doc_id") % mod === 0)
+        .select((col("doc_id") + shift).as("doc_id"),
+          (if (suffix.isEmpty) col("text")
+            else concat(col("text"), lit(suffix))).as("text"),
+          col("source"), col("lang"))
+    (shifted(13, 5000000L, "").unionAll(shifted(7, 6000000L, " graftdelta")),
+      shifted(7, 7000000L, " graftdelta").unionAll(shifted(11, 8000000L, " graftfresh")))
+  }
+
+  /** What one micro-batch lands: `out` under `out/batch_b<id>` and, for
+    * a growing door, `grow` under `grow/batch_b<id>` after it. */
+  private final case class Landing(out: DataFrame, grow: Option[DataFrame] = None)
+
+  /** THE door lifecycle, shared by every foreachBatch door (the
+    * mincemeat.py Server owning the task lifecycle while the user ships
+    * only mapfn/reducefn): a door supplies its door-lifetime `stores`,
+    * its `arrivals` and its per-batch `body`; this runner
+    *   - stages the arrivals under `root/src` and streams them back one
+    *     file per micro-batch, with `root/ckpt` as the checkpoint;
+    *   - decides the size-gated spread ONCE from the arrival files
+    *     ([[spreadArrivals]]) and applies it to every batch
+    *     ([[spreadBatch]]) — the gate, not the door, picks the path;
+    *   - fires the grow-store compaction cadence at batch start
+    *     ([[maybeCompactGrow]], a no-op at `compactEvery` = 0);
+    *   - releases every cache the batch body created
+    *     ([[releasingBatchCaches]]; the stores survive, being registered
+    *     before the stream), and unpersists `stores` once the stream
+    *     stopped or failed.
+    * Exactly-once is the SINK's job under foreachBatch: every door lands
+    * batchId-keyed (the pretrain door: keyed by its data-derived ingest
+    * group) with mode("overwrite"), so a replayed batch rewrites its own
+    * files identically and the landed set never double-counts under
+    * crash/replay — a bare mode("append") would be at-least-once.
+    */
+  private def runStream(s: SparkSession, root: String, arrivals: Arrivals,
+      stores: Seq[DataFrame] = Nil, compactEvery: Int = 0)(
+      body: (DataFrame, Long) => Unit): Unit =
+    try {
+      val src = s"$root/src"
+      arrivals match {
+        case Split(frame, n) =>
+          frame.repartition(n).write.mode("overwrite").parquet(src)
+        case o: Ordered => orderedGroupStream(o, root)
+      }
+      val doSpread = spreadArrivals(s, src)
+      // schema from the frame, not the written dir: an EMPTY arrival set
+      // writes no part files, and read.parquet on a part-less dir dies
+      // with "Unable to infer schema"
+      val q = s.readStream.schema(arrivals.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.option("checkpointLocation", s"$root/ckpt")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          maybeCompactGrow(s, root, batchId, compactEvery)
+          releasingBatchCaches(s)(body(spreadBatch(batch, doSpread), batchId))
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally stores.foreach(_.unpersist())
+
+  /** [[runStream]] for a door whose batch lands a [[Landing]] frame:
+    * the door's `verdict` maps each batch to it, and the door's output
+    * is the union of the committed, non-empty `out/batch_b*` dirs
+    * ([[nonEmptyBatchDirs]]) — or, for a `versioned` door, whose every
+    * batch lands the whole merged state, only the newest of them. When
+    * no batch landed a row (a PII-free corpus, an empty arrival set) the
+    * output is a schema-correct empty frame: the verdict's schema over
+    * an empty batch, planned once and never written.
+    */
+  private def runDoor(s: SparkSession, root: String, arrivals: Arrivals,
+      stores: Seq[DataFrame] = Nil, compactEvery: Int = 0,
+      versioned: Boolean = false)(
+      verdict: (DataFrame, Long) => Landing): DataFrame = {
+    runStream(s, root, arrivals, stores, compactEvery) { (batch, batchId) =>
+      val landing = verdict(batch, batchId)
+      landing.out.write.mode("overwrite").parquet(s"$root/out/batch_b$batchId")
+      landing.grow.foreach(
+        _.write.mode("overwrite").parquet(s"$root/grow/batch_b$batchId"))
+    }
+    val landed =
+      if (versioned) newestVersion(root, Long.MaxValue).toSeq
+      else nonEmptyBatchDirs(s"$root/out")
+    if (landed.nonEmpty) s.read.parquet(landed: _*)
+    else {
+      def noRows(schema: StructType) =
+        s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+      noRows(releasingBatchCaches(s)(verdict(noRows(arrivals.schema), 0L).out.schema))
+    }
+  }
+
+  /** The newest committed `out/batch_b*` version of a versioned door
+    * below `batchId`: the state batch `batchId` merges into (a replayed
+    * batch finds the same one — its own and later versions are above
+    * the bound), and at Long.MaxValue the door's final state. */
+  private def newestVersion(root: String, batchId: Long): Option[String] =
+    nonEmptyBatchDirs(s"$root/out", maxBatchExclusive = batchId).lastOption
+
+  /** Stages `arrivals` under `root/src` as ONE parquet file per group
+    * with strictly increasing mtimes (60 s apart — well past FS
+    * timestamp granularity), so the file stream reads them back
+    * oldest-first, one per micro-batch — the deterministic-arrival-order
+    * setup every GROWING door shares (batch membership must be a
+    * function of the data for the sequential fold to be oracle-able).
+    */
+  private def orderedGroupStream(arrivals: Ordered, root: String): Unit = {
+    val t0 = System.currentTimeMillis() - 3600L * 1000
+    // ONE single-task job stages every group (round-16: the per-group
+    // loop paid one scan+write job per group for the same bytes — ~4
+    // jobs of fixed scheduler/commit latency per grow door): write
+    // partitionBy the group tag (stripped from the file contents, so the
+    // moved files carry the arrival schema byte-for-byte), then order
+    // the mtimes. A group with NO rows writes no partition dir — it
+    // falls back to an empty write of its own, so batch count and
+    // arrival order never depend on the data (the grow folds depend on
+    // both).
+    val stage = s"$root/stage"
+    arrivals.tagged.coalesce(1)
+      .write.partitionBy(GroupCol).mode("overwrite").parquet(stage)
+    (0 until arrivals.n).foreach { k =>
+      val gdir = new java.io.File(s"$stage/$GroupCol=$k")
+      val staged =
+        if (gdir.isDirectory)
+          gdir.listFiles().filter(_.getName.endsWith(".parquet")).headOption
+        else None
+      val part = staged.getOrElse {
+        val st2 = s"$root/stage_empty/g$k"
+        arrivals.tagged.filter(col(GroupCol) === k).drop(GroupCol).coalesce(1)
+          .write.mode("overwrite").parquet(st2)
+        new java.io.File(st2).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+      }
+      val dst = new java.io.File(s"$root/src/g$k.parquet")
+      dst.getParentFile.mkdirs()
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      require(dst.setLastModified(t0 + k * 60000L),
+        s"could not order source file mtimes at $dst")
+    }
+  }
+
+  /** Per-micro-batch cache hygiene, which the door runner applies around
+    * every batch body: runs `body`, then releases every cache created
+    * inside it (a verdict's own persisted frames, the IVF assigners'
+    * `assigned`, the containment PPJoin's toks/sets — each documented
+    * for the harness's per-query clearCache, which a LONG-LIVED stream
+    * never runs). A cache REGISTERED before the body survives even when
+    * the body is what first computes it: a Dataset.persist() enters
+    * getPersistentRDDs only on first computation, so a bare RDD-id diff
+    * would unpersist a door-lifetime store persisted before the stream
+    * and first computed in batch 0 — later batches would still plan an
+    * InMemoryTableScan, but recompute the store from its lineage. The
+    * diff therefore spares the RDDs of every cache entry the session's
+    * CacheManager held before the body. Releases the RDD blocks
+    * directly (the storage the leak is made of); the CacheManager's
+    * plan-level entries linger as metadata until the harness
+    * clearCache, which is the acceptable residue.
+    */
+  private[graft] def releasingBatchCaches[T](s: SparkSession)(body: => T): T = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val registered = cacheEntries(s).map(_.cachedRepresentation.cacheBuilder)
+    try body finally {
+      val spared = registered.filter(_.isCachedColumnBuffersLoaded)
+        .map(_.cachedColumnBuffers.id)
+      val after = s.sparkContext.getPersistentRDDs
+      (after.keySet -- before -- spared).foreach(id =>
+        after.get(id).foreach(_.unpersist(blocking = false)))
+    }
+  }
+
+  /** Every entry the session's CacheManager holds. The CacheManager
+    * offers lookups by plan but no listing, so the entries are read from
+    * its private `cachedData` field. */
+  private def cacheEntries(s: SparkSession)
+      : Seq[org.apache.spark.sql.execution.CachedData] = {
+    val f = classOf[org.apache.spark.sql.execution.CacheManager]
+      .getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(s.sharedState.cacheManager)
+      .asInstanceOf[IndexedSeq[org.apache.spark.sql.execution.CachedData]]
+  }
+
+  /** Driver-visible queries: the streaming layer's green CORRECTNESS rows.
+    * q_stream_sessionize replays the EXACT fold the stateful
+    * flatMapGroupsWithState path runs (foldSessions) in batch; StreamingSpec
+    * pins the streaming execution to this fold, and the DuckDB oracle (same
+    * SQL as q_sessionize) pins the fold. q_stream_tumbling goes further:
+    * it executes the real Structured Streaming engine (file source ->
+    * watermark -> windowed agg -> memory sink, complete mode so the sink
+    * holds the final aggregation regardless of micro-batching) and returns
+    * the sink table — the driver's oracle checks the streaming engine
+    * end-to-end.
+    */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_stream_sessionize" -> ((s, dir) => {
@@ -394,28 +648,9 @@ object Streaming {
     // would buffer forever). Times are second-truncated BEFORE the
     // watermark so both engines compare at the same resolution; inner
     // join in append mode emits exactly the matched pairs -> exact oracle.
-    "q_stream_stream_join" -> ((s, dir) => {
-      // stream-stream joins keep one state store per shuffle partition per
-      // side: partition count should track join-key cardinality (150
-      // users here), not the batch corpus default — forked session so the
-      // setting doesn't leak
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      def side(tag: String, typ: String) = eventsStream(s2, dir)
-        .filter(col("event_type") === typ)
-        .select(col("user_id").as(s"${tag}_user"),
-          col("event_id").as(s"${tag}_id"),
-          date_trunc("second", col("ts")).as(s"${tag}_ts"))
-        .withWatermark(s"${tag}_ts", "2 hours")
-      runToMemorySink(side("s", "signup").join(side("p", "purchase"),
-          col("s_user") === col("p_user") &&
-            col("p_ts") >= col("s_ts") &&
-            col("p_ts") <= col("s_ts") + expr("INTERVAL 1 HOUR"))
-        .select(col("s_user").as("user_id"),
-          col("s_id").as("signup_id"), col("p_id").as("purchase_id"),
-          (unix_timestamp(col("p_ts")) - unix_timestamp(col("s_ts"))).as("delay_s")),
-        "graft_q_stream_ssj_", "append")
-    }),
+    "q_stream_stream_join" -> ((s, dir) =>
+      runToMemorySink(signupPurchases(s, dir, "inner"),
+        "graft_q_stream_ssj_", "append")),
 
     // Stream-stream LEFT OUTER interval join: matched pairs emit as they
     // arrive; an unmatched signup emits its NULL-padded row only when the
@@ -426,25 +661,9 @@ object Streaming {
     // s_ts + 1h < min(max ts per side) - 2h (the final watermark).
     // This is the semantics a 100-TB attribution pipeline needs: no
     // premature "no conversion" verdicts, bounded state.
-    "q_stream_outer_join" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      def side(tag: String, typ: String) = eventsStream(s2, dir)
-        .filter(col("event_type") === typ)
-        .select(col("user_id").as(s"${tag}_user"),
-          col("event_id").as(s"${tag}_id"),
-          date_trunc("second", col("ts")).as(s"${tag}_ts"))
-        .withWatermark(s"${tag}_ts", "2 hours")
-      runToMemorySink(side("s", "signup").join(side("p", "purchase"),
-          col("s_user") === col("p_user") &&
-            col("p_ts") >= col("s_ts") &&
-            col("p_ts") <= col("s_ts") + expr("INTERVAL 1 HOUR"),
-          "leftOuter")
-        .select(col("s_user").as("user_id"),
-          col("s_id").as("signup_id"), col("p_id").as("purchase_id"),
-          (unix_timestamp(col("p_ts")) - unix_timestamp(col("s_ts"))).as("delay_s")),
-        "graft_q_stream_oj_", "append")
-    }),
+    "q_stream_outer_join" -> ((s, dir) =>
+      runToMemorySink(signupPurchases(s, dir, "leftOuter"),
+        "graft_q_stream_oj_", "append")),
 
     // foreachBatch MERGE — the production pattern for "stream into a
     // keyed serving table": each micro-batch pre-aggregates per key, then
@@ -453,52 +672,29 @@ object Streaming {
     // table. The merge state is (count, latest-event struct): counts ADD
     // and latest takes the struct MAX on the unique (ts, event_id) order,
     // both associative+commutative, so the final table is independent of
-    // how the source files split into micro-batches (forced to 4 via
-    // maxFilesPerTrigger=1 over a 4-file copy of events). Restart-safe
-    // BY KEYING ON batchId (not driver-local state): target_b<batchId>
-    // is a pure function of the replayable batch content plus the
-    // newest COMMITTED (_SUCCESS-marked) target with a smaller batchId,
-    // and mode-overwrite makes a replayed batch rewrite its own version
-    // identically — the idempotent-merge contract foreachBatch sinks
-    // must implement themselves (a real deployment says MERGE INTO on a
-    // transactional table; the version listing here is bounded driver
-    // metadata, one entry per micro-batch).
+    // how the source files split into micro-batches (forced to 4 over a
+    // 4-file copy of events). Restart-safe BY KEYING ON batchId (not
+    // driver-local state): version b<batchId> is a pure function of the
+    // replayable batch content plus the newest COMMITTED version with a
+    // smaller batchId ([[newestVersion]]) — the idempotent-merge
+    // contract foreachBatch sinks must implement themselves (a real
+    // deployment says MERGE INTO on a transactional table; the version
+    // listing here is bounded driver metadata, one entry per
+    // micro-batch).
     "q_stream_upsert" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_upsert").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "events").repartition(4)
-        .write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      def committedVersions: Seq[Long] = Option(new java.io.File(root).listFiles())
-        .map(_.toSeq).getOrElse(Seq.empty)
-        .filter(f => f.getName.startsWith("target_b")
-          && new java.io.File(f, "_SUCCESS").exists())
-        .map(_.getName.stripPrefix("target_b").toLong)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bAgg = batch.groupBy("user_id")
-            .agg(count(lit(1)).as("n_events"),
-              max(struct(col("ts"), col("event_id"), col("event_type"),
-                col("value"))).as("latest"))
-          val merged = committedVersions.filter(_ < batchId).sorted.lastOption match {
-            case None => bAgg
-            case Some(prior) =>
-              s.read.parquet(s"$root/target_b$prior")
-                .unionByName(bAgg)
-                .groupBy("user_id")
-                .agg(sum(col("n_events")).as("n_events"),
-                  max(col("latest")).as("latest"))
-          }
-          merged.write.mode("overwrite").parquet(s"$root/target_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$root/target_b${committedVersions.sorted.lastOption.getOrElse(
-        sys.error(s"q_stream_upsert: no committed target version under $root"))}")
+      val root = tempRoot("graft_upsert")
+      runDoor(s, root, Split(graft.Tables(s, dir, "events"), 4),
+          versioned = true) { (batch, batchId) =>
+        val bAgg = batch.groupBy("user_id")
+          .agg(count(lit(1)).as("n_events"),
+            max(struct(col("ts"), col("event_id"), col("event_type"),
+              col("value"))).as("latest"))
+        Landing(newestVersion(root, batchId).fold(bAgg)(prior =>
+          s.read.parquet(prior).unionByName(bAgg)
+            .groupBy("user_id")
+            .agg(sum(col("n_events")).as("n_events"),
+              max(col("latest")).as("latest"))))
+      }
         .select(col("user_id"), col("n_events"),
           col("latest.ts").cast("timestamp_ntz").as("last_ts"),
           col("latest.event_type").as("last_type"),
@@ -509,51 +705,25 @@ object Streaming {
     // table, maintained incrementally: each micro-batch pre-aggregates
     // (hour, event_type) counts map-side, then merges them into a
     // versioned count grid by SUM (associative + commutative, so the
-    // grid is micro-batch-split-invariant), with the same
-    // batchId-keyed idempotent-overwrite contract as q_stream_upsert
-    // (state_b<id> is a pure function of replayable batch content plus
-    // the newest committed smaller-id state; a replayed batch rewrites
-    // its own version identically). The top-3-per-hour rank runs on the
-    // MERGED GRID, never the event stream: per-batch cost is
+    // grid is micro-batch-split-invariant), with the same versioned
+    // batchId-keyed merge contract as q_stream_upsert. The top-3-per-hour
+    // rank runs on the MERGED GRID, never the event stream: per-batch cost is
     // O(batch + grid), and the grid is bounded by hours x event-types
     // regardless of event volume — at 100 TB/day the serving query cost
     // is fixed while ingestion scales with the firehose.
     "q_stream_topk" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_topk").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "events").repartition(4)
-        .write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      def committedVersions: Seq[Long] = Option(new java.io.File(root).listFiles())
-        .map(_.toSeq).getOrElse(Seq.empty)
-        .filter(f => f.getName.startsWith("state_b")
-          && new java.io.File(f, "_SUCCESS").exists())
-        .map(_.getName.stripPrefix("state_b").toLong)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bAgg = batch
-            .groupBy(date_trunc("hour", col("ts")).as("hour_ts"),
-              col("event_type"))
-            .agg(count(lit(1)).as("n"))
-          val merged = committedVersions.filter(_ < batchId).sorted.lastOption match {
-            case None => bAgg
-            case Some(prior) =>
-              s.read.parquet(s"$root/state_b$prior")
-                .unionByName(bAgg)
-                .groupBy("hour_ts", "event_type")
-                .agg(sum(col("n")).as("n"))
-          }
-          merged.write.mode("overwrite").parquet(s"$root/state_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val grid = s.read.parquet(s"$root/state_b${committedVersions.sorted.lastOption
-        .getOrElse(sys.error(s"q_stream_topk: no committed state under $root"))}")
-      grid
+      val root = tempRoot("graft_topk")
+      runDoor(s, root, Split(graft.Tables(s, dir, "events"), 4),
+          versioned = true) { (batch, batchId) =>
+        val bAgg = batch
+          .groupBy(date_trunc("hour", col("ts")).as("hour_ts"),
+            col("event_type"))
+          .agg(count(lit(1)).as("n"))
+        Landing(newestVersion(root, batchId).fold(bAgg)(prior =>
+          s.read.parquet(prior).unionByName(bAgg)
+            .groupBy("hour_ts", "event_type")
+            .agg(sum(col("n")).as("n"))))
+      }
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("hour_ts")
@@ -564,10 +734,6 @@ object Streaming {
           col("event_type"), col("n"), col("rn"))
     }),
 
-    // Exactly-once dedup through the real engine: every event arrives
-    // twice (two independent readers of the source), and
-    // dropDuplicatesWithinWatermark must restore exactly the original
-    // event set — which the oracle knows, since event_ids are unique.
     // Genuinely UNBOUNDED ingest (the Kafka stand-in the file/memory
     // sources can't model): the rate source emits the exactly-once
     // sequence 0,1,2,... forever; the query runs until the first 1000
@@ -602,20 +768,6 @@ object Streaming {
       out
     }),
 
-    // Streaming NEAR-dup ingest filter — the production shape of corpus
-    // dedup: the base corpus exists only as its compact MinHash signature
-    // store (Dedup.ensureBaseSignatureStore), the delta (odd doc_ids,
-    // split into 4 files => 4 micro-batches) streams in, and each batch
-    // is tokenized, banded against the base store, exact-verified on
-    // gram Jaccard, and its dups dropped BEFORE landing. Per-batch work
-    // is O(batch + collisions) regardless of base size, and the survivor
-    // set is batch-split-invariant (each doc's verdict depends only on
-    // itself vs the base — StreamingSpec pins 1-batch == 4-batch).
-    // Exactly-once is the SINK's job under foreachBatch: each batch
-    // overwrites its own batchId-keyed directory (a replayed batch
-    // rewrites the identical files), so the landed set never
-    // double-counts under crash/replay — a bare mode("append") here
-    // would be at-least-once.
     // Sampling-at-ingest through the real engine: the corpus streams in
     // forced micro-batches and each row passes the SAME integer-exact
     // md5-bucket mixture rule as the batch q_mixture_sample — stateless,
@@ -647,36 +799,27 @@ object Streaming {
       s.read.parquet(s"$root/kept")
     }),
 
+    // Streaming NEAR-dup ingest filter — the production shape of corpus
+    // dedup: the base corpus exists only as its compact MinHash signature
+    // store (Dedup.ensureBaseSignatureStore), the delta (odd doc_ids,
+    // split into 4 files => 4 micro-batches) streams in, and each batch
+    // is tokenized, banded against the base store, exact-verified on
+    // gram Jaccard, and its dups dropped BEFORE landing. Per-batch work
+    // is O(batch + collisions) regardless of base size, and the survivor
+    // set is batch-split-invariant (each doc's verdict depends only on
+    // itself vs the base — StreamingSpec pins 1-batch == 4-batch).
     "q_stream_neardup_filter" -> ((s, dir) => {
-      // persisted across the 4 micro-batches: every batch band-joins and
+      val D = graft.operators.Dedup
+      // persisted across the micro-batches: every batch band-joins and
       // gram-verifies against the SAME base store — without this each
       // foreachBatch invocation re-scans the store twice
-      val base = graft.operators.Dedup.ensureBaseSignatureStore(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_neardup").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // loan pattern: drops only this batch's gram cache afterwards
-          // (clearCache() here would nuke every live cache in the session)
-          graft.operators.Dedup.withNearDupSurvivors(batch, base) {
-            // batchId-keyed overwrite = idempotent under replay (see the
-            // exactly-once note above)
-            _.write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally { q.stop(); base.unpersist() }
-      s.read.parquet(s"$root/kept/batch_b*")
+      val base = D.ensureBaseSignatureStore(s, dir).persist(MemoryAndDisk)
+      runDoor(s, tempRoot("graft_neardup"), Split(oddDocs(s, dir), doorSplit(s)),
+          Seq(base)) { (batch, _) =>
+        // the batch grams feed both the bands and the verify
+        Landing(D.survivorsFromGrams(batch, D.batchGrams(batch).persist(),
+          base, 0.7))
+      }
     }),
 
     // The GROWING near-dup door (round-12 verdict task 2: store
@@ -702,13 +845,8 @@ object Streaming {
     // door == sequential-batch-fold law, and drained store == rebuilt.
     "q_stream_neardup_grow" -> ((s, dir) => {
       val base = graft.operators.Dedup.ensureBaseSignatureStore(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val delta = graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-      val groups = Seq(1L, 3L, 5L, 7L)
-        .map(k => delta.filter(col("doc_id") % 8 === k))
-      try nearDupGrowDoor(s, groups, base)
+        .persist(MemoryAndDisk)
+      try nearDupGrowDoor(s, oddGroups(s, dir), base)
       finally base.unpersist()
     }),
 
@@ -717,36 +855,20 @@ object Streaming {
     // nightly batch): delta documents arrive in 4 file micro-batches,
     // each batch span-hashes map-side and probes the SAME persisted base
     // span store, and the per-doc duplication profile lands
-    // batchId-keyed (idempotent under replay). Per-batch cost is
+    // batchId-keyed. Per-batch cost is
     // O(batch spans + hits) — the base corpus is never re-read, so
     // ingest keeps up regardless of how much history the store
     // represents. Because every document sits wholly inside one batch,
     // the unioned output is row-identical to the batch twin —
     // the oracle is the SAME SQL.
     "q_stream_span_dedup" -> ((s, dir) => {
-      // persisted across the 4 micro-batches: every batch probes the
+      // persisted across the micro-batches: every batch probes the
       // same base span store without re-reading its parquet
-      val base = graft.operators.Text.ensureSpanStore(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_spanstream").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Text.spanProfileAgainst(batch, base)
-            .write.mode("overwrite").parquet(s"$root/out/batch_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally { q.stop(); base.unpersist() }
-      s.read.parquet(s"$root/out/batch_b*")
+      val base = graft.operators.Text.ensureSpanStore(s, dir).persist(MemoryAndDisk)
+      runDoor(s, tempRoot("graft_spanstream"), Split(oddDocs(s, dir), doorSplit(s)),
+          Seq(base)) { (batch, _) =>
+        Landing(graft.operators.Text.spanProfileAgainst(batch, base))
+      }
     }),
 
     // The growth pattern extended to the SPAN store (round-12 verdict
@@ -757,14 +879,8 @@ object Streaming {
     // q_stream_span_dedup door cannot see. Deterministic doc_id % 8
     // groups; oracled as the 4-step chained-CTE fold at both SFs.
     "q_stream_span_grow" -> ((s, dir) => {
-      val base = graft.operators.Text.ensureSpanStore(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val delta = graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-      val groups = Seq(1L, 3L, 5L, 7L)
-        .map(k => delta.filter(col("doc_id") % 8 === k))
-      try spanGrowDoor(s, groups, base)
+      val base = graft.operators.Text.ensureSpanStore(s, dir).persist(MemoryAndDisk)
+      try spanGrowDoor(s, oddGroups(s, dir), base)
       finally base.unpersist()
     }),
 
@@ -778,26 +894,9 @@ object Streaming {
     // shared with the pretrain door (Text.batteryKeptDocs); oracled via
     // the shared battery CTEs chained into the two-step fold.
     "q_stream_exactdup_grow" -> ((s, dir) => {
-      val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val baseFp = graft.operators.Text.ensurePretrainFpStore(s, dir)
-        .persist(sl)
-      val doc = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text", "source", "lang")
-      val g0 = doc.filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 5000000L).as("doc_id"), col("text"),
-          col("source"), col("lang"))
-        .unionAll(doc.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 6000000L).as("doc_id"),
-            concat(col("text"), lit(" graftdelta")).as("text"),
-            col("source"), col("lang")))
-      val g1 = doc.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 7000000L).as("doc_id"),
-          concat(col("text"), lit(" graftdelta")).as("text"),
-          col("source"), col("lang"))
-        .unionAll(doc.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 8000000L).as("doc_id"),
-            concat(col("text"), lit(" graftfresh")).as("text"),
-            col("source"), col("lang")))
+        .persist(MemoryAndDisk)
+      val (g0, g1) = fpGrowGroups(s, dir)
       try exactDupGrowDoor(s, Seq(g0, g1), baseFp)
       finally baseFp.unpersist()
     }),
@@ -815,7 +914,6 @@ object Streaming {
     // the production cadence (day N's stream → overnight promote → day
     // N+1 starts at the fresh-base probe floor) made oracle-visible.
     "q_stream_exactdup_promote" -> ((s, dir) => {
-      val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val T = graft.operators.Text
       // promotion mutates its target, so work on a COPY of the fixture
       // store (the shared pretrain_fp_v1 must stay frozen for every
@@ -824,39 +922,20 @@ object Streaming {
                                       // synchronous inside ensureStore;
                                       // round-16 dropped the extra count job)
       val origPath = graft.operators.Sources.fixturePath(dir, "pretrain_fp_v1")
-      val baseCopy = java.nio.file.Files
-        .createTempDirectory("graft_fppromote_store").toString + "/store"
+      val baseCopy = tempRoot("graft_fppromote_store") + "/store"
       s.read.parquet(origPath).write.parquet(baseCopy)
-      val doc = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text", "source", "lang")
-      val g0 = doc.filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 5000000L).as("doc_id"), col("text"),
-          col("source"), col("lang"))
-        .unionAll(doc.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 6000000L).as("doc_id"),
-            concat(col("text"), lit(" graftdelta")).as("text"),
-            col("source"), col("lang")))
-      val g1 = doc.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 7000000L).as("doc_id"),
-          concat(col("text"), lit(" graftdelta")).as("text"),
-          col("source"), col("lang"))
-        .unionAll(doc.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 8000000L).as("doc_id"),
-            concat(col("text"), lit(" graftfresh")).as("text"),
-            col("source"), col("lang")))
-      val root1 = java.nio.file.Files
-        .createTempDirectory("graft_fppromote_s1").toString
-      val base1 = s.read.parquet(baseCopy).persist(sl)
+      val (g0, g1) = fpGrowGroups(s, dir)
+      val root1 = tempRoot("graft_fppromote_s1")
+      val base1 = s.read.parquet(baseCopy).persist(MemoryAndDisk)
       // the door computes during the stream; its return value is a lazy
-      // read over the IMMUTABLE kept/batch_b* parquet, which promotion
+      // read over the IMMUTABLE out/batch_b* parquet, which promotion
       // never touches — so the frame stays valid across the store fold
       val kept1 =
         try exactDupGrowDoor(s, Seq(g0), base1, rootDir = root1)
         finally base1.unpersist()
       promoteGrowStore(s, root1, baseCopy)
-      val root2 = java.nio.file.Files
-        .createTempDirectory("graft_fppromote_s2").toString
-      val base2 = s.read.parquet(baseCopy).persist(sl)
+      val root2 = tempRoot("graft_fppromote_s2")
+      val base2 = s.read.parquet(baseCopy).persist(MemoryAndDisk)
       val kept2 =
         try exactDupGrowDoor(s, Seq(g1), base2, rootDir = root2)
         finally base2.unpersist()
@@ -871,8 +950,7 @@ object Streaming {
     // 4 file micro-batches, each batch computes its gram profile
     // map-side via the SHARED Text.contaminationProfile, probes the
     // broadcast store, and only docs with ZERO benchmark overlap land,
-    // batchId-keyed (idempotent under replay — the exactly-once
-    // convention above). Per-batch cost is O(batch grams), independent
+    // batchId-keyed. Per-batch cost is O(batch grams), independent
     // of corpus history; the benchmark enters only through the
     // fixed-size broadcast. Each doc's verdict depends only on itself
     // vs the store, so the kept set is batch-split-invariant
@@ -882,34 +960,17 @@ object Streaming {
     // sub-3-token rule, except here the door REPORTS survivors with
     // their gram counts, so gram-less docs have no row to report).
     "q_stream_decontaminate" -> ((s, dir) => {
-      // persisted across the 4 micro-batches: every batch broadcasts
+      // persisted across the micro-batches: every batch broadcasts
       // the same benchmark gram set without re-reading its parquet
       val bench = graft.operators.Text.ensureBenchGramStore(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_decontamstream").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 53 =!= 0)
-        .select("doc_id", "text")
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val doSpread = spreadArrivals(s, src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Text.contaminationProfile(
-            spreadBatch(batch, doSpread),
-            bench)
-            .filter(!col("contaminated"))
-            .select("doc_id", "n_grams")
-            .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally { q.stop(); bench.unpersist() }
-      s.read.parquet(s"$root/kept/batch_b*")
+        .persist(MemoryAndDisk)
+      val arrivals = graft.Tables(s, dir, "documents")
+        .filter(col("doc_id") % 53 =!= 0).select("doc_id", "text")
+      runDoor(s, tempRoot("graft_decontamstream"), Split(arrivals, doorSplit(s)),
+          Seq(bench)) { (batch, _) =>
+        Landing(graft.operators.Text.contaminationProfile(batch, bench)
+          .filter(!col("contaminated")).select("doc_id", "n_grams"))
+      }
     }),
 
     // Ingest-time cross-modal (media) exact-dup filter — the streaming
@@ -922,7 +983,7 @@ object Streaming {
     // decode anywhere at query time), hyperplane-coded, band-joined
     // against the base BLOCKED on (nbytes, width, height), verified on
     // full signature equality, and only genuinely-new assets land,
-    // batchId-keyed (idempotent under replay). Per-batch cost is
+    // batchId-keyed. Per-batch cost is
     // O(batch decode + collisions), independent of catalog size. The
     // arrival fixture plants both verdicts: byte-identical copies of the
     // doc_id%10==0 assets (must be dropped — recovery structural:
@@ -937,36 +998,23 @@ object Streaming {
       // built and persisted ONCE beside the store and reused by every
       // micro-batch (the IvfSeedIndex convention) — per-batch cost is
       // then genuinely O(batch decode + collisions), never a re-explode
-      // of the whole catalog. Band width from the BASE count, once —
-      // batch and base must band identically, and a per-batch width
-      // would drift with batch size.
+      // of the whole catalog.
       val baseStore = M.ensureMediaSigStore(s, dir)
-      // band width from the BASE count — read from the store's parquet
-      // footers driver-side (round-16: the count() was a full job for
-      // footer metadata; the value is bit-identical)
+      // band width from the BASE count, once — batch and base must band
+      // identically, and a per-batch width would drift with batch size.
+      // Read from the store's parquet footers driver-side (round-16: the
+      // count() was a full job for footer metadata; the value is
+      // bit-identical)
       val index = M.buildMediaIndex(baseStore,
         graft.operators.Lsh.bandBits(parquetFooterRows(s,
           Seq(graft.operators.Sources.fixturePath(dir, "media_sig_v1")))))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_mediastream").toString
-      val src = s"$root/src"
-      M.mediaArrivals(s, dir)
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // loan pattern: the batch decode cache is released per batch
-          M.withMediaSurvivors(batch, index) {
-            _.select("doc_id", "nbytes")
-              .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally { q.stop(); index.unpersist() }
-      s.read.parquet(s"$root/kept/batch_b*")
+      runDoor(s, tempRoot("graft_mediastream"),
+          Split(M.mediaArrivals(s, dir), doorSplit(s)),
+          Seq(index.bands, index.sigs)) { (batch, _) =>
+        // the decode feeds both the bands and the verify
+        Landing(M.mediaSurvivors(M.decodedSig(batch).persist(), index)
+          .select("doc_id", "nbytes"))
+      }
     }),
 
     // The growth pattern EXTENDED to the media store (round-12 verdict
@@ -1007,30 +1055,12 @@ object Streaming {
     // scan-rate map, so per-batch cost rides batch tokens and the kept
     // set is trivially batch-split-invariant (StreamingSpec pins
     // 1-batch == 4-batch).
-    "q_stream_quality" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_qualstream").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val doSpread = spreadArrivals(s, src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Text.gopherProfile(
-            spreadBatch(batch, doSpread))
-            .filter(col("verdict") === "kept")
-            .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$root/kept/batch_b*")
-    }),
+    "q_stream_quality" -> ((s, dir) =>
+      runDoor(s, tempRoot("graft_qualstream"),
+          Split(oddDocs(s, dir), doorSplit(s))) { (batch, _) =>
+        Landing(graft.operators.Text.gopherProfile(batch)
+          .filter(col("verdict") === "kept"))
+      }),
 
     // Ingest-time repetition quarantine — the streaming twin of
     // q_repetition_rules: each micro-batch runs the identical 13-signal
@@ -1039,37 +1069,12 @@ object Streaming {
     // batchId-keyed. Stateless scan-rate map ⇒ per-batch cost rides
     // batch bytes and the flagged set is batch-split-invariant; the
     // oracle is the batch form restricted to the delta half.
-    "q_stream_repetition" -> ((s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_repstream").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val doSpread = spreadArrivals(s, src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Text.repetitionRules(
-            spreadBatch(batch, doSpread))
-            .filter(col("verdict") =!= "kept")
-            .select("doc_id", "verdict")
-            .write.mode("overwrite").parquet(s"$root/flagged/batch_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // a repetition-free batch commits an empty dir (every row filtered
-      // before the write) — same schema-inference guard as the PII door
-      val outs = nonEmptyBatchDirs(s"$root/flagged", requireSuccess = false)
-      if (outs.isEmpty)
-        graft.Tables(s, dir, "documents").limit(0)
-          .select(col("doc_id"), lit("").as("verdict")).filter(lit(false))
-      else s.read.parquet(outs: _*)
-    }),
+    "q_stream_repetition" -> ((s, dir) =>
+      runDoor(s, tempRoot("graft_repstream"),
+          Split(oddDocs(s, dir), doorSplit(s))) { (batch, _) =>
+        Landing(graft.operators.Text.repetitionRules(batch)
+          .filter(col("verdict") =!= "kept").select("doc_id", "verdict"))
+      }),
 
     // Ingest-time DSIR quality gating — the streaming twin of q_dsir:
     // the importance models are fit ONCE on the base half and persisted
@@ -1087,34 +1092,15 @@ object Streaming {
     // where the en-skew is demonstrated; this query's subject is the
     // ingest mechanics + store shape.
     "q_stream_dsir" -> ((s, dir) => {
-      val models = graft.operators.Text.dsirModelsOf(
-        s.read.parquet(graft.operators.Text.ensureDsirModelStore(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_dsirstream").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "lang", "text")
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val doSpread = spreadArrivals(s, src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // a one-file micro-batch arrives as a single partition, which
-          // would serialize the CPU-bound scoring fold onto one core —
-          // spread it (the verdict is per-doc, so this is result-neutral)
-          graft.operators.Text.dsirProfileAgainst(
-            spreadBatch(batch, doSpread),
-            models)
-            .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally { q.stop(); models.unpersist() }
-      s.read.parquet(s"$root/kept/batch_b*")
+      val T = graft.operators.Text
+      val models = T.dsirModelsOf(s.read.parquet(T.ensureDsirModelStore(s, dir)))
+        .persist(MemoryAndDisk)
+      val arrivals = graft.Tables(s, dir, "documents")
+        .filter(col("doc_id") % 2 === 1).select("doc_id", "lang", "text")
+      runDoor(s, tempRoot("graft_dsirstream"), Split(arrivals, doorSplit(s)),
+          Seq(models)) { (batch, _) =>
+        Landing(T.dsirProfileAgainst(batch, models))
+      }
     }),
 
     // Ingest-time CCNet perplexity gate — the streaming deployment of
@@ -1134,35 +1120,15 @@ object Streaming {
     // (or re-scored) at ingest. Per-doc verdict =>
     // batch-split-invariant (StreamingSpec law).
     "q_stream_ppl_filter" -> ((s, dir) => {
-      val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val (uni, bi) = graft.operators.Text.baseBigramLm(s, dir)
-      uni.persist(sl); bi.persist(sl)
-      val (vSize, c2) = graft.operators.Text.basePplCutpoint(s, dir)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_pplstream").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val doSpread = spreadArrivals(s, src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Text.perplexityAgainst(
-            spreadBatch(batch, doSpread),
-            uni, bi, vSize)
-            .filter(col("ppl") <= lit(c2))
-            .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally {
-        q.stop(); uni.unpersist(); bi.unpersist()
+      val T = graft.operators.Text
+      val (uni, bi) = T.baseBigramLm(s, dir)
+      uni.persist(MemoryAndDisk); bi.persist(MemoryAndDisk)
+      val (vSize, c2) = T.basePplCutpoint(s, dir)
+      runDoor(s, tempRoot("graft_pplstream"), Split(oddDocs(s, dir), doorSplit(s)),
+          Seq(uni, bi)) { (batch, _) =>
+        Landing(T.perplexityAgainst(batch, uni, bi, vSize)
+          .filter(col("ppl") <= lit(c2)))
       }
-      s.read.parquet(s"$root/kept/batch_b*")
     }),
 
     // Ingest-time SEMANTIC dedup — the streaming twin of q_dedup_semantic
@@ -1177,7 +1143,7 @@ object Streaming {
     // delta only, and the recall gain is measured in
     // q_dedup_semantic_recall's recall_mp2 vs recall), (b) anti-joined
     // against base members of EITHER probed cluster at cosine >= tau.
-    // Survivors land batchId-keyed (idempotent under replay). Per-batch
+    // Survivors land batchId-keyed. Per-batch
     // cost is O(batch * k + 2 * batch * cluster_width) — the base is
     // touched only through the cluster-keyed join, never rescanned
     // whole. Each vector's verdict depends only on itself vs the base,
@@ -1254,85 +1220,41 @@ object Streaming {
     // StreamingSpec pins the equality as the split-invariance law.
     "q_stream_containment" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val D = graft.operators.Dedup
       // persisted across micro-batches; the caches fill lazily inside
       // batch 0's first job (round-16: the two eager count() jobs bought
       // nothing — every store is consumed by the same per-batch plan)
-      val sets = D.ensureContainIndexStore(s, dir).persist(sl)
-      val postings = D.containIndexPostings(sets).persist(sl)
-      val cnt = D.ensureContainCountStore(s, dir).persist(sl)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_containstream").toString
-      val src = s"$root/src"
-      graft.Tables(s, dir, "documents")
-        .filter(col("doc_id") % 3 === 0)
-        .select("doc_id", "text")
-        .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val doSpread = spreadArrivals(s, src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          releasingBatchCaches(s) {
-            // adaptive spread before the CPU-bound gram pass (the
-            // lang-door finding, size-gated — see spreadBatch)
-            D.containmentProbeStoredOrder(D.batchGrams(spreadBatch(batch, doSpread)),
-                sets, postings, cnt, broadcastProbe = true)
-              .write.mode("overwrite").parquet(s"$root/found/batch_b$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally {
-        q.stop(); sets.unpersist(); postings.unpersist(); cnt.unpersist()
+      val sets = D.ensureContainIndexStore(s, dir).persist(MemoryAndDisk)
+      val postings = D.containIndexPostings(sets).persist(MemoryAndDisk)
+      val cnt = D.ensureContainCountStore(s, dir).persist(MemoryAndDisk)
+      val arrivals = graft.Tables(s, dir, "documents")
+        .filter(col("doc_id") % 3 === 0).select("doc_id", "text")
+      runDoor(s, tempRoot("graft_containstream"), Split(arrivals, doorSplit(s)),
+          Seq(sets, postings, cnt)) { (batch, _) =>
+        Landing(D.containmentProbeStoredOrder(D.batchGrams(batch),
+          sets, postings, cnt, broadcastProbe = true))
       }
-      s.read.parquet(s"$root/found/batch_b*")
     }),
 
     // Ingest-time structured-PII redaction — the door twin of
     // q_pii_scrub (round-13 verdict task 2): arrivals stream in 4 file
     // micro-batches and each batch runs the SAME map-only pattern
     // battery (Text.piiScrubProfile — counts, sequential redaction,
-    // residual re-count), landing its flagged rows batchId-keyed
-    // (idempotent under replay). Zero cross-batch state and zero base
+    // residual re-count), landing its flagged rows batchId-keyed.
+    // Zero cross-batch state and zero base
     // artifact: the verdict is a pure per-row function, so the door is
     // batch-split-invariant and the unioned output is row-identical to
     // the batch twin — the oracle is the SAME SQL. Per-batch cost is
     // batch-sized codegen regex work; nothing grows with history.
     "q_stream_pii_redact" -> ((s, dir) => {
       val T = graft.operators.Text
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_piistream").toString
-      val src = s"$root/src"
-      val aug = T.piiAugmentedDocs(graft.Tables(s, dir, "documents"))
-      aug.repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-      val doSpread = spreadArrivals(s, src)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // single-file batch → spread before the CPU-bound regex
-          // battery (the lang-door finding, SCALE.md round-15)
-          T.piiScrubProfile(spreadBatch(batch, doSpread))
-            .filter(T.piiFlagged) // generated from PiiPatterns — class
-                                  // additions reach the door untouched
-            .write.mode("overwrite").parquet(s"$root/out/batch_b$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // a PII-free corpus commits only empty batch dirs (every row is
-      // filtered before the write), and a bare glob read over them dies
-      // with "Unable to infer schema" — return a schema-correct empty
-      // frame instead (round-14 review; same guard committedGrowDirs
-      // applies to grow stores)
-      val outs = nonEmptyBatchDirs(s"$root/out", requireSuccess = false)
-      if (outs.isEmpty)
-        T.piiScrubProfile(aug.limit(0)).filter(T.piiFlagged)
-      else s.read.parquet(outs: _*)
+      runDoor(s, tempRoot("graft_piistream"),
+          Split(T.piiAugmentedDocs(graft.Tables(s, dir, "documents")),
+            doorSplit(s))) { (batch, _) =>
+        // piiFlagged is generated from PiiPatterns — class additions
+        // reach the door untouched
+        Landing(T.piiScrubProfile(batch).filter(T.piiFlagged))
+      }
     }),
 
     // Ingest-time language routing — the door twin of the TrigramLangId
@@ -1345,7 +1267,7 @@ object Streaming {
     // langprof_v1 store (≤ langs × K rows — trained ONCE, never re-read
     // per batch thanks to the persist) and only docs whose predicted
     // language is in the accept set land, batchId-keyed with their
-    // prediction (idempotent under replay). Per-batch cost is O(batch
+    // prediction. Per-batch cost is O(batch
     // trigrams), independent of corpus history; the training corpus
     // enters only through the fixed-size broadcast. Each doc's verdict
     // depends only on itself vs the store, so the kept set is
@@ -1372,79 +1294,16 @@ object Streaming {
       langRouteDoor(s, graft.Tables(s, dir, "documents"),
         graft.operators.LangId.ensureProfileStore(s, dir))),
 
+    // Exactly-once dedup through the real engine: every event arrives
+    // twice (two independent readers of the source), and
+    // dropDuplicatesWithinWatermark must restore exactly the original
+    // event set — which the oracle knows, since event_ids are unique.
     "q_stream_dedup" -> ((s, dir) =>
       runToMemorySink(dedupedStream(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_timestamp(date_trunc("second", col("ts"))).as("sec")),
         "graft_q_stream_dedup_", "append"))
   )
-
-  /** The growing near-dup door's engine run (see the
-    * q_stream_neardup_grow query comment): `groups` arrive as one file
-    * micro-batch each, in sequence order (strictly increasing mtimes —
-    * FileStreamSource delivers oldest-first under maxFilesPerTrigger=1);
-    * each batch dedups against `base` ∪ the survivor signatures of all
-    * EARLIER batches, lands its kept ids batchId-keyed, and appends its
-    * survivors' (doc_id, grams, sig) rows to the door's grow store
-    * (batchId-keyed overwrite = idempotent under replay: a replayed
-    * batch's verdict inputs — base + earlier-batch dirs — are untouched
-    * by its own replay, so it rewrites identical rows). Per-batch cost
-    * rides the batch + the compact signature frames; the base corpus
-    * text is never read. One honest cost axis the door family's
-    * base-size contract does not cover: each batch OPENS all earlier
-    * grow dirs, so file-listing work grows with STREAM AGE (harmless at
-    * 4 batches; a long-lived production stream runs the standard
-    * maintenance job instead — periodically compact the grow dirs into
-    * the base store and truncate them, which is exactly the one-time
-    * store build these doors already amortize against). Factored from
-    * the query so StreamingSpec can drive planted corpora and inspect
-    * the grow store via `root`.
-    */
-  /** Writes `groups` as ONE parquet file each with strictly increasing
-    * mtimes (60 s apart — well past FS timestamp granularity) under
-    * `root/src` and returns the file stream reading them back
-    * oldest-first, one per micro-batch — the deterministic-arrival-order
-    * setup every GROWING door shares (batch membership must be a
-    * function of the data for the sequential fold to be oracle-able).
-    */
-  private def orderedGroupStream(s: SparkSession, groups: Seq[DataFrame],
-      root: String): DataFrame = {
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    // ONE single-task job stages every group (round-16: the per-group
-    // loop paid one scan+write job per group for the same bytes — ~4
-    // jobs of fixed scheduler/commit latency per grow door): tag each
-    // group with its index, write partitionBy the tag (stripped from
-    // the file contents, so the moved files carry the original group
-    // schema byte-for-byte), then order the mtimes exactly as before.
-    // A group with NO rows writes no partition dir — it falls back to
-    // the old per-group empty write, so batch count and arrival order
-    // are EXACTLY as before (the grow folds depend on both).
-    val stage = s"$root/stage"
-    groups.zipWithIndex.map { case (g, k) => g.withColumn("__g", lit(k)) }
-      .reduce(_ unionByName _)
-      .coalesce(1).write.partitionBy("__g").mode("overwrite").parquet(stage)
-    groups.zipWithIndex.foreach { case (g, k) =>
-      val gdir = new java.io.File(s"$stage/__g=$k")
-      val staged =
-        if (gdir.isDirectory)
-          gdir.listFiles().filter(_.getName.endsWith(".parquet")).headOption
-        else None
-      val part = staged.getOrElse {
-        val st2 = s"$root/stage_empty/g$k"
-        g.coalesce(1).write.mode("overwrite").parquet(st2)
-        new java.io.File(st2).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-      }
-      val dst = new java.io.File(s"$root/src/g$k.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(t0 + k * 60000L),
-        s"could not order source file mtimes at $dst")
-    }
-    s.readStream
-      .schema(s.read.parquet(s"$root/src").schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-  }
 
   /** The language-routing door's engine run (see the
     * q_stream_lang_filter query comment): arrivals in `docs` stream in
@@ -1459,38 +1318,13 @@ object Streaming {
   def langFilterDoor(s: SparkSession, docs: DataFrame,
       profiles: DataFrame, accept: Seq[String]): DataFrame = {
     val L = graft.operators.LangId
-    val prof = profiles
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    prof.count()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_langstream").toString
-    val src = s"$root/src"
-    docs.select("doc_id", "text")
-      .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-    val doSpread = spreadArrivals(s, src)
-    val stream = s.readStream.schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one micro-batch = one arrival file = 1-2 scan tasks; the
-        // native profile is CPU-bound O(bytes) per row, so without the
-        // spread the whole box idles behind one core (SCALE.md round-15:
-        // the profile stage alone ran 4.5× its static cost — THE lang
-        // door premium; same fix as the repetition door)
-        L.predictionsOf(L.classify(spreadBatch(batch, doSpread), prof))
-          .filter(col("predicted").isin(accept: _*))
-          .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally { q.stop(); prof.unpersist() }
-    // a batch keeping zero docs commits a dir with no parquet part
-    // files; a bare glob read over only such dirs dies with "Unable to
-    // infer schema" — same guard as the PII door / committedGrowDirs
-    val outs = nonEmptyBatchDirs(s"$root/kept", requireSuccess = false)
-    if (outs.isEmpty) L.predictionsOf(L.classify(docs.limit(0), prof))
-    else s.read.parquet(outs: _*)
+    val prof = profiles.persist(MemoryAndDisk)
+    runDoor(s, tempRoot("graft_langstream"),
+        Split(docs.select("doc_id", "text"), doorSplit(s)), Seq(prof)) {
+      (batch, _) =>
+        Landing(L.predictionsOf(L.classify(batch, prof))
+          .filter(col("predicted").isin(accept: _*)))
+    }
   }
 
   /** The language door FAN-OUT (round-14 verdict task 4): real
@@ -1518,37 +1352,20 @@ object Streaming {
   def langRouteDoor(s: SparkSession, docs: DataFrame,
       profiles: DataFrame): DataFrame = {
     val L = graft.operators.LangId
-    val prof = profiles
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    prof.count()
+    val prof = profiles.persist(MemoryAndDisk)
     val langs = prof.select("lang").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_langroute").toString
-    val src = s"$root/src"
-    val arrivals = docs.select("doc_id", "text")
-    arrivals.repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-    // schema from the frame, not the written dir: an EMPTY arrival set
-    // writes no part files, and read.parquet on a part-less dir dies
-    // with "Unable to infer schema" (the empty-partition guard law)
-    val doSpread = spreadArrivals(s, src)
-    val stream = s.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // same single-file-batch parallelism spread as langFilterDoor
-        L.predictionsOf(L.classify(spreadBatch(batch, doSpread), prof))
-          .write.mode("overwrite").partitionBy("predicted")
-          .parquet(s"$root/routed/batch_b$batchId")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally { q.stop(); prof.unpersist() }
+    val root = tempRoot("graft_langroute")
+    runStream(s, root, Split(docs.select("doc_id", "text"), doorSplit(s)),
+        Seq(prof)) { (batch, batchId) =>
+      L.predictionsOf(L.classify(batch, prof))
+        .write.mode("overwrite").partitionBy("predicted")
+        .parquet(s"$root/out/batch_b$batchId")
+    }
     // committed batch dirs (partitionBy nests the data files, so the
     // flat-parquet guard of nonEmptyBatchDirs does not apply — _SUCCESS
     // is still written at the batch dir's top level)
-    val batchDirs = Option(new java.io.File(s"$root/routed").listFiles())
+    val batchDirs = Option(new java.io.File(s"$root/out").listFiles())
       .getOrElse(Array.empty)
       .filter(d => d.isDirectory &&
         new java.io.File(d, "_SUCCESS").exists())
@@ -1596,25 +1413,6 @@ object Streaming {
       maxBatchExclusive = batchId)
   }
 
-  /** Grow-store COMPACTION (round-13 verdict task 3): rewrites all
-    * committed batchId-keyed grow dirs into ONE dir (batch_b0),
-    * content-identical, and removes the rest — the maintenance job the
-    * door scaladocs have always pointed at ("periodically compact the
-    * grow dirs"), now a rule instead of a comment. At real ingest
-    * cadence the append-one-dir-per-micro-batch layout is the batch
-    * small-files problem (one more dir to open per batch, forever);
-    * after compaction `committedGrowDirs` sees exactly one dir and the
-    * union is unchanged by construction: the dirs are PAIRWISE DISJOINT
-    * (every door appends batch-unique doc ids or anti-joined-fresh
-    * fps/spans), so a plain union rewrite preserves both the set AND
-    * multiset content — the span door's count semantics survive.
-    * Run it between streams (the production maintenance window): a
-    * replayed micro-batch K would rewrite batch_bK whose rows are
-    * already folded into batch_b0, which is harmless for the
-    * membership-semantics doors but would double the span door's counts
-    * — same discipline as any checkpoint-coupled store rewrite.
-    * Returns the number of dirs folded.
-    */
   /** The batch index of a `batch_b<i>` dir name, None for anything
     * else (markers, tmp dirs, foreign files). */
   private def batchIndexOf(name: String): Option[Long] = {
@@ -1647,6 +1445,25 @@ object Streaming {
       }
       .sortBy(_._1).map(_._2.toString).toSeq
 
+  /** Grow-store COMPACTION (round-13 verdict task 3): rewrites all
+    * committed batchId-keyed grow dirs into ONE dir (batch_b0),
+    * content-identical, and removes the rest — the maintenance job the
+    * door scaladocs have always pointed at ("periodically compact the
+    * grow dirs"), now a rule instead of a comment. At real ingest
+    * cadence the append-one-dir-per-micro-batch layout is the batch
+    * small-files problem (one more dir to open per batch, forever);
+    * after compaction `committedGrowDirs` sees exactly one dir and the
+    * union is unchanged by construction: the dirs are PAIRWISE DISJOINT
+    * (every door appends batch-unique doc ids or anti-joined-fresh
+    * fps/spans), so a plain union rewrite preserves both the set AND
+    * multiset content — the span door's count semantics survive.
+    * Run it between streams (the production maintenance window): a
+    * replayed micro-batch K would rewrite batch_bK whose rows are
+    * already folded into batch_b0, which is harmless for the
+    * membership-semantics doors but would double the span door's counts
+    * — same discipline as any checkpoint-coupled store rewrite.
+    * Returns the number of dirs folded.
+    */
   def compactGrowStore(s: SparkSession, root: String,
       maxBatchExclusive: Long = Long.MaxValue): Int = {
     val growRoot = new java.io.File(s"$root/grow")
@@ -1911,41 +1728,49 @@ object Streaming {
       compactGrowStore(s, root, maxBatchExclusive = batchId); ()
     }
 
+  /** The growing near-dup door's engine run (see the
+    * q_stream_neardup_grow query comment): `groups` arrive as one file
+    * micro-batch each, in sequence order (strictly increasing mtimes —
+    * FileStreamSource delivers oldest-first under maxFilesPerTrigger=1);
+    * each batch dedups against `base` ∪ the survivor signatures of all
+    * EARLIER batches, lands its kept ids batchId-keyed, and appends its
+    * survivors' (doc_id, grams, sig) rows to the door's grow store
+    * (batchId-keyed overwrite = idempotent under replay: a replayed
+    * batch's verdict inputs — base + earlier-batch dirs — are untouched
+    * by its own replay, so it rewrites identical rows). Per-batch cost
+    * rides the batch + the compact signature frames; the base corpus
+    * text is never read. One honest cost axis the door family's
+    * base-size contract does not cover: each batch OPENS all earlier
+    * grow dirs, so file-listing work grows with STREAM AGE (harmless at
+    * 4 batches; a long-lived production stream runs the standard
+    * maintenance job instead — periodically compact the grow dirs into
+    * the base store and truncate them, which is exactly the one-time
+    * store build these doors already amortize against). Factored from
+    * the query so StreamingSpec can drive planted corpora and inspect
+    * the grow store via `root`.
+    */
   def nearDupGrowDoor(s: SparkSession, groups: Seq[DataFrame],
       base: DataFrame, threshold: Double = 0.7,
       rootDir: String = "", compactEvery: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val D = graft.operators.Dedup
-    val root = if (rootDir.nonEmpty) rootDir
-      else java.nio.file.Files.createTempDirectory("graft_neardupgrow").toString
-    val stream = orderedGroupStream(s, groups, root)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maybeCompactGrow(s, root, batchId, compactEvery)
-        releasingBatchCaches(s) {
-          val earlier = committedGrowDirs(root, batchId)
-          val grow = if (earlier.isEmpty) base
-            else base.unionByName(s.read.parquet(earlier: _*))
-          val withG = D.batchGrams(batch)
-            .withColumn("sig", call_function("minhash64", col("grams")))
-            .persist()
-          val kept = D.survivorsFromGrams(batch.select("doc_id"), withG,
-              grow, threshold)
-            .persist()
-          kept.write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-          // the MERGE: survivors' signatures join the store before the
-          // next batch's verdicts are computed
-          withG.join(kept, Seq("doc_id"))
-            .select("doc_id", "grams", "sig")
-            .write.mode("overwrite").parquet(s"$root/grow/batch_b$batchId")
-        }
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(s"$root/kept/batch_b*")
-      .select(col("doc_id"), (col("doc_id") % 8).as("grp"))
+    val root = growRoot(rootDir, "graft_neardupgrow")
+    runDoor(s, root, ordered(groups), compactEvery = compactEvery) {
+      (batch, batchId) =>
+        val earlier = committedGrowDirs(root, batchId)
+        val grow = if (earlier.isEmpty) base
+          else base.unionByName(s.read.parquet(earlier: _*))
+        val withG = D.batchGrams(batch)
+          .withColumn("sig", call_function("minhash64", col("grams")))
+          .persist()
+        val kept = D.survivorsFromGrams(batch.select("doc_id"), withG,
+            grow, threshold)
+          .persist()
+        // the MERGE: survivors' signatures join the store before the
+        // next batch's verdicts are computed
+        Landing(kept, Some(withG.join(kept, Seq("doc_id"))
+          .select("doc_id", "grams", "sig")))
+    }.select(col("doc_id"), (col("doc_id") % 8).as("grp"))
   }
 
   /** The growth pattern extended to the MEDIA store (the round-12
@@ -1971,38 +1796,24 @@ object Streaming {
     // query's filter door (above) reads footers
     val index = M.buildMediaIndex(baseStore,
       graft.operators.Lsh.bandBits(baseStore.count()))
-    val root = if (rootDir.nonEmpty) rootDir
-      else java.nio.file.Files.createTempDirectory("graft_mediagrow").toString
-    val stream = orderedGroupStream(s, groups, root)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maybeCompactGrow(s, root, batchId, compactEvery)
-        releasingBatchCaches(s) {
-          val earlier = committedGrowDirs(root, batchId)
-          M.withMediaSurvivors(batch, index) { survBase =>
-            val kept = (if (earlier.isEmpty) survBase
-              else {
-                val grownSigs = s.read.parquet(earlier: _*)
-                  .withColumn("sigv", M.mediaSigStruct)
-                  .select("sigv").distinct()
-                survBase.withColumn("sigv", M.mediaSigStruct)
-                  .join(broadcast(grownSigs), Seq("sigv"), "left_anti")
-                  .drop("sigv")
-              }).persist()
-            kept.select("doc_id", "nbytes")
-              .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-            // the MERGE: survivors' decoded signatures join the store
-            // before the next batch's verdicts are computed
-            kept.write.mode("overwrite").parquet(s"$root/grow/batch_b$batchId")
-          }
-          ()
-        }
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally { q.stop(); index.unpersist() }
-    s.read.parquet(s"$root/kept/batch_b*")
+    val root = growRoot(rootDir, "graft_mediagrow")
+    runDoor(s, root, ordered(groups), Seq(index.bands, index.sigs),
+        compactEvery) { (batch, batchId) =>
+      val earlier = committedGrowDirs(root, batchId)
+      val survBase = M.mediaSurvivors(M.decodedSig(batch).persist(), index)
+      val kept = (if (earlier.isEmpty) survBase
+        else {
+          val grownSigs = s.read.parquet(earlier: _*)
+            .withColumn("sigv", M.mediaSigStruct)
+            .select("sigv").distinct()
+          survBase.withColumn("sigv", M.mediaSigStruct)
+            .join(broadcast(grownSigs), Seq("sigv"), "left_anti")
+            .drop("sigv")
+        }).persist()
+      // the MERGE: survivors' decoded signatures join the store before
+      // the next batch's verdicts are computed
+      Landing(kept.select("doc_id", "nbytes"), Some(kept))
+    }
   }
 
   /** The growth pattern extended to the exact-FINGERPRINT store: each
@@ -2020,35 +1831,19 @@ object Streaming {
       compactEvery: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val T = graft.operators.Text
-    val root = if (rootDir.nonEmpty) rootDir
-      else java.nio.file.Files.createTempDirectory("graft_fpgrow").toString
-    val stream = orderedGroupStream(s, groups, root)
-    val doSpread = spreadArrivals(s, s"$root/src")
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maybeCompactGrow(s, root, batchId, compactEvery)
-        releasingBatchCaches(s) {
-          val earlier = committedGrowDirs(root, batchId)
-          val grow = if (earlier.isEmpty) baseFp.select("fp")
-            else baseFp.select("fp")
-              .unionByName(s.read.parquet(earlier: _*))
-          // single-file batch → spread before the CPU-bound battery
-          // (the lang-door finding, SCALE.md round-15)
-          val kept = T.batteryKeptDocs(spreadBatch(batch, doSpread))
-            .select("doc_id", "fp")
-            .join(grow, Seq("fp"), "left_anti")
-            .persist()
-          kept.select("doc_id", "fp")
-            .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-          kept.select("fp").distinct()
-            .write.mode("overwrite").parquet(s"$root/grow/batch_b$batchId")
-        }
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(s"$root/kept/batch_b*")
+    val root = growRoot(rootDir, "graft_fpgrow")
+    runDoor(s, root, ordered(groups), compactEvery = compactEvery) {
+      (batch, batchId) =>
+        val earlier = committedGrowDirs(root, batchId)
+        val grow = if (earlier.isEmpty) baseFp.select("fp")
+          else baseFp.select("fp")
+            .unionByName(s.read.parquet(earlier: _*))
+        val kept = T.batteryKeptDocs(batch)
+          .select("doc_id", "fp")
+          .join(grow, Seq("fp"), "left_anti")
+          .persist()
+        Landing(kept, Some(kept.select("fp").distinct()))
+    }
   }
 
   /** The growth pattern extended to the SPAN store (Lee et al. 2021
@@ -2068,111 +1863,76 @@ object Streaming {
       compactEvery: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val T = graft.operators.Text
-    val root = if (rootDir.nonEmpty) rootDir
-      else java.nio.file.Files.createTempDirectory("graft_spangrow").toString
+    val root = growRoot(rootDir, "graft_spangrow")
     // one count at door setup (the store is the caller-persisted compact
     // frame): the per-batch prune decision compares it to the batch
     val baseN = base.count()
-    val stream = orderedGroupStream(s, groups, root)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maybeCompactGrow(s, root, batchId, compactEvery)
-        releasingBatchCaches(s) {
-          val earlier = committedGrowDirs(root, batchId)
-          val grow = if (earlier.isEmpty) base
-            else base.unionByName(s.read.parquet(earlier: _*))
-          // span-hash the batch ONCE; both the profile join and the
-          // store append read the cached frame (released by
-          // releasingBatchCaches)
-          val arrival = T.spanHashes(batch)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val arrivalN = arrival.count()
-          // the store the profile actually joins = base ∪ grow dirs, so
-          // the prune decision must count BOTH (gating on baseN alone
-          // never engages for a door started on a small/empty base even
-          // after the grow dirs dwarf every batch — round-14 review).
-          // Footer counts are read DRIVER-SIDE (round-16): the count is
-          // parquet footer metadata, and the old `read.parquet.count()`
-          // paid a full Spark job round per micro-batch for it.
-          val storeN = baseN +
-            (if (earlier.isEmpty) 0L else parquetFooterRows(s, earlier))
-          // bloom-prune the store side by the batch's span set BEFORE
-          // the joins (round-13 verdict task 4) — ADAPTIVELY: the prune
-          // pays one extra batch pass (the bloom fold) to cut the
-          // store-side shuffle to might-match rows, so it is engaged
-          // only in the STORE-DOMINANT regime (store > 4× batch spans —
-          // the 100 TB ingest shape, where the persisted base dwarfs a
-          // day's crawl; measured warm 1.84 → 0.65 s on a 17.6M-span
-          // content-disjoint store vs a 28k-span batch, SCALE.md
-          // round-14). The dup-heavy smoke corpora invert the ratio
-          // (replica collapse keeps the DISTINCT store tiny while raw
-          // batch spans scale with the corpus), and there the bloom is
-          // pure overhead — measured +28% on the 64× door — so the
-          // batch-dominant path keeps the plain join. Both paths are
-          // result-identical (no false negatives; the transparency law).
-          val storeDominant = storeN > 4L * arrivalN
-          val pruned = (if (storeDominant)
-              T.bloomPruneSpans(arrival, grow, knownDeltaRows = arrivalN)
-            else grow)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // size the join side by a BOUND instead of an exact count
-          // (round-16: the count was one more full job per micro-batch;
-          // the persist now fills lazily inside the profile write job).
-          // Store-dominant: the bloom keeps true matches (≤ the batch's
-          // span rows) + false positives (≤ storeN × ~0.05% at 16
-          // bits/item — padded to storeN/500 here); batch-dominant: the
-          // un-pruned store is exactly storeN rows, known driver-side.
-          // The bound only picks broadcast-vs-shuffle — either plan is
-          // result-identical — and stays under the same 1M-row ceiling
-          // (~70 MB hashed relation) as the round-14 form.
-          val prunedEst =
-            if (storeDominant) arrivalN + storeN / 500L + 1L else storeN
-          val storeSide = if (prunedEst <= 1000000L) broadcast(pruned)
-            else pruned
-          T.spanProfileOfSpans(arrival, storeSide)
-            .select(col("doc_id"), col("n_spans"),
-              col("n_base_dup_spans").as("n_dup_spans"),
-              col("base_dup_ratio").as("dup_ratio"))
-            .write.mode("overwrite").parquet(s"$root/out/batch_b$batchId")
-          // append only the NOT-YET-SEEN spans: the profile is a COUNT
-          // of matches, so the grow union must stay a SET — a span in
-          // both base and an earlier dir would double every later match
-          // (caught by the sf0.1 oracle: one doc read 116 vs the true
-          // 58). In the store-dominant regime the anti-join is
-          // batch-sized on BOTH sides (store side bloom-pruned); base
-          // and the dirs stay pairwise disjoint by construction, so no
-          // per-batch distinct over the whole store is ever needed.
-          arrival.select("gh").distinct()
-            .join(storeSide, Seq("gh"), "left_anti")
-            .write.mode("overwrite").parquet(s"$root/grow/batch_b$batchId")
-        }
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(s"$root/out/batch_b*")
-  }
-
-  /** Per-micro-batch cache hygiene for doors whose batch work persists
-    * frames it cannot reach (the IVF assigners' `assigned`, the
-    * containment PPJoin's toks/sets — each documented for the harness's
-    * per-query clearCache, which a LONG-LIVED stream never runs): runs
-    * `body`, then releases every cache created inside it — the
-    * withNearDupSurvivors loan generalized from one frame to a cache
-    * snapshot diff. Long-lived stores built BEFORE the stream (seeds,
-    * base members, IVF index, band/gram stores) predate the snapshot
-    * and survive. Releases the RDD blocks directly (the storage the
-    * leak is made of); the CacheManager's plan-level entries linger as
-    * metadata until the harness clearCache, which is the acceptable
-    * residue.
-    */
-  private def releasingBatchCaches[T](s: SparkSession)(body: => T): T = {
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    try body finally {
-      val after = s.sparkContext.getPersistentRDDs
-      (after.keySet -- before).foreach(id =>
-        after.get(id).foreach(_.unpersist(blocking = false)))
+    runDoor(s, root, ordered(groups), compactEvery = compactEvery) {
+      (batch, batchId) =>
+        val earlier = committedGrowDirs(root, batchId)
+        val grow = if (earlier.isEmpty) base
+          else base.unionByName(s.read.parquet(earlier: _*))
+        // span-hash the batch ONCE; both the profile join and the
+        // store append read the cached frame (released by the runner)
+        val arrival = T.spanHashes(batch)
+          .persist(MemoryAndDisk)
+        val arrivalN = arrival.count()
+        // the store the profile actually joins = base ∪ grow dirs, so
+        // the prune decision must count BOTH (gating on baseN alone
+        // never engages for a door started on a small/empty base even
+        // after the grow dirs dwarf every batch — round-14 review).
+        // Footer counts are read DRIVER-SIDE (round-16): the count is
+        // parquet footer metadata, and the old `read.parquet.count()`
+        // paid a full Spark job round per micro-batch for it.
+        val storeN = baseN +
+          (if (earlier.isEmpty) 0L else parquetFooterRows(s, earlier))
+        // bloom-prune the store side by the batch's span set BEFORE
+        // the joins (round-13 verdict task 4) — ADAPTIVELY: the prune
+        // pays one extra batch pass (the bloom fold) to cut the
+        // store-side shuffle to might-match rows, so it is engaged
+        // only in the STORE-DOMINANT regime (store > 4× batch spans —
+        // the 100 TB ingest shape, where the persisted base dwarfs a
+        // day's crawl; measured warm 1.84 → 0.65 s on a 17.6M-span
+        // content-disjoint store vs a 28k-span batch, SCALE.md
+        // round-14). The dup-heavy smoke corpora invert the ratio
+        // (replica collapse keeps the DISTINCT store tiny while raw
+        // batch spans scale with the corpus), and there the bloom is
+        // pure overhead — measured +28% on the 64× door — so the
+        // batch-dominant path keeps the plain join. Both paths are
+        // result-identical (no false negatives; the transparency law).
+        val storeDominant = storeN > 4L * arrivalN
+        val pruned = (if (storeDominant)
+            T.bloomPruneSpans(arrival, grow, knownDeltaRows = arrivalN)
+          else grow)
+          .persist(MemoryAndDisk)
+        // size the join side by a BOUND instead of an exact count
+        // (round-16: the count was one more full job per micro-batch;
+        // the persist now fills lazily inside the profile write job).
+        // Store-dominant: the bloom keeps true matches (≤ the batch's
+        // span rows) + false positives (≤ storeN × ~0.05% at 16
+        // bits/item — padded to storeN/500 here); batch-dominant: the
+        // un-pruned store is exactly storeN rows, known driver-side.
+        // The bound only picks broadcast-vs-shuffle — either plan is
+        // result-identical — and stays under the same 1M-row ceiling
+        // (~70 MB hashed relation) as the round-14 form.
+        val prunedEst =
+          if (storeDominant) arrivalN + storeN / 500L + 1L else storeN
+        val storeSide = if (prunedEst <= 1000000L) broadcast(pruned)
+          else pruned
+        val profile = T.spanProfileOfSpans(arrival, storeSide)
+          .select(col("doc_id"), col("n_spans"),
+            col("n_base_dup_spans").as("n_dup_spans"),
+            col("base_dup_ratio").as("dup_ratio"))
+        // append only the NOT-YET-SEEN spans: the profile is a COUNT
+        // of matches, so the grow union must stay a SET — a span in
+        // both base and an earlier dir would double every later match
+        // (caught by the sf0.1 oracle: one doc read 116 vs the true
+        // 58). In the store-dominant regime the anti-join is
+        // batch-sized on BOTH sides (store side bloom-pruned); base
+        // and the dirs stay pairwise disjoint by construction, so no
+        // per-batch distinct over the whole store is ever needed.
+        Landing(profile, Some(arrival.select("gh").distinct()
+          .join(storeSide, Seq("gh"), "left_anti")))
     }
   }
 
@@ -2188,98 +1948,46 @@ object Streaming {
     */
   def streamPretrainSegments(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val T = graft.operators.Text
     // ALL three ingest-time artifacts are read once and cached for the
     // stream's lifetime (round-16: the fp store and the tokenizer vocab
     // view were re-read from parquet by EVERY micro-batch — only the
     // symtab was persisted). The caches fill lazily inside batch 0's
     // first job; no eager count jobs at setup.
-    val baseFp = T.ensurePretrainFpStore(s, dir).persist(sl)
-    val symtab = T.ensurePretrainSymtabStore(s, dir).persist(sl)
-    val vocab = T.cleanTokenizerVocab(s, dir).persist(sl)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_pretrainstream").toString
-    val src = s"$root/src"
-    // 4 deterministic ingest groups (doc_id % 4), one file each: with
-    // maxFilesPerTrigger=1 each micro-batch carries one group — and
-    // because packing keys on the DATA-derived group, a replay or a
-    // file-merged batch still rewrites the identical per-group segments.
-    // Written as ONE single-task partitionBy job (round-16: the per-group
-    // loop paid 4 scan+write jobs for the same bytes), then each group's
-    // file moves under src/ with ascending mtimes — the
-    // orderedGroupStream convention; membership is identical because the
-    // partition column IS the data-derived group id (stripped from the
-    // file contents by partitionBy, exactly like the old per-group
-    // writes). An empty group writes no file and so no micro-batch —
-    // same output either way (an empty batch packs nothing).
+    val baseFp = T.ensurePretrainFpStore(s, dir).persist(MemoryAndDisk)
+    val symtab = T.ensurePretrainSymtabStore(s, dir).persist(MemoryAndDisk)
+    val vocab = T.cleanTokenizerVocab(s, dir).persist(MemoryAndDisk)
+    val root = tempRoot("graft_pretrainstream")
+    // 4 deterministic ingest groups (doc_id % 4), one file each: each
+    // micro-batch carries one group — and because packing keys on the
+    // DATA-derived group, a replay or a file-merged batch still rewrites
+    // the identical per-group segments (an empty group's batch packs
+    // nothing).
     val delta = T.pretrainDeltaDocs(s, dir)
-    val stage = s"$root/stage"
-    delta.withColumn("gid", pmod(col("doc_id"), lit(4L)))
-      .coalesce(1)
-      .write.partitionBy("gid").mode("overwrite").parquet(stage)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    (0 until 4).foreach { g =>
-      val gdir = new java.io.File(s"$stage/gid=$g")
-      if (gdir.isDirectory) {
-        val part = gdir.listFiles()
-          .filter(_.getName.endsWith(".parquet")).headOption
-        part.foreach { f =>
-          val dst = new java.io.File(s"$src/g$g.parquet")
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.move(f.toPath, dst.toPath)
-          require(dst.setLastModified(t0 + g * 60000L),
-            s"could not order source file mtimes at $dst")
-        }
+    runStream(s, root, Ordered(delta.withColumn(GroupCol, pmod(col("doc_id"), lit(4L))), 4),
+        Seq(baseFp, symtab, vocab)) { (batch, _) =>
+      val kept = T.batteryKeptDocs(batch)
+        .join(baseFp, Seq("fp"), "left_anti") // exact-dedup vs the base
+        .select("doc_id", "w")
+      val encoded = T.encodeWithVocab(kept, vocab, symtab)
+        .withColumn("gid", pmod(col("doc_id"), lit(4L)))
+        .persist(MemoryAndDisk)
+      // present groups: <= 4 rows, driver-bounded metadata (one group
+      // per batch in normal operation; several only on a merged replay)
+      val gids = encoded.select("gid").distinct()
+        .collect().map(_.getLong(0)).sorted
+      gids.foreach { g =>
+        // persistInput = false: `encoded` above is the cache — a
+        // packedSegmentsOf-internal persist would only add a copy
+        T.packedSegmentsOf(
+            encoded.filter(col("gid") === g)
+              .select("doc_id", "ids", "n_tokens"),
+            shardBase = g * 1000000L, persistInput = false)
+          .withColumn("ingest_group", lit(g))
+          .write.mode("overwrite").parquet(s"$root/out/group_g$g")
       }
     }
-    // an ENTIRELY empty delta writes no partition dirs at all — keep the
-    // old per-group writer's "empty src file" shape so the stream setup
-    // below still resolves (the final seg/group_g* read is empty-glob
-    // either way)
-    if (!new java.io.File(src).exists())
-      delta.limit(0).coalesce(1).write.mode("overwrite").parquet(src)
-    val doSpread = spreadArrivals(s, src)
-    val stream = s.readStream.schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        releasingBatchCaches(s) {
-        // one micro-batch = one coalesced group file = one scan task;
-        // the battery + encode are CPU-bound per-row work, so spread
-        // the batch across the box first (the lang-door finding,
-        // SCALE.md round-15; same fix as the repetition/quality doors)
-        val kept = T.batteryKeptDocs(spreadBatch(batch, doSpread))
-          .join(baseFp, Seq("fp"), "left_anti") // exact-dedup vs the base
-          .select("doc_id", "w")
-        val encoded = T.encodeWithVocab(kept, vocab, symtab)
-          .withColumn("gid", pmod(col("doc_id"), lit(4L)))
-          .persist(sl)
-        // present groups: <= 4 rows, driver-bounded metadata (one group
-        // per batch in normal operation; several only on a merged replay)
-        val gids = encoded.select("gid").distinct()
-          .collect().map(_.getLong(0)).sorted
-        gids.foreach { g =>
-          // persistInput = false: `encoded` above is the cache (released
-          // right below) — packedSegmentsOf's internal persist would be
-          // unreachable and leak one cached frame per (batch, group)
-          T.packedSegmentsOf(
-              encoded.filter(col("gid") === g)
-                .select("doc_id", "ids", "n_tokens"),
-              shardBase = g * 1000000L, persistInput = false)
-            .withColumn("ingest_group", lit(g))
-            .write.mode("overwrite").parquet(s"$root/seg/group_g$g")
-        }
-        encoded.unpersist()
-        }
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop(); symtab.unpersist(); baseFp.unpersist(); vocab.unpersist()
-    }
-    s.read.parquet(s"$root/seg/group_g*")
+    s.read.parquet(s"$root/out/group_g*")
   }
 
   /** The semantic ingest door (SemDeDup at the door), parameterized by
@@ -2295,7 +2003,7 @@ object Streaming {
     * against hyperplane-band collisions verified at the same tau — the
     * band store is built ONCE beside the cluster store, and per-batch
     * band work rides the batch (code + band explode) plus collision
-    * volume. Survivors land batchId-keyed (idempotent under replay).
+    * volume. Survivors land batchId-keyed.
     * Per-batch cost is O(batch × k + probes × batch × cluster_width
     * [+ batch × band collisions]) — the base is touched only through
     * the cluster- (and band-) keyed joins, never rescanned whole. Each
@@ -2313,14 +2021,13 @@ object Streaming {
     require(probes == 2 || probes == 3,
       s"probes $probes: the door's measured ladder is x2 (default) / x3")
     graft.functions.GraftFunctions.register(s)
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = graft.Tables(s, dir, "embeddings").select("vec_id", "embedding")
     val baseEmb = e.filter(col("vec_id") % 2 === 0)
-    // persisted across the 4 micro-batches: every batch re-uses the
+    // persisted across the micro-batches: every batch re-uses the
     // same seed broadcast and cluster-assigned base member store
     val nBase = baseEmb.count()
     val k = graft.operators.Dedup.semanticK(nBase)
-    val seeds = graft.operators.Dedup.semanticSeedsK(baseEmb, k).persist(sl)
+    val seeds = graft.operators.Dedup.semanticSeedsK(baseEmb, k).persist(MemoryAndDisk)
     // beyond the exact-path threshold, the IVF coarse index is built
     // ONCE beside the persisted seed table and shared by the base
     // assignment and every micro-batch (round-11 ADVICE: without this
@@ -2333,7 +2040,7 @@ object Streaming {
       .assignToSeedsAdaptive(baseEmb, seeds, k, ivfIdx)
       .select(col("cluster_id").as("b_cluster"),
         col("embedding").as("b_emb"))
-      .persist(sl)
+      .persist(MemoryAndDisk)
     // band-union mode: the base band store, built once (hyperplane code
     // + adaptive-width band explode — the q_dedup_embedding machinery),
     // plus a base-embedding lookup for the exact cosine verify
@@ -2346,18 +2053,12 @@ object Streaming {
         .select(col("vec_id").as("b_vid"), col("band"), col("bv"))
         .join(baseEmb.select(col("vec_id").as("b_vid"),
           col("embedding").as("b_emb")), Seq("b_vid"))
-        .persist(sl))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_semstream").toString
-    val src = s"$root/src"
-    e.filter(col("vec_id") % 2 === 1)
-      .repartition(doorSplit(s)).write.mode("overwrite").parquet(src)
-    val stream = s.readStream.schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        releasingBatchCaches(s) {
+        .persist(MemoryAndDisk))
+    val stores = Seq(seeds, base) ++ baseBands ++
+      ivfIdx.toSeq.flatMap(i => Seq(i.coarse, i.seedCell))
+    runDoor(s, tempRoot("graft_semstream"),
+        Split(e.filter(col("vec_id") % 2 === 1), doorSplit(s)), stores) {
+      (batch, _) =>
         val asg =
           if (probes == 2) graft.operators.Dedup
             .assignToSeedsTop2Adaptive(batch, seeds, k, ivfIdx)
@@ -2396,18 +2097,8 @@ object Streaming {
               .select("vec_id").distinct()
             dupCluster.unionByName(dupBand).distinct()
         }
-        asg.join(dup, Seq("vec_id"), "left_anti")
-          .select("vec_id")
-          .write.mode("overwrite").parquet(s"$root/kept/batch_b$batchId")
-        }
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop(); seeds.unpersist(); base.unpersist()
-      ivfIdx.foreach(_.unpersist()); baseBands.foreach(_.unpersist())
+        Landing(asg.join(dup, Seq("vec_id"), "left_anti").select("vec_id"))
     }
-    s.read.parquet(s"$root/kept/batch_b*")
   }
 
   /** Same SQL as the batch twins' oracles (q_sessionize / q_time_bucket). */
@@ -3204,6 +2895,15 @@ object Streaming {
       .toDF()
   }
 
+  /** Gap-based sessionization (30 min) with explicit state — the streaming
+    * twin of q_sessionize. State per user: (#closed sessions, current
+    * session (start, end, count)). ProcessingTimeTimeout flushes the open
+    * session when the group goes quiet.
+    *
+    * Within one invocation events are sorted by (sec, event_id) — same
+    * total order as the batch window — so on a replayed bounded source the
+    * emitted sessions match the batch query exactly.
+    */
   def sessionize(events: Dataset[Ev], gapSeconds: Long = 1800): DataFrame = {
     import events.sparkSession.implicits._
 

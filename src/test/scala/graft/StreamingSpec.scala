@@ -268,6 +268,34 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/batch=*").count() === expected)
   }
 
+  test("law: the per-batch release spares caches registered before the body") {
+    // a Dataset.persist() reaches getPersistentRDDs only when first
+    // computed, so to an RDD-id diff alone a store persisted before a
+    // door's stream and first computed in batch 0 looks like a batch
+    // cache, and would lose its blocks after batch 0
+    val sc = spark.sparkContext
+    val pre = spark.range(0, 4000, 1, 4).toDF("id").persist()
+    val before = sc.getPersistentRDDs.keySet
+    var preIds = Set.empty[Int]
+    var bodyIds = Set.empty[Int]
+    try {
+      Streaming.releasingBatchCaches(spark) {
+        assert(pre.count() === 4000L) // first computation, inside the body
+        preIds = sc.getPersistentRDDs.keySet.toSet -- before
+        val inner = spark.range(0, 4000, 1, 4).toDF("id")
+          .filter(col("id") % 3 === 0).persist()
+        assert(inner.count() === 1334L)
+        bodyIds = sc.getPersistentRDDs.keySet.toSet -- before -- preIds
+      }
+      assert(preIds.nonEmpty && bodyIds.nonEmpty)
+      val live = sc.getPersistentRDDs.keySet
+      assert(preIds.subsetOf(live), "a cache registered before the body was released")
+      assert(sc.getRDDStorageInfo.filter(i => preIds(i.id))
+        .map(_.numCachedPartitions).sum === 4, "the pre-body cache lost blocks")
+      assert(bodyIds.intersect(live).isEmpty, "a cache created in the body survived")
+    } finally { pre.unpersist(); spark.catalog.clearCache() }
+  }
+
   test("q_stream_neardup_filter: survivor set is batch-split-invariant and complete") {
     // each doc's verdict depends only on itself vs the base store, so the
     // 4-micro-batch streaming run must equal a single-batch run of the
@@ -972,10 +1000,16 @@ class StreamingSpec extends SparkSpec {
       (200L, doc(mm.reverse, 37)), (201L, doc(mm.tail, 43)),
       (202L, doc(mm, 29)))
       .toDF("doc_id", "text")
-    val kept = Streaming.langFilterDoor(spark, arrivals,
+    val keptDf = Streaming.langFilterDoor(spark, arrivals,
       graft.operators.LangId.trainProfiles(train), Seq("aa"))
-      .as[(Long, String)].collect().toSet
+    val kept = keptDf.as[(Long, String)].collect().toSet
     assert(kept === Set((100L, "aa"), (101L, "aa"), (102L, "aa")))
+    // an accept set no arrival wins lands only row-less batch dirs: the
+    // door returns a schema-correct empty frame, not a read failure
+    val none = Streaming.langFilterDoor(spark, arrivals,
+      graft.operators.LangId.trainProfiles(train), Seq("zz"))
+    assert(none.schema.fieldNames.toSeq === keptDf.schema.fieldNames.toSeq)
+    assert(none.isEmpty)
   }
 
   test("langRouteDoor: planted two-language arrivals fan out exactly; empty partitions are schema-safe") {
@@ -1324,6 +1358,27 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.subsetOf(p2), "union kept a vector the 2-probe dropped")
     assert(streamed.size < p2.size,
       "band arm caught no dup the cluster probes missed on this fixture")
+  }
+
+  test("q_stream_upsert: merged serving table equals the batch count + latest row per user") {
+    // counts ADD and latest is the struct MAX on the unique (ts,
+    // event_id) order, so the 4-micro-batch versioned merge must equal
+    // the one-shot "count + newest event per user" over all events
+    val streamed = Streaming.queries("q_stream_upsert")(spark, sf0001)
+      .collect().map(_.toSeq).toSet
+    val ev = Tables(spark, sf0001, "events")
+    val newest = org.apache.spark.sql.expressions.Window
+      .partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
+    val batch = ev.groupBy("user_id").agg(count(lit(1)).as("n_events"))
+      .join(ev.withColumn("rn", row_number().over(newest))
+        .filter(col("rn") === 1)
+        .select(col("user_id"), col("ts").cast("timestamp_ntz").as("last_ts"),
+          col("event_type").as("last_type"), col("value").as("last_value")),
+        "user_id")
+      .select("user_id", "n_events", "last_ts", "last_type", "last_value")
+      .collect().map(_.toSeq).toSet
+    assert(streamed === batch)
+    assert(streamed.size === ev.select("user_id").distinct().count())
   }
 
   test("q_stream_topk: merged count grid yields exactly the batch top-3 per hour") {
