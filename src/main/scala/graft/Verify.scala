@@ -26,14 +26,14 @@ object Verify {
       operators.Text.assertLineDedupKeysInjective(spark, sfDir)
     // The semantic-dedup oracles assume the EXACT assignment path
     // (bit-identical to DuckDB); if a fixture ever grows past the
-    // threshold the adaptive assigner would silently flip to approximate
+    // threshold Dedup.seedSearch would silently flip to approximate
     // IVF — fail loudly at the switch instead of surfacing as a bare
     // hash mismatch (round-11 ADVICE). Guarded at each query's OWN
     // flip point: q_dedup_semantic assigns the full corpus
     // (k = semanticK(n)); the door family assigns its base HALF
     // (k = semanticK(n/2) — guarding on the full count would abort
     // oracle-green runs); q_dedup_semantic_recall needs no guard (its
-    // assignToSeedsTop3 is exact at any k).
+    // top-3 assignToSeeds runs the default Exact search at any k).
     def guardExactAssign(queries: Set[String], nVecs: => Long): Unit =
       if (selected.keySet.exists(queries)) {
         val n = nVecs

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -125,22 +126,23 @@ object Dedup {
   }
 
   /** Ingest-time near-dup filter for ONE delta batch against the
-    * persisted base signature store: tokenize only the batch (norm →
-    * hashed 3-grams → 64-perm MinHash), band-join against the base
-    * bands, exact-verify candidates on gram-set Jaccard, and anti-join
-    * the verified dup ids away. Work per batch is
-    * O(batch + collisions) — the base corpus is touched only through
-    * its compact (doc_id, grams, sig) store, never re-read as text —
-    * which is what makes dedup-at-ingest viable when the base is 100 TB
-    * and the delta is a day's crawl. Docs under 3 tokens have no grams,
-    * generate no candidates, and survive by construction (same contract
-    * as the batch family's `len(w) >= 3` gram filter).
-    */
-  /** Survivor set given the batch's PERSISTED gram frame (bands + verify
-    * both read it, so the caller persists it once per batch). Public for
-    * the GROWING near-dup door (Streaming.nearDupGrowDoor) and its
-    * sequential-fold law; if `withG` already carries a `sig` column the
-    * bands reuse it instead of folding the 64 permutations a second time.
+    * persisted base signature store: the batch's gram frame `withG`
+    * (norm → hashed 3-grams, [[batchGrams]]) is MinHash-banded and
+    * band-joined against the base bands, candidates are exact-verified
+    * on gram-set Jaccard, and the verified dup ids are anti-joined away.
+    * Work per batch is O(batch + collisions) — the base corpus is
+    * touched only through its compact (doc_id, grams, sig) store, never
+    * re-read as text — which is what makes dedup-at-ingest viable when
+    * the base is 100 TB and the delta is a day's crawl. Docs under 3
+    * tokens have no grams, generate no candidates, and survive by
+    * construction (same contract as the batch family's `len(w) >= 3`
+    * gram filter).
+    *
+    * Bands and verify both read `withG`, so the caller persists it once
+    * per batch. Public for the near-dup doors (Streaming) and the
+    * GROWING door's sequential-fold law; if `withG` already carries a
+    * `sig` column the bands reuse it instead of folding the 64
+    * permutations a second time.
     */
   def survivorsFromGrams(batchDocs: DataFrame, withG: DataFrame,
       base: DataFrame, threshold: Double): DataFrame = {
@@ -171,16 +173,6 @@ object Dedup {
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"), call_function("ngram_hashes", col("w")).as("grams"))
   }
-
-  /** One-shot variant: no caching at all, so a long-lived session can't
-    * leak per-batch gram frames (the tokenize runs once per consumer of
-    * the survivor frame instead). Repeated/batched callers should use
-    * [[withNearDupSurvivors]], which persists the grams for the duration
-    * of `use` and then unpersists exactly that frame.
-    */
-  def nearDupSurvivors(batchDocs: DataFrame, base: DataFrame,
-      threshold: Double = 0.7): DataFrame =
-    survivorsFromGrams(batchDocs, batchGrams(batchDocs), base, threshold)
 
   /** Loan-pattern variant for long-lived sessions (the streaming
     * foreachBatch sink): runs `use` on the survivor frame, then
@@ -243,73 +235,172 @@ object Dedup {
       .limit(k)
       .select(col("vec_id").as("seed_id"), col("embedding").as("s_emb"))
 
-  /** Nearest-seed assignment of `e` against a seed table: broadcast
-    * cross join + per-vector max — map-only over the corpus.
+  /** Per-group argmax of `score`, ties broken to the SMALLER `id` — the
+    * oracle's ORDER BY score DESC, id (ties are never observed on real
+    * doubles, but the DedupSpec tie law plants one). The struct's
+    * fields are `score`'s column name and `neg_id`.
     */
-  def assignToSeeds(e: DataFrame, seeds: DataFrame): DataFrame =
-    e.crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("embedding"), col("seed_id"),
-        call_function("cosine_sim", col("embedding"), col("s_emb")).as("ccos"))
-      .groupBy("vec_id")
-      // ties (never observed on real doubles) break to the SMALLER seed
-      // id, matching the oracle's ORDER BY ccos DESC, seed_id
-      .agg(max_by(struct(col("ccos"), (-col("seed_id")).as("neg_seed")),
-          struct(col("ccos"), -col("seed_id"))).as("best"),
-        first(col("embedding")).as("embedding"))
-      .select(col("vec_id"), col("embedding"),
-        (-col("best.neg_seed")).as("cluster_id"),
-        col("best.ccos").as("centroid_cos"))
+  private def argMax(score: String, id: String): Column =
+    max_by(struct(col(score), (-col(id)).as("neg_id")),
+      struct(col(score), -col(id)))
 
-  /** IVF two-level nearest-seed assignment — the MEASURED mitigation
-    * for the superlinear-assignment edge (a banded hyperplane-code
-    * variant was measured and rejected: 1.6× faster than exact at 64×
-    * with 0.50 agreement — SCALE.md round-11). Self-similar
-    * design: the seed table gets its own coarse layer (an md5-subsample
-    * of ~√k seeds, the family's sampling idiom), every seed is exactly
-    * assigned to its nearest coarse cell (k × √k — index build), and a
-    * vector scores √k coarse centers + the seeds of its top-`probes`
-    * cells (~probes·√k) instead of all k: per-vector work drops from k
-    * to ~(1+probes)·√k. Approximation surface: the true nearest seed
-    * may live outside the probed coarse cells — the same
-    * boundary-straddle SemDeDup itself accepts, now in seed space with
-    * a 2-probe. Measured agreement/recall/wall-time in SCALE.md
-    * (round-11, sub-quadratic seed assignment). Production wiring: the oracled
-    * q_dedup_semantic and the streaming door use the ADAPTIVE wrappers
-    * below — exact (bit-identical to every oracle) while
-    * k <= [[ExactAssignMaxSeeds]], this path beyond.
+  /** Output column of the `r`-th nearest seed. */
+  private def rankCol(r: Int): String =
+    if (r == 1) "cluster_id" else s"cluster${r}_id"
+
+  private def seedCos: Column =
+    call_function("cosine_sim", col("embedding"), col("s_emb"))
+
+  /** Where [[assignToSeeds]] looks for a vector's nearest seeds. */
+  sealed trait SeedSearch {
+    /** This search without the top-1 occupancy cap — what a caller
+      * asking for `top` > 1 passes.
+      */
+    def uncapped: SeedSearch = this
+  }
+
+  /** Every seed is a candidate: one broadcast pass per rank. */
+  case object Exact extends SeedSearch
+
+  /** IVF two-level search over a prebuilt [[IvfSeedIndex]]: a vector
+    * scores the √k coarse centers, then only the seeds of its
+    * top-`probes` cells. `cap` bounds each top-1 cluster's occupancy
+    * (see [[assignToSeeds]]).
     */
-  def assignToSeedsIvf(e: DataFrame, seeds: DataFrame,
-      probes: Int = 2, index: Option[IvfSeedIndex] = None): DataFrame = {
-    val sdf = seeds.persist(StorageLevel.MEMORY_AND_DISK)
-    // persisted: `assigned` feeds BOTH the orphan anti-join and the final
-    // union — without it the whole candidate stage (coarse cross join +
-    // window + groupBy, including the k × √k index build) re-runs 2-3×
-    // per call. Like the seed frame it persists for the lifetime of the
-    // returned lazy frame; callers release both via clearCache().
-    val assigned = ivfCandidates(e, sdf, probes, index)
+  final case class Ivf(index: IvfSeedIndex, probes: Int = 2,
+      cap: Option[Int] = None) extends SeedSearch {
+    override def uncapped: SeedSearch = copy(cap = None)
+  }
+
+  /** Nearest-seed assignment — ClusterJoin's one rule (a home pivot plus
+    * replication to the nearby ones): every vector of `e` gets its
+    * `top` nearest seeds by (cosine desc, seed_id asc), as
+    * (vec_id, embedding, cluster_id, centroid_cos[, cluster2_id
+    * [, cluster3_id]]). PRECONDITION: at least `top` seeds — with
+    * fewer, the exclusion filters empty the remainder and every vector
+    * silently drops from the output (the DuckDB recall oracle's rn = 3
+    * inner join mirrors this); `semanticK` floors at 8.
+    *
+    * [[Exact]] is a broadcast cross join plus a per-vector `max_by` —
+    * map-only over the corpus, bit-identical to every oracle. Each rank
+    * beyond the first is one more broadcast pass that excludes the
+    * ranks before it per row (map-side), so its `max_by` is exactly the
+    * next-nearest; per-key aggregation state stays O(1). Rank 2 is the
+    * ingest door's DELTA-side multi-probe (q_stream_semantic_filter): a
+    * near-dup whose base twin sits just across the assignment boundary
+    * is caught by also probing the runner-up cluster, at ×2 cost on the
+    * delta batch only (the base store keeps single assignment). Rank 3
+    * is the ×3 ladder rung (q_dedup_semantic_recall, the p3 door). A
+    * margin-ADAPTIVE 2-probe (swap the runner-up for the 3rd-nearest
+    * when cos1 − cos2 ≥ ε) was measured WORSE than fixed at sf0.1 for
+    * every ε in [0.01, 0.2] (390–417 vs 420 of 920 true pairs caught):
+    * the margin does not predict which neighbor hides a
+    * boundary-straddling dup, so the ladder is ×1/×2/×3 probes
+    * (SCALE.md).
+    *
+    * [[Ivf]] is the MEASURED mitigation for the superlinear-assignment
+    * edge (a banded hyperplane-code variant was measured and rejected:
+    * 1.6× faster than exact at 64× with 0.50 agreement — SCALE.md
+    * round-11): per-vector work drops from k to ~(1+probes)·√k. Its
+    * candidates are ranked once by (ccos desc, seed_id) and ranks
+    * 1..`top` pivoted, so the tie rule is the exact path's; with every
+    * cell probed it equals [[Exact]] (DedupSpec law). Approximation
+    * surface: the true nearest seed may live outside the probed cells —
+    * the boundary-straddle SemDeDup itself accepts, now in seed space.
+    * Vectors with fewer than `top` candidates (a probed cell can be
+    * seedless — cells are occupancy-skewed) fall back to the exact
+    * path. The seed frame and the ranked frame persist for the
+    * result's lifetime (the ranked frame feeds both the fallback
+    * anti-join and the union); the harness clearCache or the door
+    * runner's per-batch release frees them.
+    *
+    * `cap` (top-1 only) is the measured mitigation for the IVF flip's
+    * one surprise (SCALE.md round-12): coarse-cell geometry concentrates
+    * assignments into fewer, larger clusters, and the SemDeDup prune
+    * pays sum(cluster²) for it (67.7 s vs the exact arm's 12.8 s at
+    * n = 256k, k = 2000). Capping a cluster at `cap` members — spilling
+    * its FARTHEST members (lowest centroid cos, the likeliest
+    * misassignments) to their runner-up seed, re-scored against it —
+    * cut that prune to 25.8 s at identical end-to-end quality (keep
+    * agreement 0.993, removal recall 0.996, ~1% of vectors spilled at
+    * cap = 512 = 4× the n/128 design width). The occupancy window
+    * partitions by cluster (bounded by occupancy, never corpus-grain).
+    * Law: all cells probed + cap ≥ n degenerates to exact (DedupSpec).
+    */
+  def assignToSeeds(e: DataFrame, seeds: DataFrame, top: Int = 1,
+      search: SeedSearch = Exact): DataFrame = search match {
+    case Exact => exactTop(e, seeds, top)
+    case Ivf(index, probes, None) => ivfTop(e, seeds, top, index, probes)
+    case Ivf(index, probes, Some(cap)) =>
+      require(top == 1, s"top $top with cap $cap: the occupancy cap " +
+        "spills to the runner-up, so it applies to top-1 assignment only")
+      val top2 = ivfTop(e, seeds, 2, index, probes)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val ranked = top2.withColumn("rk", row_number().over(
+          Window.partitionBy("cluster_id")
+            .orderBy(col("centroid_cos").desc, col("vec_id"))))
+        .withColumn("fin",
+          when(col("rk") <= cap, col("cluster_id"))
+            .otherwise(col("cluster2_id")))
+      // the seeds join is k-bounded and Catalyst broadcasts it while small
+      ranked.join(seeds, ranked("fin") === seeds("seed_id"))
+        .select(col("vec_id"), col("embedding"),
+          col("fin").as("cluster_id"),
+          when(col("rk") <= cap, col("centroid_cos"))
+            .otherwise(seedCos).as("centroid_cos"))
+  }
+
+  private def exactTop(e: DataFrame, seeds: DataFrame, top: Int): DataFrame = {
+    val nearest = e.crossJoin(broadcast(seeds))
+      .select(col("vec_id"), col("embedding"), col("seed_id"), seedCos.as("ccos"))
       .groupBy("vec_id")
-      .agg(max_by(struct(col("ccos"), (-col("seed_id")).as("neg_seed")),
-          struct(col("ccos"), -col("seed_id"))).as("best"),
+      .agg(argMax("ccos", "seed_id").as("best"),
         first(col("embedding")).as("embedding"))
       .select(col("vec_id"), col("embedding"),
-        (-col("best.neg_seed")).as("cluster_id"),
+        (-col("best.neg_id")).as("cluster_id"),
         col("best.ccos").as("centroid_cos"))
+    (2 to top).foldLeft(nearest) { (acc, r) =>
+      val cols = acc.columns.toSeq
+      val carried = cols.filterNot(_ == "vec_id")
+      acc.crossJoin(broadcast(seeds))
+        .filter((1 until r).map(i => col("seed_id") =!= col(rankCol(i))).reduce(_ && _))
+        .select(cols.map(col) :+ col("seed_id") :+ seedCos.as("ccos"): _*)
+        .groupBy("vec_id")
+        .agg(first(col(carried.head)).as(carried.head),
+          carried.tail.map(c => first(col(c)).as(c)) :+
+            argMax("ccos", "seed_id").as("best"): _*)
+        .select(cols.map(col) :+ (-col("best.neg_id")).as(rankCol(r)): _*)
+    }
+  }
+
+  private def ivfTop(e: DataFrame, seeds: DataFrame, top: Int,
+      index: IvfSeedIndex, probes: Int): DataFrame = {
+    val sdf = seeds.persist(StorageLevel.MEMORY_AND_DISK)
+    def at(r: Int, c: String): Column = min(when(col("rn") === r, col(c)))
+    // persisted: feeds BOTH the fallback anti-join and the final union —
+    // without it the whole candidate stage (coarse cross join + windows
+    // + groupBy) re-runs per consumer
+    val assigned = ivfCandidates(e, index, probes)
+      .withColumn("rn", row_number().over(Window.partitionBy("vec_id")
+        .orderBy(col("ccos").desc, col("seed_id"))))
+      .filter(col("rn") <= top)
+      .groupBy("vec_id")
+      .agg(first(col("embedding")).as("embedding"),
+        at(1, "seed_id").as("cluster_id") +: at(1, "ccos").as("centroid_cos") +:
+          (2 to top).map(r => at(r, "seed_id").as(rankCol(r))): _*)
+      .filter(col(rankCol(top)).isNotNull) // < top candidates -> exact path
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // a probed cell can be seedless (cells are occupancy-skewed): those
-    // vectors fall back to the exact broadcast pass — rare by
-    // construction (every seed lives in SOME cell, so ≥1 of the top
-    // cells is usually populated)
     val orphans = e.select("vec_id", "embedding")
       .join(assigned.select("vec_id"), Seq("vec_id"), "left_anti")
     assigned.unionByName(
-      assignToSeeds(orphans, sdf.select(col("seed_id"), col("s_emb"))))
+      exactTop(orphans, sdf.select(col("seed_id"), col("s_emb")), top))
   }
 
-  /** A seed table's one-time coarse IVF index: ~√k coarse centers plus
-    * every seed exactly assigned to its nearest center (the k × √k
-    * build). Both frames are persisted at construction — build ONCE per
-    * seed table and pass to the assigners' `index` parameter when the
-    * same seed table serves many calls (the streaming door's
+  /** A seed table's one-time coarse IVF index: ~√k coarse centers (an
+    * md5-subsample of the seeds, the family's sampling idiom) plus every
+    * seed exactly assigned to its nearest center (the k × √k build).
+    * Both frames are persisted at construction — build ONCE per seed
+    * table and share it across calls (the streaming door's
     * micro-batches; round-11 ADVICE — without this the index rebuilt
     * every batch beyond k = [[ExactAssignMaxSeeds]]). Release with
     * [[IvfSeedIndex.unpersist]] (or the harness clearCache).
@@ -329,280 +420,77 @@ object Dedup {
       .limit(nc)
       .select(col("seed_id").as("c_id"), col("s_emb").as("c_emb"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // index build: every seed exactly assigned to its nearest coarse
-    // cell (k × √k, one-time per seed table)
     val seedCell = sdf.crossJoin(broadcast(coarse))
       .select(col("seed_id"), col("s_emb"), col("c_id"),
         call_function("cosine_sim", col("s_emb"), col("c_emb")).as("sc"))
       .groupBy("seed_id")
-      .agg(max_by(struct(col("sc"), (-col("c_id")).as("nc")),
-          struct(col("sc"), -col("c_id"))).as("b"),
-        first(col("s_emb")).as("s_emb"))
-      .select(col("seed_id"), col("s_emb"), (-col("b.nc")).as("cell"))
+      .agg(argMax("sc", "c_id").as("b"), first(col("s_emb")).as("s_emb"))
+      .select(col("seed_id"), col("s_emb"), (-col("b.neg_id")).as("cell"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     IvfSeedIndex(coarse, seedCell)
   }
 
-  /** The IVF candidate frame both sub-quadratic assigners rank:
-    * (vec_id, embedding, seed_id, ccos) rows restricted to the seeds of
-    * each vector's top-`probes` coarse cells. Coarse layer = an
-    * md5-subsample of ~√k seeds; index build = one exact k × √k pass
-    * (reused when the caller passes a prebuilt [[IvfSeedIndex]]);
-    * per-vector probe work = √k coarse scores + ~probes·√k seed scores.
+  /** The IVF candidate frame: (vec_id, embedding, seed_id, ccos) rows
+    * restricted to the seeds of each vector's top-`probes` coarse cells
+    * — per-vector work √k coarse scores + ~probes·√k seed scores.
     */
-  private def ivfCandidates(e: DataFrame, sdf: DataFrame,
-      probes: Int, prebuilt: Option[IvfSeedIndex]): DataFrame = {
+  private def ivfCandidates(e: DataFrame, idx: IvfSeedIndex,
+      probes: Int): DataFrame = {
     graft.functions.GraftFunctions.register(e.sparkSession)
-    val idx = prebuilt.getOrElse(buildIvfSeedIndex(sdf, sdf.count()))
     // probe: vector → its top-`probes` coarse cells (window over the
     // per-vector nc-row group — bounded by √k, never corpus-grain)
-    val vcells = e.crossJoin(broadcast(idx.coarse))
+    e.crossJoin(broadcast(idx.coarse))
       .select(col("vec_id"), col("embedding"), col("c_id"),
         call_function("cosine_sim", col("embedding"), col("c_emb")).as("vc"))
       .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
-          .orderBy(col("vc").desc, col("c_id"))))
+        Window.partitionBy("vec_id").orderBy(col("vc").desc, col("c_id"))))
       .filter(col("rn") <= probes)
       .select(col("vec_id"), col("embedding"), col("c_id").as("cell"))
-    vcells
       .join(broadcast(idx.seedCell), "cell")
-      .select(col("vec_id"), col("embedding"), col("seed_id"),
-        call_function("cosine_sim", col("embedding"), col("s_emb")).as("ccos"))
-  }
-
-  /** Top-2 variant of [[assignToSeedsIvf]] — the sub-quadratic form of
-    * [[assignToSeedsTop2]] for the ingest door's delta-side multi-probe
-    * at large k: ranks each vector's IVF candidates by (ccos desc,
-    * seed_id) and keeps positions 1 and 2 (identical winner/runner-up
-    * tie semantics to the exact Top2 given candidate coverage — the
-    * DedupSpec all-cells-probed law pins equality). Vectors with fewer
-    * than 2 candidate seeds fall back to the exact Top2 pass.
-    */
-  def assignToSeedsIvfTop2(e: DataFrame, seeds: DataFrame,
-      probes: Int = 2, index: Option[IvfSeedIndex] = None): DataFrame = {
-    val sdf = seeds.persist(StorageLevel.MEMORY_AND_DISK)
-    val ranked = ivfCandidates(e, sdf, probes, index)
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
-          .orderBy(col("ccos").desc, col("seed_id"))))
-      .filter(col("rn") <= 2)
-    // persisted for the same anti-join/union double-read as assignToSeedsIvf
-    val assigned = ranked.groupBy("vec_id")
-      .agg(first(col("embedding")).as("embedding"),
-        min(when(col("rn") === 1, col("seed_id"))).as("cluster_id"),
-        min(when(col("rn") === 1, col("ccos"))).as("centroid_cos"),
-        min(when(col("rn") === 2, col("seed_id"))).as("cluster2_id"))
-      .filter(col("cluster2_id").isNotNull) // < 2 candidates -> exact path
-      .select("vec_id", "embedding", "cluster_id", "centroid_cos",
-        "cluster2_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val orphans = e.select("vec_id", "embedding")
-      .join(assigned.select("vec_id"), Seq("vec_id"), "left_anti")
-    assigned.unionByName(
-      assignToSeedsTop2(orphans, sdf.select(col("seed_id"), col("s_emb"))))
-  }
-
-  /** Top-3 variant of [[assignToSeedsIvf]] — the sub-quadratic form of
-    * [[assignToSeedsTop3]] completing the probe ladder beyond
-    * [[ExactAssignMaxSeeds]] (SURVEY §7.7): ranks each vector's IVF
-    * candidates by (ccos desc, seed_id) and keeps positions 1–3; vectors
-    * with fewer than 3 candidate seeds fall back to the exact Top3 pass.
-    * Identical winner/runner-up/third tie semantics to the exact Top3
-    * given candidate coverage — the DedupSpec all-cells-probed law pins
-    * equality.
-    */
-  def assignToSeedsIvfTop3(e: DataFrame, seeds: DataFrame,
-      probes: Int = 2, index: Option[IvfSeedIndex] = None): DataFrame = {
-    val sdf = seeds.persist(StorageLevel.MEMORY_AND_DISK)
-    val ranked = ivfCandidates(e, sdf, probes, index)
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
-          .orderBy(col("ccos").desc, col("seed_id"))))
-      .filter(col("rn") <= 3)
-    // persisted for the same anti-join/union double-read as the others
-    val assigned = ranked.groupBy("vec_id")
-      .agg(first(col("embedding")).as("embedding"),
-        min(when(col("rn") === 1, col("seed_id"))).as("cluster_id"),
-        min(when(col("rn") === 1, col("ccos"))).as("centroid_cos"),
-        min(when(col("rn") === 2, col("seed_id"))).as("cluster2_id"),
-        min(when(col("rn") === 3, col("seed_id"))).as("cluster3_id"))
-      .filter(col("cluster3_id").isNotNull) // < 3 candidates -> exact path
-      .select("vec_id", "embedding", "cluster_id", "centroid_cos",
-        "cluster2_id", "cluster3_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val orphans = e.select("vec_id", "embedding")
-      .join(assigned.select("vec_id"), Seq("vec_id"), "left_anti")
-    assigned.unionByName(
-      assignToSeedsTop3(orphans, sdf.select(col("seed_id"), col("s_emb"))))
-  }
-
-  /** Occupancy-CAPPED IVF assignment — the measured mitigation for the
-    * flip's one surprise (SCALE.md round-12, the adaptive IVF flip): coarse-
-    * cell geometry concentrates IVF assignments into fewer, larger
-    * clusters, and the downstream SemDeDup prune pays sum(cluster²) for
-    * it (67.7 s vs the exact arm's 12.8 s at n=256k, k=2000). Capping a
-    * cluster at `cap` members — spilling its FARTHEST members (lowest
-    * centroid cos, the likeliest misassignments) to their runner-up
-    * seed — cut that prune to 25.8 s at IDENTICAL end-to-end quality
-    * (keep agreement 0.993, removal recall 0.996, ~1% of vectors
-    * spilled at cap = 512 = 4× the n/128 design width). Same output
-    * schema as [[assignToSeeds]]; the occupancy window partitions by
-    * cluster (bounded by occupancy, never corpus-grain). Law: all cells
-    * probed + cap ≥ n degenerates to exact assignment (DedupSpec).
-    * Caching contract as the other assigners: the Top2 frame persists
-    * for the result's lifetime; callers release via clearCache.
-    */
-  def assignToSeedsIvfCapped(e: DataFrame, seeds: DataFrame,
-      probes: Int = 2, index: Option[IvfSeedIndex] = None,
-      cap: Int = 512): DataFrame = {
-    val top2 = assignToSeedsIvfTop2(e, seeds, probes, index)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cluster_id")
-      .orderBy(col("centroid_cos").desc, col("vec_id"))
-    val ranked = top2.withColumn("rk", row_number().over(w))
-      .withColumn("fin",
-        when(col("rk") <= cap, col("cluster_id"))
-          .otherwise(col("cluster2_id")))
-    // spilled members re-score against their NEW seed (the keep rule
-    // needs the assigned cluster's centroid cos); the seeds join is
-    // k-bounded and Catalyst broadcasts it while small
-    ranked.join(seeds, ranked("fin") === seeds("seed_id"))
-      .select(col("vec_id"), col("embedding"),
-        col("fin").as("cluster_id"),
-        when(col("rk") <= cap, col("centroid_cos"))
-          .otherwise(call_function("cosine_sim",
-            col("embedding"), col("s_emb"))).as("centroid_cos"))
+      .select(col("vec_id"), col("embedding"), col("seed_id"), seedCos.as("ccos"))
   }
 
   /** The seed count above which the exact broadcast cross join stops
     * being the right plan (SCALE.md round-11: at k=1000 the IVF 2-probe
     * is already 3× faster; every fixture SF sits far below). Chosen so
-    * the ADAPTIVE assigners below are bit-identical to exact assignment
-    * everywhere the DuckDB oracles look, and flip to the measured
-    * sub-quadratic path exactly where the 64× smoke showed exact
-    * assignment going superlinear.
+    * [[seedSearch]] stays bit-identical to exact assignment everywhere
+    * the DuckDB oracles look, and flips to the measured sub-quadratic
+    * path exactly where the 64× smoke showed exact assignment going
+    * superlinear.
     */
   val ExactAssignMaxSeeds = 1024L
 
-  /** Loud path telemetry for the adaptive assigners (round-11 ADVICE):
-    * the k ≤ [[ExactAssignMaxSeeds]] exact path is what keeps
-    * q_dedup_semantic / the streaming door bit-identical to their DuckDB
-    * oracles, so a fixture growing past ~131k embeddings must be
-    * diagnosed HERE (one stderr line naming the flip) rather than as a
-    * confusing hash mismatch. Verify additionally asserts the exact path
-    * for the oracled semantic queries (Verify.scala).
-    */
-  private def logAssignPath(which: String, k: Long): Unit =
-    System.err.println(s"[graft] $which: k=$k -> " +
-      (if (k <= ExactAssignMaxSeeds) "exact broadcast"
-       else "approximate IVF 2-probe") + " assignment path")
-
-  /** Exact below [[ExactAssignMaxSeeds]], IVF 2-probe beyond — `k` is
-    * the caller's known seed count (avoids a recount). Pass a prebuilt
-    * `index` when the same seed table serves repeated calls.
-    */
-  def assignToSeedsAdaptive(e: DataFrame, seeds: DataFrame,
-      k: Long, index: Option[IvfSeedIndex] = None): DataFrame = {
-    logAssignPath("assignToSeedsAdaptive", k)
-    if (k <= ExactAssignMaxSeeds) assignToSeeds(e, seeds)
-    // occupancy-capped beyond the threshold: same IVF probe work plus
-    // the cap window. The cap's durable value is the WORST-CASE bound
-    // (any cluster's prune contribution ≤ cap², vs unbounded under
-    // adversarial dup skew) plus the cluster-partitioned output the
-    // prune join reuses; measured quality-flat at ~1% spill (SCALE.md
-    // round-12, honest attribution there)
-    else assignToSeedsIvfCapped(e, seeds, index = index)
-  }
-
-  /** [[assignToSeedsTop2]] below the threshold, [[assignToSeedsIvfTop2]]
-    * beyond.
-    */
-  def assignToSeedsTop2Adaptive(e: DataFrame, seeds: DataFrame,
-      k: Long, index: Option[IvfSeedIndex] = None): DataFrame = {
-    logAssignPath("assignToSeedsTop2Adaptive", k)
-    if (k <= ExactAssignMaxSeeds) assignToSeedsTop2(e, seeds)
-    else assignToSeedsIvfTop2(e, seeds, index = index)
-  }
-
-  /** [[assignToSeedsTop3]] below the threshold, [[assignToSeedsIvfTop3]]
-    * beyond — the ×3 ladder rung's scale path (the p3 door uses this).
-    */
-  def assignToSeedsTop3Adaptive(e: DataFrame, seeds: DataFrame,
-      k: Long, index: Option[IvfSeedIndex] = None): DataFrame = {
-    logAssignPath("assignToSeedsTop3Adaptive", k)
-    if (k <= ExactAssignMaxSeeds) assignToSeedsTop3(e, seeds)
-    else assignToSeedsIvfTop3(e, seeds, index = index)
-  }
-
-  /** First- AND second-nearest-seed assignment — the DELTA-side
-    * multi-probe of the ingest door (q_stream_semantic_filter): a
-    * boundary-straddling near-dup whose base twin sits just across the
-    * assignment boundary is caught by also probing the runner-up
-    * cluster. Two broadcast map passes over the input (cost ×2 on the
-    * delta batch ONLY — the base store keeps single assignment), per-key
-    * aggregation state O(1) in both passes. Output adds `cluster2_id`.
-    */
-  def assignToSeedsTop2(e: DataFrame, seeds: DataFrame): DataFrame =
-    assignToSeeds(e, seeds)
-      .crossJoin(broadcast(seeds))
-      // the winner is excluded per-row (map-side), so the second agg's
-      // max_by is exactly the runner-up; k >= 8 seeds guarantees a
-      // non-empty remainder for every vector
-      .filter(col("seed_id") =!= col("cluster_id"))
-      .select(col("vec_id"), col("embedding"), col("cluster_id"),
-        col("centroid_cos"), col("seed_id"),
-        call_function("cosine_sim", col("embedding"), col("s_emb")).as("c2"))
-      .groupBy("vec_id")
-      .agg(first(col("embedding")).as("embedding"),
-        first(col("cluster_id")).as("cluster_id"),
-        first(col("centroid_cos")).as("centroid_cos"),
-        max_by(struct(col("c2"), (-col("seed_id")).as("neg_seed")),
-          struct(col("c2"), -col("seed_id"))).as("b2"))
-      .select(col("vec_id"), col("embedding"), col("cluster_id"),
-        col("centroid_cos"), (-col("b2.neg_seed")).as("cluster2_id"))
-
-  /** Top-3 assignment — DIAGNOSTIC ONLY (q_dedup_semantic_recall's
-    * probe-cost ladder): adds `cluster3_id` to the Top2 frame with one
-    * more broadcast pass. The ingest door stays on the FIXED runner-up
-    * 2-probe: a margin-ADAPTIVE 2-probe (swap the runner-up for the
-    * 3rd-nearest when cos1−cos2 ≥ ε, i.e. "confident" assignments) was
-    * measured WORSE than fixed at sf0.1 for every ε in [0.01, 0.2]
-    * (390–417 vs 420 of 920 true pairs caught) — the assignment margin
-    * does not predict which neighbor cluster hides a boundary-straddling
-    * dup, so the ladder is ×1/×2/×3 probes, not margin tricks
-    * (measured table in SCALE.md).
+  /** THE exact-vs-IVF decision for a seed table of known size `k`:
+    * [[Exact]] while k ≤ [[ExactAssignMaxSeeds]]; beyond, [[Ivf]] over
+    * an index built here once (pass the result to every call on this
+    * seed table), 2-probe, with the top-1 occupancy cap at 512. The
+    * cap's durable value is the WORST-CASE bound (any cluster's prune
+    * contribution ≤ cap², vs unbounded under adversarial dup skew) plus
+    * the cluster-partitioned output the prune join reuses; measured
+    * quality-flat at ~1% spill (SCALE.md round-12). Callers asking for
+    * `top` > 1 pass `.uncapped`.
     *
-    * PRECONDITION: >= 3 seeds — with fewer, the two exclusion filters
-    * empty the remainder and every vector silently drops from the
-    * output (the DuckDB recall oracle's rn=3 inner join mirrors this).
-    * Safe at every call site today because `semanticK` floors at 8
-    * (same contract Top2 states for >= 2).
+    * Prints the path taken to stderr (round-11 ADVICE): the exact path
+    * is what keeps q_dedup_semantic and the semantic doors bit-identical
+    * to their DuckDB oracles, so a fixture growing past ~131k embeddings
+    * must be diagnosed HERE rather than as a confusing hash mismatch.
+    * Verify additionally asserts the exact path for the oracled
+    * semantic queries (Verify.scala).
     */
-  def assignToSeedsTop3(e: DataFrame, seeds: DataFrame): DataFrame =
-    assignToSeedsTop2(e, seeds)
-      .crossJoin(broadcast(seeds))
-      .filter(col("seed_id") =!= col("cluster_id") &&
-        col("seed_id") =!= col("cluster2_id"))
-      .select(col("vec_id"), col("embedding"), col("cluster_id"),
-        col("centroid_cos"), col("cluster2_id"), col("seed_id"),
-        call_function("cosine_sim", col("embedding"), col("s_emb")).as("c3"))
-      .groupBy("vec_id")
-      .agg(first(col("embedding")).as("embedding"),
-        first(col("cluster_id")).as("cluster_id"),
-        first(col("centroid_cos")).as("centroid_cos"),
-        first(col("cluster2_id")).as("cluster2_id"),
-        max_by(struct(col("c3"), (-col("seed_id")).as("neg_seed")),
-          struct(col("c3"), -col("seed_id"))).as("b3"))
-      .select(col("vec_id"), col("embedding"), col("cluster_id"),
-        col("centroid_cos"), col("cluster2_id"),
-        (-col("b3.neg_seed")).as("cluster3_id"))
+  def seedSearch(seeds: DataFrame, k: Long): SeedSearch = {
+    val exact = k <= ExactAssignMaxSeeds
+    System.err.println(s"[graft] seedSearch: k=$k -> " +
+      (if (exact) "exact broadcast" else "approximate IVF 2-probe") +
+      " assignment path")
+    if (exact) Exact else Ivf(buildIvfSeedIndex(seeds, k), cap = Some(512))
+  }
 
   def semanticAssigned(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
     val k = semanticK(e.count())
-    assignToSeedsAdaptive(e, semanticSeedsK(e, k), k)
+    val seeds = semanticSeedsK(e, k)
+    assignToSeeds(e, seeds, search = seedSearch(seeds, k))
   }
 
   /** The SemDeDup WITHIN-cluster prune over an assigned frame
@@ -1018,7 +906,7 @@ object Dedup {
     // the streaming door uses) and its 3rd-nearest cluster — the
     // measured ×1/×2/×3 probe-cost ladder recorded in SCALE.md. A
     // margin-ADAPTIVE 2-probe was measured and REJECTED (see
-    // assignToSeedsTop3's scaladoc): the ladder is the honest knob.
+    // assignToSeeds' scaladoc): the ladder is the honest knob.
     // The cluster count k was ALSO measured (SCALE.md round-11,
     // SemDeDup probe-cost ladder): recall falls monotonically as k rises (0.457 at the
     // production n/128 vs 0.345 at n/64 vs 0.298 at n/32, 2-probe at
@@ -1035,7 +923,7 @@ object Dedup {
     "q_dedup_semantic_recall" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
-      val a = assignToSeedsTop3(e, semanticSeeds(e))
+      val a = assignToSeeds(e, semanticSeeds(e), top = 3)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val l = a.select(col("vec_id").as("vid_a"),
         col("embedding").as("emb_a"), col("cluster_id").as("cl_a"),
@@ -1086,7 +974,7 @@ object Dedup {
       graft.functions.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
       val n = e.count()
-      val a = assignToSeedsTop2(e, semanticSeedsK(e, semanticK(n)))
+      val a = assignToSeeds(e, semanticSeedsK(e, semanticK(n)), top = 2)
         .withColumn("code", call_function("hyperplane_bits", col("embedding")))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val bands = Lsh.explodeBands(
@@ -1129,51 +1017,74 @@ object Dedup {
     })
   )
 
-  /** Exact 3-gram-shingle Jaccard self-join at `threshold` via prefix
-    * filtering.
-    *
-    * Order all shingles by (global frequency asc, shingle asc) — a total
-    * order putting the rarest shingles first. Each doc's PREFIX is its
-    * first `n - ceil(t*n) + 1` shingles in that order. Two sets with
-    * J >= t have overlap >= ceil(t * max(|A|,|B|)), and two ordered sets
-    * whose overlap >= that bound must collide inside these prefixes
-    * (skipping the whole prefix leaves fewer than the required common
-    * shingles) — so the prefix equi-join loses NO qualifying pair, and
-    * exact verification on candidates only reproduces the quadratic
-    * join's result. At corpus scale the prefix shingles are by
-    * construction the low-frequency tail, so candidate buckets stay
-    * small where a join on ALL shingles would explode on boilerplate;
-    * the frequency join shuffles (shingle, cnt) — the shingle vocabulary
-    * is unbounded, so no broadcast. Same granularity (distinct word
-    * 3-grams) as the MinHash family, so this is its drop-in exact
-    * counterpart wherever determinism beats probabilistic recall.
+  /** (doc_id, h) gram rows joined to their document frequency `cnt`
+    * within the same rows — the rarity key when no stored count exists.
     */
-  def prefixSimilarityJoin(docs: DataFrame, threshold: Double): DataFrame = {
-    // Hot path shuffles 8-byte gram HASHES, never gram strings — the
-    // same ngram_hashes trick as the MinHash family (Jaccard on the hash
-    // sets equals string-gram Jaccard up to 2^-64 collisions, the
-    // documented equivalence the q_dedup_cross oracle already relies on).
-    // The rarity total order becomes (global frequency asc, hash asc).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val g = docs
-      .withColumn("wtok", split(norm(col("text")), " "))
-      .filter(size(col("wtok")) >= 3)
-      .select(col("doc_id"), call_function("ngram_hashes", col("wtok")).as("grams"))
-    prefixSimilarityJoinOnGrams(g, threshold)
-  }
+  private def withDocFreq(toks: DataFrame): DataFrame =
+    toks.join(toks.groupBy("h").agg(count(lit(1)).as("cnt")), "h")
 
-  /** Shared exact-verify + emission stage of BOTH containment joins
-    * (the raw self-corpus form and the probe/index form): candidates
-    * re-join their rarity-ordered gram sets, the one-sided size filter
-    * re-applies, and containment = |A∩B|/|A| decides membership. The
-    * prefix machinery above each call site only PRUNES candidates, so
-    * this stage is the single place the output statistic lives
-    * (round-12 review: the two forms must never diverge here).
+  /** THE rarity-ordered set build of every PPJoin form: (h, cnt) rows
+    * grouped by `keys` into (keys…, hs, n), `hs` sorted by the total
+    * order (cnt asc, hash asc) — rarest grams first, so a prefix of `hs`
+    * is its rarest grams.
     */
-  private def containmentVerify(cand: DataFrame, va: DataFrame,
-      vb: DataFrame, t: Double,
-      pin: DataFrame => DataFrame = identity): DataFrame =
-    pin(cand.join(va, "doc_id_a")).join(vb, "doc_id_b")
+  private def raritySets(ranked: DataFrame, keys: String*): DataFrame =
+    ranked.groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col("cnt"), col("h")))).as("arr"))
+      .select(keys.map(col) :+ expr("transform(arr, x -> x.h)").as("hs") :+
+        size(col("arr")).as("n"): _*)
+
+  /** A rarity-ordered set's prefix at threshold `t` — its first
+    * n − ceil(t·n) + 1 grams — posexploded to (pos, col) so positions
+    * ride along for the PPJoin positional filter. The ceil runs over an
+    * epsilon-nudged product: double rounding can land n·t a last-ulp
+    * ABOVE the exact rational (e.g. 10·0.7 → 7.0000000000000005), and
+    * ceil of that over-sizes the required overlap ⇒ an under-sized
+    * prefix that silently drops qualifying pairs. The nudge can only
+    * lengthen the prefix (extra candidates — exact verify still
+    * prunes), never shorten it, so completeness holds on both sides of
+    * the boundary.
+    */
+  private def prefixGrams(t: Double): Column =
+    posexplode(slice(col("hs"), lit(1),
+      (col("n") - ceil(col("n") * lit(t) - lit(1e-9)) + 1).cast(IntegerType)))
+
+  /** The one-sided PPJoin shared by every containment form: candidates,
+    * then exact verify. C(A→B) ≥ t needs overlap o = ceil(t·|A|), so
+    * if A's first |A| − o + 1 RAREST grams all miss B, the rest can
+    * supply at most o − 1: each probe set's prefix is equi-joined
+    * against the index `postings` ([[containIndexPostings]] of
+    * `indexSets`) with the one-sided length (|B| ≥ t|A|) and positional
+    * filters IN the join, and loses no qualifying pair as long as both
+    * sides share one rarity total order. Epsilon discipline as in
+    * [[prefixGrams]]: nudges only lengthen prefixes / admit borderline
+    * candidates, never drop a qualifying pair.
+    *
+    * The verify is the single place the output statistic lives
+    * (round-12 review: the forms must never diverge here): candidates
+    * re-join both rarity-ordered sets, the size filter re-applies, and
+    * containment = |A∩B|/|A| decides membership — the prefix stage only
+    * PRUNES. `pin` wraps the batch-bounded build sides (the door's
+    * broadcast hint).
+    */
+  private def containmentJoin(probeSets: DataFrame, indexSets: DataFrame,
+      postings: DataFrame, t: Double,
+      pin: DataFrame => DataFrame = identity): DataFrame = {
+    val prefixA = probeSets.select(col("doc_id").as("doc_id_a"),
+        col("n").as("n_a"), prefixGrams(t))
+      .withColumnRenamed("pos", "p_a").withColumnRenamed("col", "h")
+    val cand = pin(prefixA).join(postings, "h")
+      .filter(col("doc_id_a") =!= col("doc_id_b"))
+      .filter(col("n_b") >= col("n_a") * t - lit(1e-9))
+      .filter(lit(1) + least(col("n_a") - col("p_a") - 1,
+        col("n_b") - col("p_b") - 1)
+        >= ceil(col("n_a") * lit(t) - lit(1e-9)))
+      .select("doc_id_a", "doc_id_b").distinct()
+    val va = probeSets.select(col("doc_id").as("doc_id_a"),
+      col("hs").as("hs_a"), col("n").as("n_a"))
+    val vb = indexSets.select(col("doc_id").as("doc_id_b"),
+      col("hs").as("hs_b"), col("n").as("n_b"))
+    pin(pin(cand).join(va, "doc_id_a")).join(vb, "doc_id_b")
       // size filter: containment >= t forces |B| >= t|A| (one-sided)
       .filter(col("n_b") >= col("n_a") * t - lit(1e-9))
       .withColumn("inter_cnt", size(array_intersect(col("hs_a"), col("hs_b"))))
@@ -1183,52 +1094,24 @@ object Dedup {
       .select(col("doc_id_a").as("doc_id"),
         col("doc_id_b").as("container"),
         col("n_a").as("n_grams"), col("inter_cnt"), col("containment"))
+  }
 
   /** q_containment's body over any (doc_id, grams) frame — factored so
     * the dedup-first mitigation can be MEASURED (SCALE.md, 64× growth rows):
     * run the same one-sided PPJoin over the near-dup cluster CANONICALS
-    * instead of the raw corpus. Probe side is the doc_id%3 slice; sound
-    * one-sided prefix filter (o = ceil(t·|A|)); exact verify on
-    * candidates only. See the q_containment query comment for the
+    * instead of the raw corpus. Probe side is the doc_id%3 slice, index
+    * side every doc; see the q_containment query comment for the
     * completeness argument.
     */
   def containmentJoinOnGrams(g: DataFrame, t: Double = 0.8): DataFrame = {
     // persisted: feeds the doc-frequency counts and the rarity-ordered
-    // sets (one store explode, not two); the candidate index below
-    // re-derives from `sets` so (n_b, p_b) ride the PPJoin filters
+    // sets (one store explode, not two)
     val toks = g.select(col("doc_id"), explode(col("grams")).as("h"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cnt = toks.groupBy("h").agg(count(lit(1)).as("cnt"))
-    val sets = toks.join(cnt, "h")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("cnt"), col("h")))).as("arr"))
-      .select(col("doc_id"),
-        expr("transform(arr, x -> x.h)").as("hs"),
-        size(col("arr")).as("n"))
+    val sets = raritySets(withDocFreq(toks), "doc_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // same epsilon discipline as prefixSimilarityJoinOnGrams: the nudge
-    // can only lengthen the prefix, never drop a qualifying pair
-    val prefixA = sets.filter(col("doc_id") % 3 === 0)
-      .select(col("doc_id").as("doc_id_a"), col("n").as("n_a"),
-        posexplode(slice(col("hs"), lit(1),
-          (col("n") - ceil(col("n") * lit(t) - lit(1e-9)) + 1)
-            .cast(IntegerType))))
-      .withColumnRenamed("pos", "p_a").withColumnRenamed("col", "h")
-    val bIdx = sets.select(col("doc_id").as("doc_id_b"),
-        col("n").as("n_b"), posexplode(col("hs")))
-      .withColumnRenamed("pos", "p_b").withColumnRenamed("col", "h")
-    val cand = prefixA.join(bIdx, "h")
-      .filter(col("doc_id_a") =!= col("doc_id_b"))
-      .filter(col("n_b") >= col("n_a") * t - lit(1e-9))
-      .filter(lit(1) + least(col("n_a") - col("p_a") - 1,
-        col("n_b") - col("p_b") - 1)
-        >= ceil(col("n_a") * lit(t) - lit(1e-9)))
-      .select("doc_id_a", "doc_id_b").distinct()
-    val va = sets.select(col("doc_id").as("doc_id_a"),
-      col("hs").as("hs_a"), col("n").as("n_a"))
-    val vb = sets.select(col("doc_id").as("doc_id_b"),
-      col("hs").as("hs_b"), col("n").as("n_b"))
-    containmentVerify(cand, va, vb, t)
+    containmentJoin(sets.filter(col("doc_id") % 3 === 0), sets,
+      containIndexPostings(sets), t)
   }
 
   /** [[containmentJoinOnGrams]] with EXPLICIT probe and container-index
@@ -1239,8 +1122,7 @@ object Dedup {
     * streams — the order is a function of the hash alone, and ANY
     * consistent order preserves candidate completeness (the exact verify
     * decides membership), so a doc appearing on both sides contributing
-    * twice to a count is harmless. Same epsilon discipline as the raw
-    * form: nudges only lengthen prefixes / admit borderline candidates.
+    * twice to a count is harmless.
     */
   def containmentJoinProbeIndex(probe: DataFrame, index: DataFrame,
       t: Double = 0.8): DataFrame = {
@@ -1249,38 +1131,11 @@ object Dedup {
       .unionAll(index.select(lit(2L).as("side"), col("doc_id"),
         explode(col("grams")).as("h")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cnt = toks.groupBy("h").agg(count(lit(1)).as("cnt"))
-    val sets = toks.join(cnt, "h")
-      .groupBy("side", "doc_id")
-      .agg(array_sort(collect_list(struct(col("cnt"), col("h")))).as("arr"))
-      .select(col("side"), col("doc_id"),
-        expr("transform(arr, x -> x.h)").as("hs"),
-        size(col("arr")).as("n"))
+    val sets = raritySets(withDocFreq(toks), "side", "doc_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val prefixA = sets.filter(col("side") === 1L)
-      .select(col("doc_id").as("doc_id_a"), col("n").as("n_a"),
-        posexplode(slice(col("hs"), lit(1),
-          (col("n") - ceil(col("n") * lit(t) - lit(1e-9)) + 1)
-            .cast(IntegerType))))
-      .withColumnRenamed("pos", "p_a").withColumnRenamed("col", "h")
-    val bIdx = sets.filter(col("side") === 2L)
-      .select(col("doc_id").as("doc_id_b"), col("n").as("n_b"),
-        posexplode(col("hs")))
-      .withColumnRenamed("pos", "p_b").withColumnRenamed("col", "h")
-    val cand = prefixA.join(bIdx, "h")
-      .filter(col("doc_id_a") =!= col("doc_id_b"))
-      .filter(col("n_b") >= col("n_a") * t - lit(1e-9))
-      .filter(lit(1) + least(col("n_a") - col("p_a") - 1,
-        col("n_b") - col("p_b") - 1)
-        >= ceil(col("n_a") * lit(t) - lit(1e-9)))
-      .select("doc_id_a", "doc_id_b").distinct()
-    val va = sets.filter(col("side") === 1L)
-      .select(col("doc_id").as("doc_id_a"), col("hs").as("hs_a"),
-        col("n").as("n_a"))
-    val vb = sets.filter(col("side") === 2L)
-      .select(col("doc_id").as("doc_id_b"), col("hs").as("hs_b"),
-        col("n").as("n_b"))
-    containmentVerify(cand, va, vb, t)
+    val indexSets = sets.filter(col("side") === 2L)
+    containmentJoin(sets.filter(col("side") === 1L), indexSets,
+      containIndexPostings(indexSets), t)
   }
 
   /** One-time containment-index COUNT store (`contain_cnt_v1`): the
@@ -1322,15 +1177,10 @@ object Dedup {
   def ensureContainIndexStore(s: SparkSession, dir: String): DataFrame = {
     val path = Sources.ensureStore(dir, "contain_index_v1") { tmp =>
       val cnt = ensureContainCountStore(s, dir)
-      ensureGramStore(s, dir)
-        .join(ensureCanonicalStore(s, dir), Seq("doc_id"))
-        .select(col("doc_id"), explode(col("grams")).as("h"))
-        .join(cnt, "h")
-        .groupBy("doc_id")
-        .agg(array_sort(collect_list(struct(col("cnt"), col("h")))).as("arr"))
-        .select(col("doc_id"),
-          expr("transform(arr, x -> x.h)").as("hs"),
-          size(col("arr")).as("n"))
+      raritySets(ensureGramStore(s, dir)
+          .join(ensureCanonicalStore(s, dir), Seq("doc_id"))
+          .select(col("doc_id"), explode(col("grams")).as("h"))
+          .join(cnt, "h"), "doc_id")
         .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
@@ -1365,31 +1215,21 @@ object Dedup {
     *
     * Soundness: both sides are ordered by the SAME total order
     * (stored cnt asc, hash asc; probe-only grams at count 0), and the
-    * one-sided prefix/positional lemma (see the recount form's scaladoc)
-    * holds under any shared total order — the exact verify decides
-    * membership, so the output is IDENTICAL to the recount path's
-    * (DedupSpec law). `broadcastProbe = true` (doors) additionally pins
-    * every index-side join — cnt lookup, postings equi-join, AND the
-    * verify join — to broadcast-hash with the batch-bounded side as
-    * build, by HINT rather than AQE (micro-batch plans may run without
-    * it), so the persisted stores are only ever scanned map-side.
+    * one-sided prefix/positional lemma holds under any shared total
+    * order — the exact verify decides membership, so the output is
+    * IDENTICAL to the recount path's (DedupSpec law). `broadcastProbe =
+    * true` (doors) additionally pins every index-side join — cnt
+    * lookup, postings equi-join, AND the verify join — to broadcast-hash
+    * with the batch-bounded side as build, by HINT rather than AQE
+    * (micro-batch plans may run without it), so the persisted stores
+    * are only ever scanned map-side. The two per-call caches (probe
+    * grams and probe sets) persist for the result's lifetime; the
+    * harness clearCache or the door runner's per-batch release frees
+    * them.
     */
   def containmentProbeStoredOrder(probe: DataFrame, sets: DataFrame,
       postings: DataFrame, cnt: DataFrame, t: Double = 0.8,
-      broadcastProbe: Boolean = false): DataFrame =
-    containmentProbeStoredOrderCore(probe, sets, postings, cnt, t,
-      broadcastProbe)._1
-
-  /** The stored-order probe body, returning the result AND its two
-    * per-call MEMORY_AND_DISK caches so callers can release them:
-    * the lazy public form leaves them persisted (fine under the repo's
-    * per-query clearCache harnesses and the door's
-    * releasingBatchCaches); [[withContainmentProbeStoredOrder]] is the
-    * loan for any other long-lived batch caller (round-13 ADVICE).
-    */
-  private def containmentProbeStoredOrderCore(probe: DataFrame,
-      sets: DataFrame, postings: DataFrame, cnt: DataFrame, t: Double,
-      broadcastProbe: Boolean): (DataFrame, DataFrame, DataFrame) = {
+      broadcastProbe: Boolean = false): DataFrame = {
     def bp(df: DataFrame): DataFrame = if (broadcastProbe) broadcast(df) else df
     val toksP = probe.select(col("doc_id"), explode(col("grams")).as("h"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1401,83 +1241,41 @@ object Dedup {
         val seen = cnt.join(broadcast(toksP.select("h").distinct()), "h")
         toksP.join(broadcast(seen), Seq("h"), "left")
       } else toksP.join(cnt, Seq("h"), "left")
-    val setsP = ranked
-      .na.fill(0L, Seq("cnt")) // unseen-in-index grams rank rarest
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("cnt"), col("h")))).as("arr"))
-      .select(col("doc_id"),
-        expr("transform(arr, x -> x.h)").as("hs"),
-        size(col("arr")).as("n"))
+    val setsP = raritySets(ranked.na.fill(0L, Seq("cnt")), "doc_id") // unseen rank rarest
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // same epsilon discipline as every prefix form: nudges only lengthen
-    // prefixes / admit borderline candidates, never drop a qualifying pair
-    val prefixA = setsP.select(col("doc_id").as("doc_id_a"), col("n").as("n_a"),
-        posexplode(slice(col("hs"), lit(1),
-          (col("n") - ceil(col("n") * lit(t) - lit(1e-9)) + 1)
-            .cast(IntegerType))))
-      .withColumnRenamed("pos", "p_a").withColumnRenamed("col", "h")
-    val cand = bp(prefixA).join(postings, "h")
-      .filter(col("doc_id_a") =!= col("doc_id_b"))
-      .filter(col("n_b") >= col("n_a") * t - lit(1e-9))
-      .filter(lit(1) + least(col("n_a") - col("p_a") - 1,
-        col("n_b") - col("p_b") - 1)
-        >= ceil(col("n_a") * lit(t) - lit(1e-9)))
-      .select("doc_id_a", "doc_id_b").distinct()
-    val va = setsP.select(col("doc_id").as("doc_id_a"), col("hs").as("hs_a"),
-      col("n").as("n_a"))
-    val vb = sets.select(col("doc_id").as("doc_id_b"), col("hs").as("hs_b"),
-      col("n").as("n_b"))
-    // pin = bp on the (cand ⋈ probe-sets) build side: micro-batch plans
-    // may run without AQE, so the hint — not runtime stats — is what
-    // keeps the stored index sets on the streamed (scan-only) side of
-    // the verify join too
-    (containmentVerify(bp(cand), va, vb, t, pin = bp), toksP, setsP)
+    containmentJoin(setsP, sets, postings, t, pin = bp)
   }
 
-  /** Loan-pattern twin of [[containmentProbeStoredOrder]] (the
-    * withNearDupSurvivors idiom): runs `use` on the probe result, then
-    * unpersists exactly the two per-call caches (toksP/setsP) the lazy
-    * form leaves behind — and nothing else, so caches `use` itself
-    * creates survive. Long-lived batch callers without their own
-    * per-query clearCache should come through here (round-13 ADVICE).
-    */
-  def withContainmentProbeStoredOrder[T](probe: DataFrame, sets: DataFrame,
-      postings: DataFrame, cnt: DataFrame, t: Double = 0.8,
-      broadcastProbe: Boolean = false)(use: DataFrame => T): T = {
-    val (res, toksP, setsP) = containmentProbeStoredOrderCore(
-      probe, sets, postings, cnt, t, broadcastProbe)
-    try use(res)
-    finally { toksP.unpersist(blocking = false); setsP.unpersist(blocking = false) }
-  }
-
-  /** [[prefixSimilarityJoin]] over an already-hashed (doc_id, grams)
-    * frame — the entry the gram store feeds, skipping the per-query
-    * corpus tokenize.
+  /** Exact 3-gram-shingle Jaccard self-join at `threshold` via prefix
+    * filtering, over a hashed (doc_id, grams) frame — the gram store, or
+    * [[batchGrams]] of any (doc_id, text) frame.
+    *
+    * Order all shingles by (global frequency asc, hash asc) — a total
+    * order putting the rarest shingles first. Each doc's PREFIX is its
+    * first `n - ceil(t*n) + 1` shingles in that order. Two sets with
+    * J >= t have overlap >= ceil(t * max(|A|,|B|)), and two ordered sets
+    * whose overlap >= that bound must collide inside these prefixes
+    * (skipping the whole prefix leaves fewer than the required common
+    * shingles) — so the prefix equi-join loses NO qualifying pair, and
+    * exact verification on candidates only reproduces the quadratic
+    * join's result. At corpus scale the prefix shingles are by
+    * construction the low-frequency tail, so candidate buckets stay
+    * small where a join on ALL shingles would explode on boilerplate;
+    * the frequency join shuffles (shingle, cnt) — the shingle vocabulary
+    * is unbounded, so no broadcast. Same granularity (distinct word
+    * 3-grams) as the MinHash family, so this is its drop-in exact
+    * counterpart wherever determinism beats probabilistic recall. The
+    * hot path shuffles 8-byte gram HASHES, never gram strings: Jaccard
+    * on the hash sets equals string-gram Jaccard up to 2^-64 collisions,
+    * the documented equivalence the q_dedup_cross oracle relies on.
     */
   def prefixSimilarityJoinOnGrams(g: DataFrame, threshold: Double): DataFrame = {
     val toks = g.select(col("doc_id"), explode(col("grams")).as("h"))
       .persist(StorageLevel.MEMORY_AND_DISK) // df counts + the sets join
       // both read it — one store explode, not two (q_containment's fix)
-    val cnt = toks.groupBy("h").agg(count(lit(1)).as("cnt"))
-    val sets = toks.join(cnt, "h")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("cnt"), col("h")))).as("arr"))
-      .select(col("doc_id"),
-        expr("transform(arr, x -> x.h)").as("hs"), // rarity-ordered hash set
-        size(col("arr")).as("n"))
+    val sets = raritySets(withDocFreq(toks), "doc_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // ceil over an epsilon-nudged product: double rounding can land n*t a
-    // last-ulp ABOVE the exact rational (e.g. 10*0.7 -> 7.0000000000000005),
-    // and ceil of that over-sizes the required overlap => an under-sized
-    // prefix that silently drops qualifying pairs. The nudge can only
-    // lengthen the prefix (extra candidates — exact verify still prunes),
-    // never shorten it, so completeness is preserved on both sides of the
-    // boundary. Positions ride along (posexplode) for the PPJoin
-    // positional filter below.
-    val prefix = sets.select(col("doc_id"), col("n"),
-        posexplode(slice(col("hs"), lit(1),
-          (col("n") - ceil(col("n") * lit(threshold) - lit(1e-9)) + 1)
-            .cast(IntegerType))))
+    val prefix = sets.select(col("doc_id"), col("n"), prefixGrams(threshold))
       .withColumnRenamed("pos", "p").withColumnRenamed("col", "ph")
     // Candidate generation with the PPJoin length + positional filters
     // IN the join (Xiao et al., WWW'08), not after the distinct: on a
@@ -1493,8 +1291,8 @@ object Dedup {
     //    shared prefix gram satisfies this bound (its upper bound counts
     //    the true overlap), so at least one occurrence survives to the
     //    distinct — completeness holds; the law test pins it.
-    //  - epsilon discipline as above: nudged products only ADMIT
-    //    borderline candidates, never reject a qualifying one.
+    //  - epsilon discipline as in prefixGrams: nudged products only
+    //    ADMIT borderline candidates, never reject a qualifying one.
     val alpha = ceil((col("n_a") + col("n_b"))
       * lit(threshold / (1 + threshold)) - lit(1e-9))
     val cand = prefix.select(col("doc_id").as("doc_id_a"),

@@ -1159,7 +1159,7 @@ object Streaming {
     // over the DELTA batch only. Fully oracled (assignment and keep rule
     // stay deterministic SQL; the oracle is the 2-probe door's with
     // rn <= 3); beyond k = ExactAssignMaxSeeds the rung flips to the
-    // sub-quadratic IvfTop3 (all-cells-probed == exact law in DedupSpec).
+    // sub-quadratic IVF top-3 (all-cells-probed == exact law in DedupSpec).
     "q_stream_semantic_filter_p3" -> ((s, dir) =>
       semanticDoorSurvivors(s, dir, probes = 3)),
 
@@ -2011,10 +2011,11 @@ object Streaming {
     * survivor set is batch-split-invariant at every (probes, bandUnion)
     * setting (StreamingSpec pins 1-batch == 4-batch).
     *
-    * Assignment is ADAPTIVE at every probe depth (exact — bit-identical
-    * to the oracle — while k <= ExactAssignMaxSeeds, true at every
-    * fixture SF; the measured IVF path beyond, its coarse index built
-    * once beside the seed table; the ×3 rung flips to IvfTop3).
+    * Assignment is ADAPTIVE at every probe depth through one
+    * `Dedup.seedSearch` (exact — bit-identical to the oracle — while
+    * k <= ExactAssignMaxSeeds, true at every fixture SF; the measured
+    * IVF path beyond, its coarse index built once beside the seed
+    * table; the ×3 rung takes IVF top-3).
     */
   def semanticDoorSurvivors(s: SparkSession, dir: String,
       probes: Int = 2, bandUnion: Boolean = false): DataFrame = {
@@ -2025,19 +2026,16 @@ object Streaming {
     val baseEmb = e.filter(col("vec_id") % 2 === 0)
     // persisted across the micro-batches: every batch re-uses the
     // same seed broadcast and cluster-assigned base member store
+    val D = graft.operators.Dedup
     val nBase = baseEmb.count()
-    val k = graft.operators.Dedup.semanticK(nBase)
-    val seeds = graft.operators.Dedup.semanticSeedsK(baseEmb, k).persist(MemoryAndDisk)
-    // beyond the exact-path threshold, the IVF coarse index is built
-    // ONCE beside the persisted seed table and shared by the base
-    // assignment and every micro-batch (round-11 ADVICE: without this
-    // the k × √k index build re-ran per batch)
-    val ivfIdx =
-      if (k > graft.operators.Dedup.ExactAssignMaxSeeds)
-        Some(graft.operators.Dedup.buildIvfSeedIndex(seeds, k))
-      else None
-    val base = graft.operators.Dedup
-      .assignToSeedsAdaptive(baseEmb, seeds, k, ivfIdx)
+    val k = D.semanticK(nBase)
+    val seeds = D.semanticSeedsK(baseEmb, k).persist(MemoryAndDisk)
+    // one search for the base assignment and every micro-batch: beyond
+    // the exact-path threshold its IVF coarse index is built ONCE here
+    // (round-11 ADVICE: without this the k × √k index build re-ran per
+    // batch)
+    val search = D.seedSearch(seeds, k)
+    val base = D.assignToSeeds(baseEmb, seeds, search = search)
       .select(col("cluster_id").as("b_cluster"),
         col("embedding").as("b_emb"))
       .persist(MemoryAndDisk)
@@ -2054,24 +2052,20 @@ object Streaming {
         .join(baseEmb.select(col("vec_id").as("b_vid"),
           col("embedding").as("b_emb")), Seq("b_vid"))
         .persist(MemoryAndDisk))
-    val stores = Seq(seeds, base) ++ baseBands ++
-      ivfIdx.toSeq.flatMap(i => Seq(i.coarse, i.seedCell))
+    val ivfFrames = search match {
+      case D.Ivf(idx, _, _) => Seq(idx.coarse, idx.seedCell)
+      case D.Exact => Nil
+    }
     runDoor(s, tempRoot("graft_semstream"),
-        Split(e.filter(col("vec_id") % 2 === 1), doorSplit(s)), stores) {
+        Split(e.filter(col("vec_id") % 2 === 1), doorSplit(s)),
+        Seq(seeds, base) ++ baseBands ++ ivfFrames) {
       (batch, _) =>
-        val asg =
-          if (probes == 2) graft.operators.Dedup
-            .assignToSeedsTop2Adaptive(batch, seeds, k, ivfIdx)
-          else graft.operators.Dedup
-            .assignToSeedsTop3Adaptive(batch, seeds, k, ivfIdx)
-        val probeCols =
-          if (probes == 2) array(col("cluster_id"), col("cluster2_id"))
-          else array(col("cluster_id"), col("cluster2_id"),
-            col("cluster3_id"))
-        // explode the probes so the base join stays an EQUI join on the
-        // cluster key
+        val asg = D.assignToSeeds(batch, seeds, top = probes, search.uncapped)
+        // explode the probes (cluster_id, cluster2_id[, cluster3_id]) so
+        // the base join stays an EQUI join on the cluster key
+        val probeCols = asg.columns.toSeq.filter(_.startsWith("cluster"))
         val dupCluster = asg.select(col("vec_id"), col("embedding"),
-            explode(probeCols).as("pc"))
+            explode(array(probeCols.map(col): _*)).as("pc"))
           .join(base,
             col("pc") === col("b_cluster") &&
               call_function("cosine_sim",

@@ -64,8 +64,8 @@ class DedupSpec extends SparkSpec {
     // finds (and exact verification must admit no extras) — same 3-gram
     // granularity as bruteforcePairs, so exact equality is the gate
     val truth = bruteforcePairs(0.7)
-    val got = Dedup.prefixSimilarityJoin(
-        Tables(spark, sf0001, "documents"), 0.7)
+    val got = Dedup.prefixSimilarityJoinOnGrams(
+        Dedup.batchGrams(Tables(spark, sf0001, "documents")), 0.7)
       .select("doc_id_a", "doc_id_b").as[(Long, Long)].collect().toSet
     assert(truth.nonEmpty, "fixture should contain planted near-dups")
     assert(got === truth,
@@ -89,7 +89,7 @@ class DedupSpec extends SparkSpec {
       val df = docs.toDF("doc_id", "text")
       for (t <- Seq(0.5, 0.8)) {
         val truth = bruteforcePairsOf(df, t)
-        val got = Dedup.prefixSimilarityJoin(df, t)
+        val got = Dedup.prefixSimilarityJoinOnGrams(Dedup.batchGrams(df), t)
           .select("doc_id_a", "doc_id_b").as[(Long, Long)].collect().toSet
         assert(got === truth,
           s"trial $trial t=$t missing: ${truth -- got}; extras: ${got -- truth}")
@@ -303,29 +303,6 @@ class DedupSpec extends SparkSpec {
         s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     }
     assert(want.nonEmpty, "no containment pairs — vacuous law")
-  }
-
-  test("withContainmentProbeStoredOrder releases exactly its own caches") {
-    // The loan twin must leave the session's persistent-RDD set as it
-    // found it (round-13 ADVICE: the lazy form's toksP/setsP persist for
-    // the session under hygiene-free callers) — while matching the lazy
-    // form's output exactly.
-    val g = Dedup.ensureGramStore(spark, sf0001)
-    val probe = g.filter(col("doc_id") % 3 === 0)
-    val sets = Dedup.ensureContainIndexStore(spark, sf0001)
-    val cnt = Dedup.ensureContainCountStore(spark, sf0001)
-    val want = Dedup.containmentProbeStoredOrder(probe, sets,
-        Dedup.containIndexPostings(sets), cnt)
-      .select("doc_id", "container").as[(Long, Long)].collect().toSet
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val got = Dedup.withContainmentProbeStoredOrder(probe, sets,
-        Dedup.containIndexPostings(sets), cnt) { res =>
-      res.select("doc_id", "container").as[(Long, Long)].collect().toSet
-    }
-    assert(got === want, "loan twin diverged from the lazy form")
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"loan leaked persistent RDDs: $leaked")
   }
 
   test("law: the signature store equals a fresh minhash64 fold over the gram store") {
@@ -961,14 +938,15 @@ class DedupSpec extends SparkSpec {
       (2L, Seq(0.0f, 0.0f, 1.0f)))
       .toDF("seed_id", "s_emb")
     val cap = 1
-    val top2 = Dedup.assignToSeedsIvfTop2(vecs, seeds, probes = 3)
+    val ivf = Dedup.Ivf(Dedup.buildIvfSeedIndex(seeds, 3), probes = 3)
+    val top2 = Dedup.assignToSeeds(vecs, seeds, top = 2, search = ivf)
       .select("vec_id", "cluster_id", "cluster2_id").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(top2(100L)._1 === 0L, s"anchor vec at A misassigned: ${top2(100L)}")
     (1 to 6).foreach(i =>
       assert(top2(i.toLong) === ((1L, 0L)), s"vec $i top2 ${top2(i.toLong)}"))
-    val capped = Dedup.assignToSeedsIvfCapped(vecs, seeds, probes = 3,
-        cap = cap)
+    val capped = Dedup.assignToSeeds(vecs, seeds,
+        search = ivf.copy(cap = Some(cap)))
       .select("vec_id", "cluster_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     // (1) partition
@@ -1014,37 +992,39 @@ class DedupSpec extends SparkSpec {
     val e = Tables(spark, sf0001, "embeddings").select("vec_id", "embedding")
     val seeds = Dedup.semanticSeedsK(e, 8)
     val n = e.count()
+    val idx = Dedup.buildIvfSeedIndex(seeds, 8)
+    val allCells = Dedup.Ivf(idx, probes = 4) // nc = max(4, sqrt(8)) = 4 cells
     val exact = Dedup.assignToSeeds(e, seeds)
       .select("vec_id", "cluster_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = Dedup.assignToSeedsIvf(e, seeds, probes = 4) // nc = max(4, sqrt(8)) = 4 cells
+    val full = Dedup.assignToSeeds(e, seeds, search = allCells)
       .select("vec_id", "cluster_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(full.length.toLong === n, "all-probe IVF must assign every vector once")
     full.foreach { case (v, c) =>
       assert(c === exact(v), s"vec $v: all-probe IVF $c != exact ${exact(v)}")
     }
-    val two = Dedup.assignToSeedsIvf(e, seeds, probes = 2)
+    val two = Dedup.assignToSeeds(e, seeds, search = Dedup.Ivf(idx, probes = 2))
       .select("vec_id").collect().map(_.getLong(0))
     assert(two.length.toLong === n && two.distinct.length.toLong === n,
       "2-probe IVF must be total and duplicate-free")
     // Top2 variant (the door's delta-side form): all cells probed ==
     // exact Top2 on both winner and runner-up
-    val exact2 = Dedup.assignToSeedsTop2(e, seeds)
+    val exact2 = Dedup.assignToSeeds(e, seeds, top = 2)
       .select("vec_id", "cluster_id", "cluster2_id").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val ivf2 = Dedup.assignToSeedsIvfTop2(e, seeds, probes = 4)
+    val ivf2 = Dedup.assignToSeeds(e, seeds, top = 2, search = allCells)
       .select("vec_id", "cluster_id", "cluster2_id").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
     assert(ivf2.length.toLong === n, "all-probe IvfTop2 must be total")
     ivf2.foreach { case (v, pair) =>
       assert(pair === exact2(v), s"vec $v: all-probe IvfTop2 $pair != exact ${exact2(v)}")
     }
-    // Capped variant (what assignToSeedsAdaptive actually runs beyond
-    // the threshold): all cells probed + cap >= n must DEGENERATE to
+    // Capped variant (what seedSearch picks for top-1 beyond the
+    // threshold): all cells probed + cap >= n must DEGENERATE to
     // exact assignment — no cluster can exceed n members, so no spill
-    val cappedFull = Dedup.assignToSeedsIvfCapped(e, seeds,
-        probes = 4, cap = n.toInt)
+    val cappedFull = Dedup.assignToSeeds(e, seeds,
+        search = allCells.copy(cap = Some(n.toInt)))
       .select("vec_id", "cluster_id", "centroid_cos").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
     val exactCos = Dedup.assignToSeeds(e, seeds)
@@ -1056,7 +1036,8 @@ class DedupSpec extends SparkSpec {
     }
     // and the cap is LIVE: capping at 1 forces spills on this fixture
     // (some cluster holds > 1 member), yet assignment stays total
-    val capped1 = Dedup.assignToSeedsIvfCapped(e, seeds, probes = 4, cap = 1)
+    val capped1 = Dedup.assignToSeeds(e, seeds,
+        search = allCells.copy(cap = Some(1)))
       .select("vec_id", "cluster_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(capped1.length.toLong === n, "capped assignment must stay total")
@@ -1064,10 +1045,10 @@ class DedupSpec extends SparkSpec {
       "cap=1 spilled nothing — the cap is dead")
     // Top3 variant (the p3 door's rung beyond the threshold): all cells
     // probed == exact Top3 on winner, runner-up, AND third
-    val exact3 = Dedup.assignToSeedsTop3(e, seeds)
+    val exact3 = Dedup.assignToSeeds(e, seeds, top = 3)
       .select("vec_id", "cluster_id", "cluster2_id", "cluster3_id").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val ivf3 = Dedup.assignToSeedsIvfTop3(e, seeds, probes = 4)
+    val ivf3 = Dedup.assignToSeeds(e, seeds, top = 3, search = allCells)
       .select("vec_id", "cluster_id", "cluster2_id", "cluster3_id").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(ivf3.length.toLong === n, "all-probe IvfTop3 must be total")
@@ -1075,6 +1056,54 @@ class DedupSpec extends SparkSpec {
       assert(triple === exact3(v), s"vec $v: all-probe IvfTop3 $triple != exact ${exact3(v)}")
     }
     spark.catalog.clearCache() // the assigners persist coded frames
+  }
+
+  test("law: exact and all-cells IVF top-n assignment break cosine ties to the smaller seed id") {
+    // No fixture embedding ties two seeds, so the tie rule (ORDER BY
+    // ccos DESC, seed_id — the oracles') is planted here: seeds 3 and 7
+    // share one embedding, and any vector with equal x/y (or zero x/y)
+    // components sits at the same cosine from several seeds. The spec
+    // is a driver-side brute force ranked by (cosine desc, seed_id asc),
+    // with the cosine folded exactly as cosine_sim folds it (double
+    // accumulation over the float components).
+    import graft.operators.Dedup
+    graft.functions.GraftFunctions.register(spark)
+    val seedVecs = Seq(7L -> Seq(1f, 0f, 0f), 3L -> Seq(1f, 0f, 0f),
+      5L -> Seq(0f, 1f, 0f), 2L -> Seq(0f, 0f, 1f), 9L -> Seq(1f, 1f, 0f))
+    val vecs = Seq(1L -> Seq(1f, 0.1f, 0.05f), 2L -> Seq(1f, 1f, 0.1f),
+      3L -> Seq(0f, 0f, 1f), 4L -> Seq(-1f, 0.2f, 0.3f),
+      5L -> Seq(0.3f, 0.9f, 0.2f), 6L -> Seq(1f, 1f, 1f))
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      a.zip(b).foreach { case (x, y) =>
+        dot += x.toDouble * y; na += x.toDouble * x; nb += y.toDouble * y }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    val ranked = vecs.map { case (v, emb) =>
+      v -> seedVecs.map { case (sid, se) => (cos(emb, se), sid) }
+        .sortBy { case (c, sid) => (-c, sid) }
+    }.toMap
+    // non-vacuity: ties straddle the rank 1|2 and the rank 2|3 boundary
+    assert(ranked(1L)(0)._1 == ranked(1L)(1)._1, "no rank-1 tie planted")
+    assert(ranked(2L)(1)._1 == ranked(2L)(2)._1, "no rank-2 tie planted")
+    val seeds = seedVecs.toDF("seed_id", "s_emb")
+    val e = vecs.toDF("vec_id", "embedding")
+    // nc = max(4, √5) = 4 coarse cells: 4 probes reach every seed
+    val allCells = Dedup.Ivf(Dedup.buildIvfSeedIndex(seeds, 5), probes = 4)
+    val searches = Seq[(String, Dedup.SeedSearch)](
+      "exact" -> Dedup.Exact, "all-cells IVF" -> allCells)
+    for (top <- 1 to 3; (name, search) <- searches) {
+      val cols = Seq("cluster_id", "cluster2_id", "cluster3_id").take(top)
+      val got = Dedup.assignToSeeds(e, seeds, top, search)
+        .select(col("vec_id") +: col("centroid_cos") +: cols.map(col): _*)
+        .collect().map(r => r.getLong(0) ->
+          (r.getDouble(1), cols.indices.map(i => r.getLong(2 + i)).toList))
+        .toMap
+      val want = ranked.map { case (v, rs) =>
+        v -> (rs.head._1, rs.take(top).map(_._2).toList) }
+      assert(got === want, s"$name top=$top")
+    }
+    spark.catalog.clearCache() // the IVF path persists its frames
   }
 
   test("law: the union recall twin is consistent with the probe ladder and the union only adds") {
@@ -1106,7 +1135,10 @@ class DedupSpec extends SparkSpec {
     // containments, exact duplicates, probe∩index overlap, and
     // size-boundary pairs all occur), at two thresholds including one
     // where the epsilon discipline's ceil boundary (n*t integral) is
-    // exercised. Brute force on the driver is the spec.
+    // exercised. Brute force on the driver is the spec. The same draws
+    // also check the other two forms of the one shared PPJoin stage:
+    // the stored-order probe (both probe modes) and the raw
+    // self-corpus join.
     val rnd = new scala.util.Random(20261215L)
     for (trial <- 1 to 3; t <- Seq(0.5, 0.8)) {
       val pool = (1L to 15L).map(h => h * 1000003L)
@@ -1121,21 +1153,43 @@ class DedupSpec extends SparkSpec {
         Set(101L, 102L)
       val df = docs.toSeq.map { case (id, g) => (id, g.toSeq.sorted) }
         .toDF("doc_id", "grams")
-      val got = Dedup.containmentJoinProbeIndex(
-          df.filter(col("doc_id").isin(probeIds.toSeq: _*)),
-          df.filter(col("doc_id").isin(indexIds.toSeq: _*)), t)
-        .select("doc_id", "container").as[(Long, Long)].collect().toSet
+      val probe = df.filter(col("doc_id").isin(probeIds.toSeq: _*))
+      val index = df.filter(col("doc_id").isin(indexIds.toSeq: _*))
       val byId = docs.toMap
-      val want = (for {
-        a <- probeIds.toSeq; b <- indexIds.toSeq
+      def brute(ps: Set[Long], is: Set[Long]): Set[(Long, Long)] = (for {
+        a <- ps.toSeq; b <- is.toSeq
         if a != b
         if (byId(a) intersect byId(b)).size.toDouble / byId(a).size >= t
       } yield (a, b)).toSet
-      assert(got === want,
-        s"trial $trial t=$t: missing=${(want -- got).take(5)} " +
-          s"extra=${(got -- want).take(5)}")
+      def check(form: String, out: org.apache.spark.sql.DataFrame,
+          want: Set[(Long, Long)]): Unit = {
+        val got = out.select("doc_id", "container").as[(Long, Long)]
+          .collect().toSet
+        assert(got === want,
+          s"trial $trial t=$t $form: missing=${(want -- got).take(5)} " +
+            s"extra=${(got -- want).take(5)}")
+      }
+      val want = brute(probeIds, indexIds)
+      check("probe/index", Dedup.containmentJoinProbeIndex(probe, index, t), want)
+      // stored-order form: index-side counts, rarity-ordered sets and
+      // postings built here from the index alone (the store law's recipe)
+      val cnt = index.select(explode(col("grams")).as("h"))
+        .groupBy("h").agg(count(lit(1)).as("cnt"))
+      val sets = index.select(col("doc_id"), explode(col("grams")).as("h"))
+        .join(cnt, "h").groupBy("doc_id")
+        .agg(array_sort(collect_list(struct(col("cnt"), col("h")))).as("arr"))
+        .select(col("doc_id"), expr("transform(arr, x -> x.h)").as("hs"),
+          size(col("arr")).as("n"))
+      for (bc <- Seq(false, true))
+        check(s"stored-order broadcastProbe=$bc",
+          Dedup.containmentProbeStoredOrder(probe, sets,
+            Dedup.containIndexPostings(sets), cnt, t, bc), want)
+      // raw self-corpus form: the doc_id % 3 == 0 slice against every doc
+      val ids = docs.map(_._1).toSet
+      check("raw", Dedup.containmentJoinOnGrams(df, t),
+        brute(ids.filter(_ % 3 == 0), ids))
       assert(want.nonEmpty, s"trial $trial t=$t: vacuous draw")
-      spark.catalog.clearCache() // the join persists its set frames
+      spark.catalog.clearCache() // the joins persist their set frames
     }
   }
 

@@ -1154,7 +1154,7 @@ class StreamingSpec extends SparkSpec {
     val base = graft.operators.Dedup.assignToSeeds(baseEmb, seeds)
       .select(col("cluster_id").as("b_cluster"), col("embedding").as("b_emb"))
     val delta = e.filter(col("vec_id") % 2 === 1)
-    val asg = graft.operators.Dedup.assignToSeedsTop2(delta, seeds)
+    val asg = graft.operators.Dedup.assignToSeeds(delta, seeds, top = 2)
     val dup = asg.select(col("vec_id"), col("embedding"),
         explode(array(col("cluster_id"), col("cluster2_id"))).as("pc"))
       .join(base,
@@ -1288,7 +1288,7 @@ class StreamingSpec extends SparkSpec {
     val base = graft.operators.Dedup.assignToSeeds(baseEmb, seeds)
       .select(col("cluster_id").as("b_cluster"), col("embedding").as("b_emb"))
     val delta = e.filter(col("vec_id") % 2 === 1)
-    val asg3 = graft.operators.Dedup.assignToSeedsTop3(delta, seeds)
+    val asg3 = graft.operators.Dedup.assignToSeeds(delta, seeds, top = 3)
     val dup3 = asg3.select(col("vec_id"), col("embedding"),
         explode(array(col("cluster_id"), col("cluster2_id"),
           col("cluster3_id"))).as("pc"))
@@ -1323,7 +1323,7 @@ class StreamingSpec extends SparkSpec {
     val base = graft.operators.Dedup.assignToSeeds(baseEmb, seeds)
       .select(col("cluster_id").as("b_cluster"), col("embedding").as("b_emb"))
     val delta = e.filter(col("vec_id") % 2 === 1)
-    val asg = graft.operators.Dedup.assignToSeedsTop2(delta, seeds)
+    val asg = graft.operators.Dedup.assignToSeeds(delta, seeds, top = 2)
     val dupCluster = asg.select(col("vec_id"), col("embedding"),
         explode(array(col("cluster_id"), col("cluster2_id"))).as("pc"))
       .join(base,
