@@ -6,11 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.GraftFunctions
 
-/** SparkSessionExtensions entry point: makes graft's native expressions
-  * available to pure-SQL users without touching session internals. It
-  * injects the same function table [[GraftFunctions.register]] installs.
-  *
-  * Usage:
+/** SparkSessionExtensions entry point: how every graft session gets
+  * [[GraftFunctions.all]]. [[GraftSession.local]] sets it, Spark hands it
+  * to each `newSession()` fork, and no query installs functions itself.
+  * A session built elsewhere sets it the same way:
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   *     ...

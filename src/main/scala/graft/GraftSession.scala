@@ -10,14 +10,15 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** A local-mode session with `cpus` task slots and as many shuffle
-    * partitions. AQE is on (the executed configuration), timestamps are
-    * UTC, events.ts's TIMESTAMP(NANOS) reads as a long (`Tables`
-    * converts it to µs), and the warehouse that bucketed-table
-    * `saveAsTable` writes sits under `java.io.tmpdir`, not the working
-    * directory. Log level ERROR: thousands of WindowExec "No Partition
-    * Defined" WARN lines would otherwise push Bench's JSON line out of a
-    * bounded output tail (PlanShapeSpec checks for those windows
-    * instead).
+    * partitions, resolving [[GraftExtensions]]' function table (so does
+    * every `newSession()` fork of it). AQE is on (the executed
+    * configuration), timestamps are UTC, events.ts's TIMESTAMP(NANOS)
+    * reads as a long (`Tables` converts it to µs), and the warehouse
+    * that bucketed-table `saveAsTable` writes sits under
+    * `java.io.tmpdir`, not the working directory. Log level ERROR:
+    * thousands of WindowExec "No Partition Defined" WARN lines would
+    * otherwise push Bench's JSON line out of a bounded output tail
+    * (PlanShapeSpec checks for those windows instead).
     */
   def local(app: String, cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
@@ -30,6 +31,7 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark

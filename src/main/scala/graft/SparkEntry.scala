@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators._
 
-/** Driver contract — see SURVEY.md §7 + the builder prompt.
-  *
-  * Every implemented operator from SURVEY.md §2 registers a named query
-  * here; SQL-expressible ones carry a DuckDB oracle in [[oracleSql]]
-  * (column names aligned on both sides — the driver sorts columns by name
-  * and hashes values).
+/** Driver contract (SURVEY.md §7): every implemented operator from
+  * SURVEY.md §2 registers a named query here; SQL-expressible ones carry
+  * a DuckDB oracle in [[oracleSql]] (column names aligned on both sides;
+  * the driver sorts columns by name and hashes values). [[queries]] need
+  * a session resolving graft's functions: [[GraftSession.local]]'s, or one
+  * with `spark.sql.extensions=graft.GraftExtensions` ([[entry]]'s need not).
   */
 object SparkEntry {
 

@@ -6,8 +6,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
-/** Deterministic hashing primitives for the dedup family: MinHash
-  * signatures, SimHash fingerprints, and random-hyperplane LSH bit codes.
+/** Deterministic hashing primitives for the dedup family: the SplitMix64
+  * mixer the native MinHash/SimHash/hyperplane expressions share, and the
+  * SimHash and random-hyperplane references they are pinned against.
   *
   * All seeds are fixed constants: results are reproducible across runs,
   * partitionings, and cluster sizes (required both for the correctness gate
@@ -24,30 +25,6 @@ object Hashing extends Serializable {
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
-  }
-
-  /** MinHash: k independent fully-mixed hashes h_j(x) = splitmix64(x ^
-    * gamma_j); the signature element j is the minimum over all shingles.
-    * E[matching fraction of signature] = Jaccard(setA, setB).
-    *
-    * Deliberately NOT the textbook (a*x + b) mod p family: with 32-bit x
-    * and a < 2^30 the product rarely wraps p = 2^61 - 1, leaving h monotone
-    * in x, so every "permutation" picks the same smallest-x shingle and the
-    * signature collapses to a 1-element sketch (see MinHashFromHashes).
-    */
-  def minhashSignature(k: Int, seed: Long)(shingles: Seq[String]): Array[Long] = {
-    val gammas = Array.tabulate(k)(j => splitmix64(seed + j))
-    val sig = Array.fill(k)(Long.MaxValue)
-    shingles.foreach { sh =>
-      val x = splitmix64(MurmurHash3.stringHash(sh).toLong)
-      var j = 0
-      while (j < k) {
-        val h = splitmix64(x ^ gammas(j))
-        if (h < sig(j)) sig(j) = h
-        j += 1
-      }
-    }
-    sig
   }
 
   /** SimHash-64: per-token 64-bit hash; each bit position accumulates
@@ -102,15 +79,11 @@ object Hashing extends Serializable {
 
   // --- Column-level wrappers -------------------------------------------
 
-  def minhashUdf(k: Int = 64, seed: Long = 42L): UserDefinedFunction =
-    udf(minhashSignature(k, seed) _)
-
   val simhashUdf: UserDefinedFunction = udf(simhash64 _)
 
   def hyperplaneUdf(nBits: Int = 64, dim: Int = 64, seed: Long = 42L): UserDefinedFunction =
     udf(hyperplaneBits(nBits, dim, seed) _)
 
-  def minhash(c: Column, k: Int = 64, seed: Long = 42L): Column = minhashUdf(k, seed)(c)
   def simhash(c: Column): Column = simhashUdf(c)
   def hyperplane(c: Column, nBits: Int = 64, dim: Int = 64, seed: Long = 42L): Column =
     hyperplaneUdf(nBits, dim, seed)(c)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression}
@@ -66,10 +65,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** graft's SQL-callable functions: one (name, builder) table that both
-  * [[GraftFunctions.register]] and [[graft.GraftExtensions]] install, so
-  * the session registration and the `spark.sql.extensions` surface
-  * cannot drift apart.
+/** graft's SQL-callable functions: the one (name, builder) table.
+  * [[graft.GraftExtensions]] is its one installer, and
+  * [[graft.GraftSession.local]] applies it to every graft session.
   */
 object GraftFunctions {
   // optional second arg = window width, so call sites keep their local
@@ -144,11 +142,4 @@ object GraftFunctions {
     "bloom_filter_agg" -> (es =>
       new BloomFilterAggregate(es(0), es(1), es(2)).toAggregateExpression()),
     "bloom_might_contain" -> (es => BloomFilterMightContain(es(0), es(1))))
-
-  /** Installs [[all]] in `spark`'s function registry. Idempotent —
-    * query builders call it on entry. */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
 }

@@ -51,7 +51,6 @@ object Dedup {
     val path = Sources.ensureStore(dir, "gram_store_v1") { tmp =>
       hashedGrams(s, dir).write.mode("overwrite").parquet(tmp)
     }
-    graft.functions.GraftFunctions.register(s) // store readers still call minhash64 etc.
     // Scan-granularity insurance: the store is compact (8-byte hashes),
     // so file packing (maxPartitionBytes >> store size) can hand the
     // WHOLE table to one scan task — and the family's expensive map
@@ -95,7 +94,6 @@ object Dedup {
         .select("doc_id", "sig")
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.functions.GraftFunctions.register(s)
     s.read.parquet(path)
   }
 
@@ -121,7 +119,6 @@ object Dedup {
         .select("doc_id", "grams", "sig")
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.functions.GraftFunctions.register(s)
     s.read.parquet(path)
   }
 
@@ -166,13 +163,11 @@ object Dedup {
     * doors can gram their own micro-batches (near-dup filter, streaming
     * containment).
     */
-  def batchGrams(batchDocs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(batchDocs.sparkSession)
+  def batchGrams(batchDocs: DataFrame): DataFrame =
     batchDocs
       .withColumn("w", split(norm(col("text")), " "))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"), call_function("ngram_hashes", col("w")).as("grams"))
-  }
 
   /** Loan-pattern variant for long-lived sessions (the streaming
     * foreachBatch sink): runs `use` on the survivor frame, then
@@ -413,7 +408,6 @@ object Dedup {
     * count, the callers all have it — avoids a recount).
     */
   def buildIvfSeedIndex(sdf: DataFrame, k: Long): IvfSeedIndex = {
-    graft.functions.GraftFunctions.register(sdf.sparkSession)
     val nc = math.max(4L, math.round(math.sqrt(k.toDouble))).toInt
     val coarse = sdf
       .orderBy(md5(col("seed_id").cast("string")), col("seed_id"))
@@ -436,7 +430,6 @@ object Dedup {
     */
   private def ivfCandidates(e: DataFrame, idx: IvfSeedIndex,
       probes: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
     // probe: vector → its top-`probes` coarse cells (window over the
     // per-vector nc-row group — bounded by √k, never corpus-grain)
     e.crossJoin(broadcast(idx.coarse))
@@ -486,7 +479,6 @@ object Dedup {
   }
 
   def semanticAssigned(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
     val k = semanticK(e.count())
     val seeds = semanticSeedsK(e, k)
@@ -755,7 +747,6 @@ object Dedup {
     // with its built-in jaro_winkler_similarity (same textbook
     // definition, boost gated at jaro > 0.7 — verified empirically).
     "q_jaro_names" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val w = Tables(s, dir, "part").select(col("p_name")).distinct()
       val a = w.select(col("p_name").as("name_a"),
         substring(col("p_name"), 1, 1).as("blk"))
@@ -829,7 +820,6 @@ object Dedup {
     // every 13th doc re-submitted verbatim (true dup), every 17th with a
     // suffix token (near-miss that must classify as new).
     "q_dedup_bloom" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val doc = Tables(s, dir, "documents").select("doc_id", "text")
       val delta = doc.filter(col("doc_id") % 13 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
@@ -921,7 +911,6 @@ object Dedup {
     // definition, like the other *_recall rows), not a production path;
     // at corpus scale recall is estimated on a sampled slice.
     "q_dedup_semantic_recall" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
       val a = assignToSeeds(e, semanticSeeds(e), top = 3)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -971,7 +960,6 @@ object Dedup {
     // banded self-join, families complementary (overlap ~0.09) —
     // SCALE.md round-11.
     "q_dedup_semantic_recall_union" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
       val n = e.count()
       val a = assignToSeeds(e, semanticSeedsK(e, semanticK(n)), top = 2)
@@ -1323,7 +1311,6 @@ object Dedup {
     * recompute-everything path.
     */
   def crossPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = ensureBaseSignatureStore(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
     // delta half read from the gram store too (column-pruned, id-filtered)
     // — in the daily-delta deployment this is the delta batch's own
@@ -1525,14 +1512,12 @@ object Dedup {
     * codegen expression (FunctionsSpec pins bit-equality to the
     * reference UDF in Hashing).
     */
-  def simhashFps(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def simhashFps(docs: DataFrame): DataFrame =
     docs
       .withColumn("toks", split(norm(col("text")), " "))
       .filter(size(col("toks")) > 0)
       .withColumn("sig", call_function("simhash64_fp", col("toks")))
       .select("doc_id", "sig")
-  }
 
   /** One-time SimHash fingerprint store: (doc_id, sig) — 16 B/doc. Same
     * amortization as the MinHash signature store: q_dedup_simhash's
@@ -1548,7 +1533,6 @@ object Dedup {
       simhashFps(Tables(s, dir, "documents"))
         .write.mode("overwrite").parquet(tmp)
     }
-    graft.functions.GraftFunctions.register(s)
     s.read.parquet(path)
   }
 
@@ -1578,13 +1562,11 @@ object Dedup {
     * serves the corpus count, both band sides of the candidate join, and
     * (in [[embeddingNearDup]]) the final left-join id list.
     */
-  def codedEmbeddings(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
+  def codedEmbeddings(embeddings: DataFrame): DataFrame =
     embeddings
       .select("vec_id", "embedding") // prune before persist: don't cache unused columns
       .withColumn("code", call_function("hyperplane_bits", col("embedding")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-  }
 
   /** LSH candidate pairs (vid, nid, cos) over a [[codedEmbeddings]] frame:
     * banded equi-join on the 64-bit hyperplane code (band width adaptive

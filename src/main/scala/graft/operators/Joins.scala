@@ -66,11 +66,6 @@ object Joins {
         .option("path", s"$tmp/o_b").mode("overwrite").saveAsTable(s"${bt}_o")
       s.sql(s"DROP TABLE IF EXISTS ${bt}_li")
       s.sql(s"DROP TABLE IF EXISTS ${bt}_o")
-      // ensureStore's completeness marker sits at the store root (the
-      // per-table _SUCCESS files live one level down); fail loudly here
-      // rather than as a later no-complete-store error
-      require(new java.io.File(s"$tmp/_SUCCESS").createNewFile(),
-        s"bucketed-tables store: could not create completeness marker $tmp/_SUCCESS")
       ()
     }
     if (!s.catalog.tableExists(liName))

@@ -119,7 +119,6 @@ object LangId {
     * arithmetic throughout.
     */
   def classify(docs: DataFrame, profiles: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val langsDf = profiles.select("lang").distinct()
     // per-doc rank profile computed NATIVELY within the projection
     // (functions/TrigramExpressions.scala) — the SQL chain this

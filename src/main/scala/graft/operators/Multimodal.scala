@@ -204,7 +204,6 @@ object Multimodal {
   def decodedSig(df: DataFrame, codec: MediaCodec = FakeDecoder): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     df.select(col("doc_id"), col("payload")).as[MediaRow].mapPartitions { it =>
       it.map { r =>
         val d = codec.decode(r.payload)
@@ -227,7 +226,6 @@ object Multimodal {
     val path = Sources.ensureStore(dir, "media_sig_v1") { tmp =>
       decodedSig(ensureMediaStore(s, dir)).write.mode("overwrite").parquet(tmp)
     }
-    graft.functions.GraftFunctions.register(s)
     s.read.parquet(path)
   }
 

@@ -105,8 +105,7 @@ object Scalars {
     // try_cast yields NULL instead of failing the job, try_divide yields
     // NULL on division by zero. Zero denominators are constructed with
     // nullif-free arithmetic (l_linenumber - 1 is 0 for the first line).
-    "q_try_funcs" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+    "q_try_funcs" -> ((s, dir) =>
       Tables(s, dir, "lineitem").select(
         col("l_orderkey"), col("l_linenumber"),
         // native exception-free parse: l_returnflag never parses, and
@@ -116,8 +115,7 @@ object Scalars {
         expr("try_parse_int(l_returnflag)").as("flag_as_int"),
         expr("try_cast(cast(l_linenumber AS STRING) AS INT)").as("line_as_int"),
         try_divide(col("l_extendedprice"), (col("l_linenumber") - 1).cast(DoubleType))
-          .as("price_per"))
-    }),
+          .as("price_per"))),
 
     // Numeric histogram: fixed-width value buckets + counts — the
     // distribution profile every curation report starts with. One

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.2
   * "Similarity join"): brute-force cosine top-k as the oracle-checkable
@@ -85,7 +84,6 @@ object Similarity {
     // must retrain, never silently reuse an index trained differently
     val path = Sources.ensureStore(dir,
       s"ivf_centroids_k${k}_i${iters}_t${trainSample}_v1") { tmp =>
-      GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
         .persist(StorageLevel.MEMORY_AND_DISK)
       val n = e.count()
@@ -104,7 +102,6 @@ object Similarity {
     */
   def ensureBaseCodeStore(s: SparkSession, dir: String): DataFrame = {
     val path = Sources.ensureStore(dir, "embedding_codes_base_v1") { tmp =>
-      GraftFunctions.register(s)
       Tables(s, dir, "embeddings").select("vec_id", "embedding")
         .filter(col("vec_id") % 2 === 0)
         .withColumn("code", call_function("hyperplane_bits", col("embedding")))
@@ -119,7 +116,6 @@ object Similarity {
     * can run it with planted near-dup delta queries.
     */
   def annCross(baseCoded: DataFrame, delta: DataFrame, k: Int = 3): DataFrame = {
-    GraftFunctions.register(delta.sparkSession)
     val b = baseCoded.persist(StorageLevel.MEMORY_AND_DISK)
     val bits = Lsh.bandBits(b.count())
     val d = delta.select("vec_id", "embedding")
@@ -146,7 +142,6 @@ object Similarity {
     */
   def annLsh(embeddings: DataFrame, queryPred: org.apache.spark.sql.Column,
       k: Int = 10): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings
       .select("vec_id", "embedding") // prune before persist: don't cache unused columns
       .withColumn("code", call_function("hyperplane_bits", col("embedding")))
@@ -179,7 +174,6 @@ object Similarity {
     // work K×n, two struct-extremum aggs — no window over the corpus,
     // no n² anywhere.
     "q_triplet_mine" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
       val anchors = e
         .withColumn("ak",
@@ -214,7 +208,6 @@ object Similarity {
     // is a native codegen'd Catalyst expression (graft.functions
     // .CosineSimilarity); TakeOrdered-per-group via row_number.
     "q_ann_bruteforce" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
@@ -241,7 +234,6 @@ object Similarity {
     // bounded by construction. All arithmetic is rank-integer division
     // in doubles with a fixed two-term sum — engine-exact.
     "q_hybrid_rrf" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val lex = Text.queries("q_bm25")(s, dir)
         .withColumn("r_lex", row_number().over(
           Window.orderBy(col("bm25").desc, col("doc_id"))))
@@ -278,7 +270,6 @@ object Similarity {
     // corpus size. Approximate -> rows-only check; SimilaritySpec pins
     // recall vs q_ann_bruteforce.
     "q_ann_ivf" -> ((s, dir) => {
-      GraftFunctions.register(s)
       // Persisted: the assignment pass and the probe pass reuse one scan.
       val e = Tables(s, dir, "embeddings")
         .select("vec_id", "embedding") // prune before persist: don't cache unused columns
@@ -325,7 +316,6 @@ object Similarity {
     // plain SQL over the plant predicate. Rank-free (set membership, not
     // top-k), so organic duplicate vectors can't steal the slot.
     "q_ann_lsh_recall" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
       val planted = e.filter(col("vec_id") < 50)
         .select((col("vec_id") + lit(1000000000L)).as("vec_id"), col("embedding"))
@@ -350,7 +340,6 @@ object Similarity {
     // centroid index comes from the persisted store, so this also proves
     // the index is readable across sessions.
     "q_ann_ivf_recall" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
         .persist(StorageLevel.MEMORY_AND_DISK)
       val cb = broadcast(ensureIvfCentroids(s, dir)
@@ -381,7 +370,6 @@ object Similarity {
     // bit-identically to a fresh hyperplane_bits pass in a different JVM
     // (fixed seed 42 in HyperplaneExpression).
     "q_ann_cross_recall" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val base = ensureBaseCodeStore(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
       val bits = Lsh.bandBits(base.count())
       val delta = base

@@ -47,9 +47,12 @@ object Sources {
         val tmp =
           s"$path.build_${java.util.UUID.randomUUID().toString.replace("-", "")}"
         val t = new java.io.File(tmp)
-        // a throwing build must not leak its half-written tmp dir
-        try build(tmp)
-        catch { case e: Throwable => deleteRec(t); throw e }
+        // a throwing build leaks no tmp dir; a multi-frame build gets its root marker here
+        try {
+          build(tmp)
+          val done = new java.io.File(t, "_SUCCESS")
+          require(done.exists() || done.createNewFile(), s"ensureStore($tag): no marker $done")
+        } catch { case e: Throwable => deleteRec(t); throw e }
         if (!t.renameTo(new java.io.File(path))) {
           // rename failure is only benign when we lost a build race and the
           // winner's complete store is already in place — verify, else fail
@@ -64,7 +67,7 @@ object Sources {
       path
     }
 
-  private def deleteRec(f: java.io.File): Unit = {
+  private[graft] def deleteRec(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(deleteRec))
     f.delete(); ()
   }

@@ -129,7 +129,6 @@ object Text {
     */
   private[graft] def spanHashes(docs: DataFrame): DataFrame = {
     val k = 8 // span width in tokens
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // spread-gated before the CPU-bound tokenize + per-span md5 explode
     // (round-16): a one-task fixture scan serializes the whole pass; a
     // door batch (RDD-backed, no input files) or an at-scale multi-file
@@ -205,8 +204,6 @@ object Text {
     */
   private[graft] def bloomPruneSpans(delta: DataFrame,
       base: DataFrame, knownDeltaRows: Long = -1L): DataFrame = {
-    graft.functions.GraftFunctions.register(delta.sparkSession)
-    graft.functions.GraftFunctions.register(base.sparkSession)
     // sizing rides the batch: an upper bound (total, not distinct, span
     // rows) only over-sizes the bloom and lowers the false-positive
     // rate. Callers that already counted the (persisted) batch pass it
@@ -340,7 +337,6 @@ object Text {
     */
   def dupIntervalsOfTokens(tok: DataFrame): DataFrame = {
     val k = 8
-    graft.functions.GraftFunctions.register(tok.sparkSession)
     val g = tok
       .filter(size(col("w")) >= k)
       // native span_md5s: value-identical to the md5(array_join(slice))
@@ -592,7 +588,6 @@ object Text {
     * keeps its transparent grouped-count form — so the same numbers now
     * arrive via THREE independent algebras. */
   private def repetitionStats(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val grams = (repTopNs ++ repDupNs).map { case (n, _) =>
       s"st_$n" -> call_function("rep_gram_stats", col("w"), lit(n))
     }
@@ -916,8 +911,7 @@ object Text {
     * — the cross-engine hash) — the shared tokenize+hash pass behind
     * q_dsir and the ingest-time q_stream_dsir.
     */
-  private def dsirBuckets(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  private def dsirBuckets(docs: DataFrame): DataFrame =
     docs
       .withColumn("w", normTokens(col("text")))
       .filter(size(col("w")) >= 2)
@@ -926,7 +920,6 @@ object Text {
       // % 1024) — identical bucket values, no per-bigram interpreter cost
       .withColumn("bks", call_function("bigram_md5_buckets", col("w")))
       .select("doc_id", "lang", "bks")
-  }
 
   /** Per-bucket (b, tc, rc) counts of a bucketed frame: tc counts the
     * TARGET bigrams (lang=en — the one definition of the target), rc
@@ -1015,12 +1008,6 @@ object Text {
           .filter(col("next").isNotNull)
           .groupBy("word", "next").agg(count(lit(1)).as("cb"))
           .write.mode("overwrite").parquet(s"$tmp/bi")
-        // multi-frame store: the root completeness marker is ours to
-        // write (each parquet subdir only marks itself); fail loudly at
-        // the point of failure, not later in ensureStore
-        require(new java.io.File(s"$tmp/_SUCCESS").createNewFile(),
-          s"bigram LM store: could not create completeness marker $tmp/_SUCCESS")
-        ()
       } finally { tok.unpersist(); () }
     }
 
@@ -1436,13 +1423,6 @@ object Text {
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$tmp/merges")
         vocab.write.mode("overwrite").parquet(s"$tmp/vocab")
-        // multi-frame store: the root completeness marker is ours to
-        // write (each parquet subdir only marks itself); a silent marker
-        // failure would surface later as ensureStore's confusing
-        // no-complete-store error, so fail HERE
-        require(new java.io.File(s"$tmp/_SUCCESS").createNewFile(),
-          s"ensureBpeStoreOf($tag): could not create completeness marker $tmp/_SUCCESS")
-        ()
       } finally { vocab.unpersist(); () }
     }
 
@@ -1475,7 +1455,6 @@ object Text {
     * instead. One pass over the chunk table; cheap at any test sf.
     */
   def assertLineDedupKeysInjective(s: SparkSession, dir: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val r = Tables(s, dir, "documents")
       .withColumn("w", split(lower(col("text")), "\\s+"))
       .filter(size(col("w")) >= 4)
@@ -1975,7 +1954,6 @@ object Text {
     * compound documents exercise the sequential replace order too.
     */
   def piiAugmentedDocs(doc: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(doc.sparkSession)
     val id = col("doc_id")
     def s(c: Column): Column = c.cast(StringType)
     // eval_once: the augmented text is the root of every downstream
@@ -2010,7 +1988,6 @@ object Text {
     * expression: map-only, shuffle-free, 100 TB-safe.
     */
   def piiScrubProfile(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // eval_once: clean_text is consumed by the 7 residual counts + md5
     // + length — barrier it so the scrub fold runs once per row
     val clean = call_function("eval_once", guardedPiiClean(col("text")))
@@ -2062,13 +2039,11 @@ object Text {
     * (clean text replaces text) rather than a report; stage 0 of the
     * v2 capstone. Same sequential [[PiiPatterns]] fold as
     * [[piiScrubProfile]]'s clean_text. */
-  def piiScrubbedDocs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def piiScrubbedDocs(docs: DataFrame): DataFrame =
     // eval_once: the scrubbed text feeds the whole battery chain in
     // corpusCleanKeptOf — barrier it like the augmented text above
     docs.select(col("doc_id"), col("source"), col("lang"),
       call_function("eval_once", guardedPiiClean(col("text"))).as("text"))
-  }
 
   /** The FULL published-funnel survivors (round-14 verdict task 8 —
     * the q_corpus_clean decision feeding the capstone): PII scrub →
@@ -3310,7 +3285,7 @@ object Text {
     // stays inside the doc's own row; the corpus never shuffles. Fold is
     // in sorted char order so both engines add the same IEEE sequence;
     // round(,6) because ln is irrational.
-    "q_char_entropy" -> ((s, dir) => {
+    "q_char_entropy" -> ((s, dir) =>
       // native char_entropy_stats (round-14 verdict task 2): one
       // compiled count-map pass per row — the interpreted sorted-run
       // aggregate fold it replaces (charEntropyFoldSql, retained below
@@ -3318,7 +3293,6 @@ object Text {
       // struct per CHARACTER. Same -p·ln(p) term per distinct char in
       // ascending code-point order, so the IEEE sum sequence matches
       // both the SQL fold and the oracle's ORDER BY c list bit-for-bit.
-      graft.functions.GraftFunctions.register(s)
       Tables(s, dir, "documents")
         // oracle parity: the oracle's generate_series(1, length(text))
         // yields no rows for empty/NULL text, so those docs must be
@@ -3328,8 +3302,7 @@ object Text {
         .select(col("doc_id"),
           length(col("text")).cast(LongType).as("n_chars"),
           col("st.n_distinct").as("n_distinct_chars"),
-          round(col("st.entropy"), 6).as("entropy"))
-    }),
+          round(col("st.entropy"), 6).as("entropy"))),
 
     // Blocklist scrubbing: replace listed tokens with a redaction marker,
     // count replacements, fingerprint the scrubbed text. Pure token-level
@@ -3447,7 +3420,6 @@ object Text {
     // n=4 (same reasoning as q_decontaminate); the plan is
     // segment-length-independent.
     "q_line_dedup" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val segs = Tables(s, dir, "documents")
         .withColumn("w", split(lower(col("text")), "\\s+"))
         .filter(size(col("w")) >= 4)
@@ -3521,7 +3493,6 @@ object Text {
     "q_winnow" -> ((s, dir) => {
       val k = 4 // gram width in tokens
       val win = 4 // winnowing window in grams
-      graft.functions.GraftFunctions.register(s)
       Tables(s, dir, "documents")
         .withColumn("w", normTokens(col("text")))
         .withColumn("n", size(col("w")))
@@ -3591,7 +3562,6 @@ object Text {
     // beyond the interval computation itself. Docs without intervals
     // (including sub-8-token docs) pass through normalized-verbatim.
     "q_span_mask" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val ivs = spanIntervals(s, dir)
         .groupBy("doc_id")
         .agg(collect_list(struct(col("start_tok").as("s"),
@@ -3632,16 +3602,14 @@ object Text {
     // bit-identical across engines). The fold is a native codegen'd
     // expression (graft.functions.PolyTokenHash) — the equivalent
     // aggregate(transform(...)) HOF is interpreted per token.
-    "q_fingerprint" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+    "q_fingerprint" -> ((s, dir) =>
       Tables(s, dir, "documents")
         .withColumn("norm", normText(col("text")))
         .filter(length(col("norm")) > 0)
         .select(
           col("doc_id"),
           md5(col("norm")).as("md5_fp"),
-          call_function("poly_hash", split(col("norm"), " ")).as("poly_fp"))
-    })
+          call_function("poly_hash", split(col("norm"), " ")).as("poly_fp")))
   )
 
   /** DuckDB mirror of [[piiAugmentedDocs]] — the same CASE chain in the

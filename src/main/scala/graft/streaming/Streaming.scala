@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.Sources.deleteRec
+
 /** Structured Streaming extension layer (SURVEY.md §2.2 "Streaming"):
   * absent from the reference (batch-only FSM, mincemeat.py:294-297), so
   * this is free design on Structured Streaming idioms — file source ->
@@ -1219,7 +1221,6 @@ object Streaming {
     // output row-for-row — which is the oracle (same SQL), and
     // StreamingSpec pins the equality as the split-invariance law.
     "q_stream_containment" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val D = graft.operators.Dedup
       // persisted across micro-batches; the caches fill lazily inside
       // batch 0's first job (round-16: the two eager count() jobs bought
@@ -1469,9 +1470,6 @@ object Streaming {
     val growRoot = new java.io.File(s"$root/grow")
     val pending = new java.io.File(growRoot, "_compact_pending")
     val tmp = new java.io.File(growRoot, ".compact_tmp")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(deleteRec)); f.delete(); ()
-    }
     // every dir this compaction may fold OR delete respects the bound:
     // a mid-stream caller passes its batchId, so the current batch's
     // own (not-yet-checkpointed) dir is never touched — the replay-
@@ -1632,9 +1630,6 @@ object Streaming {
     val pending = new java.io.File(growRoot, "_promote_pending")
     val tmp = new java.io.File(growRoot, ".promote_tmp")
     val baseDir = new java.io.File(baseStorePath)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(deleteRec)); f.delete(); ()
-    }
     def finish(moves: Seq[(String, String)], dirNames: Seq[String]): Unit = {
       moves.foreach { case (src, dest) =>
         val d = new java.io.File(baseDir, dest)
@@ -1752,7 +1747,6 @@ object Streaming {
   def nearDupGrowDoor(s: SparkSession, groups: Seq[DataFrame],
       base: DataFrame, threshold: Double = 0.7,
       rootDir: String = "", compactEvery: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val D = graft.operators.Dedup
     val root = growRoot(rootDir, "graft_neardupgrow")
     runDoor(s, root, ordered(groups), compactEvery = compactEvery) {
@@ -1789,7 +1783,6 @@ object Streaming {
   def mediaGrowDoor(s: SparkSession, groups: Seq[DataFrame],
       baseStore: DataFrame, rootDir: String = "",
       compactEvery: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val M = graft.operators.Multimodal
     // baseStore is an arbitrary caller frame here (specs pass planted
     // stores), so the count stays a Spark count — only the fixture
@@ -1829,7 +1822,6 @@ object Streaming {
   def exactDupGrowDoor(s: SparkSession, groups: Seq[DataFrame],
       baseFp: DataFrame, rootDir: String = "",
       compactEvery: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val T = graft.operators.Text
     val root = growRoot(rootDir, "graft_fpgrow")
     runDoor(s, root, ordered(groups), compactEvery = compactEvery) {
@@ -1861,7 +1853,6 @@ object Streaming {
   def spanGrowDoor(s: SparkSession, groups: Seq[DataFrame],
       base: DataFrame, rootDir: String = "",
       compactEvery: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val T = graft.operators.Text
     val root = growRoot(rootDir, "graft_spangrow")
     // one count at door setup (the store is the caller-persisted compact
@@ -1947,7 +1938,6 @@ object Streaming {
     * tokens per ingest group (document the resize at production scale).
     */
   def streamPretrainSegments(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val T = graft.operators.Text
     // ALL three ingest-time artifacts are read once and cached for the
     // stream's lifetime (round-16: the fp store and the tokenizer vocab
@@ -2021,7 +2011,6 @@ object Streaming {
       probes: Int = 2, bandUnion: Boolean = false): DataFrame = {
     require(probes == 2 || probes == 3,
       s"probes $probes: the door's measured ladder is x2 (default) / x3")
-    graft.functions.GraftFunctions.register(s)
     val e = graft.Tables(s, dir, "embeddings").select("vec_id", "embedding")
     val baseEmb = e.filter(col("vec_id") % 2 === 0)
     // persisted across the micro-batches: every batch re-uses the

@@ -189,7 +189,6 @@ class AnalyticsSpec extends SparkSpec {
     // algebras that must agree. The native struct's extra `chars` field
     // is pinned against the aggregate char-sum it replaced.
     val T = graft.operators.Text
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables(spark, sf0001, "documents")
       .withColumn("w", expr(
         "split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' ')"))
@@ -233,7 +232,6 @@ class AnalyticsSpec extends SparkSpec {
     // — the entropy with EXACT double equality (the IEEE fold-order
     // claim: same term sequence, not just the same sum).
     val T = graft.operators.Text
-    graft.functions.GraftFunctions.register(spark)
     val ent = Tables(spark, sf0001, "documents")
       .filter(length(col("text")) > 0)
       .withColumn("sc",

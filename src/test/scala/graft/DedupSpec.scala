@@ -310,7 +310,6 @@ class DedupSpec extends SparkSpec {
     // crossPairs' delta half) now reads sigs from the one-time store;
     // this pin is what keeps their oracles sound: store content must be
     // bit-identical to the per-run fold it replaced, for every doc.
-    graft.functions.GraftFunctions.register(spark)
     val fresh = Dedup.ensureGramStore(spark, sf0001)
       .select(col("doc_id"), call_function("minhash64", col("grams")).as("fsig"))
     val stored = Dedup.ensureSignatureStore(spark, sf0001)
@@ -924,7 +923,6 @@ class DedupSpec extends SparkSpec {
     //       cluster's post-spill occupancy grows with the spill volume
     //       (constructed below: cap=1, one hub runner-up absorbs 5).
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
     // 3 orthogonal seeds; 6 vectors hug seed B with runner-up A (their
     // dim-0 component beats dim-2's), one vector sits AT A
     def v(id: Long, x: Double, y: Double, z: Double) =
@@ -988,7 +986,6 @@ class DedupSpec extends SparkSpec {
     // must assign EVERY vector exactly once (the orphan fallback union
     // can neither drop nor duplicate)
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf0001, "embeddings").select("vec_id", "embedding")
     val seeds = Dedup.semanticSeedsK(e, 8)
     val n = e.count()
@@ -1067,7 +1064,6 @@ class DedupSpec extends SparkSpec {
     // with the cosine folded exactly as cosine_sim folds it (double
     // accumulation over the float components).
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
     val seedVecs = Seq(7L -> Seq(1f, 0f, 0f), 3L -> Seq(1f, 0f, 0f),
       5L -> Seq(0f, 1f, 0f), 2L -> Seq(0f, 0f, 1f), 9L -> Seq(1f, 1f, 0f))
     val vecs = Seq(1L -> Seq(1f, 0.1f, 0.05f), 2L -> Seq(1f, 1f, 0.1f),

@@ -2,14 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** Native expressions vs their interpreted/HOF equivalents. */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("poly_hash matches the aggregate(transform(...)) HOF fold exactly") {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, sf0001, "documents")
       .withColumn("norm", trim(regexp_replace(lower(col("text")), "\\s+", " ")))
       .filter(length(col("norm")) > 0)
@@ -26,7 +23,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("span_md5s matches the md5(array_join(slice(...))) HOF exactly") {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, sf0001, "documents")
       .withColumn("w",
         split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " "))
@@ -52,7 +48,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("bigram_md5_buckets matches the conv(substring(md5(...))) HOF exactly") {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, sf0001, "documents")
       .withColumn("w",
         split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " "))
@@ -86,7 +81,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("span_md5_ids / chunk_md5_ids64 reject a non-constant width with a clear error") {
-    GraftFunctions.register(spark)
     Tables(spark, sf0001, "documents").limit(5)
       .selectExpr("split(text, ' ') AS w", "cast(doc_id as int) AS k")
       .createOrReplaceTempView("wk_docs")
@@ -105,7 +99,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("poly_hash handles empty arrays and non-ascii first chars") {
-    GraftFunctions.register(spark)
     val df = Seq(
       Seq.empty[String],
       Seq("a"),
@@ -119,7 +112,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("hash functions tolerate null array elements (treated as empty string)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT poly_hash(array('a', CAST(NULL AS STRING))) AS ph,
                 simhash64_fp(array('a', CAST(NULL AS STRING))) AS sh,
@@ -226,7 +218,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("hyperplane_bits native expression is bit-equal to the reference UDF") {
-    GraftFunctions.register(spark)
     val e = Tables(spark, sf0001, "embeddings")
     val both = e.select(
       col("vec_id"),
@@ -241,7 +232,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("simhash64_fp native expression is bit-equal to the reference UDF") {
-    GraftFunctions.register(spark)
     val d = Tables(spark, sf0001, "documents")
       .withColumn("toks", split(lower(col("text")), "\\s+"))
     val both = d.select(
@@ -253,7 +243,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("jaro_winkler native expression matches the reference definition") {
-    GraftFunctions.register(spark)
     // values pinned from DuckDB's jaro_winkler_similarity (the oracle
     // engine) — covers the boost path, the no-boost-below-0.7 gate,
     // transpositions, unequal lengths, and the degenerate cases
@@ -290,7 +279,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("try_parse_int agrees with try_cast over the strict-integer grammar") {
-    GraftFunctions.register(spark)
     val cases = Seq("12", "-3", "+7", " 42 ", "0", "2147483647", "-2147483648",
       "2147483648", "-2147483649", "99999999999999999999", "A", "", " ", "+",
       "-", "1.5", "12x", "x12", "١٢")
@@ -324,7 +312,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("law: eval_once is the identity on values — only a collapse barrier") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"),
         concat(col("text"), lit(" t"), col("doc_id").cast("string")).as("x"))

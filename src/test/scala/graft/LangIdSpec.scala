@@ -105,7 +105,6 @@ class LangIdSpec extends SparkSpec {
     // repetition battery's RLE law. The profile store (trained via the
     // SQL path at lang grain) is a third agreement point through the
     // store == fresh law below.
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, sf0001, "documents")
     val nt = trim(regexp_replace(lower(col("text")), "\\s+", " "))
     val native = docs.select(col("doc_id"),
@@ -168,7 +167,6 @@ class LangIdSpec extends SparkSpec {
     // row-identical over the whole fixture, including the totality
     // edges (null / sub-3-char docs, where every lang ties at dist 0
     // and exactly the lang-ascending winner row survives the filter)
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, sf0001, "documents").select("doc_id", "text")
       .unionByName(Seq((9000001L, "ab")).toDF("doc_id", "text"))
     val profiles = LangId.ensureProfileStore(spark, sf0001)

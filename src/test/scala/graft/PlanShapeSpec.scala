@@ -222,6 +222,30 @@ class PlanShapeSpec extends SparkSpec {
     assert(bhjs === 0, s"curation chain must not join, found $bhjs joins")
   }
 
+  test("law: spreadScanForCpu leaves a 40-file scan alone and spreads a 1-file one") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import graft.operators.Sources
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    val rows = spark.range(400).selectExpr("id", "md5(cast(id AS string)) AS h")
+    rows.repartition(40).write.parquet(s"$dir/many")
+    rows.coalesce(1).write.parquet(s"$dir/one")
+    val many = spark.read.parquet(s"$dir/many")
+    assert(many.inputFiles.length === 40)
+    assert(Sources.spreadScanForCpu(many) eq many,
+      "an already-parallel scan must come back untouched")
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    val plan = try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      Sources.spreadScanForCpu(spark.read.parquet(s"$dir/one"))
+        .queryExecution.executedPlan
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size === 1 &&
+      shuffles.head.outputPartitioning.isInstanceOf[RoundRobinPartitioning],
+      s"a 1-file scan must get exactly the one round-robin spread:\n$plan")
+  }
+
   test("q_lang_id_trigram: store broadcast + native doc profile — one argmin window only") {
     // classification's doc side is the native trigram_rank_profile
     // expression: the SQL chain it replaced planned TWO corpus-grain
@@ -952,7 +976,6 @@ class PlanShapeSpec extends SparkSpec {
     // reach the parquet reader even though an eval_once consumer (and a
     // post-barrier filter) sits above it.
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val plan = try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")

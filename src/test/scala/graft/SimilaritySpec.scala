@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.Similarity
 
 /** ANN quality gates: the native cosine expression against a hand-rolled
@@ -12,7 +11,6 @@ class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("CosineSimilarity expression matches scala-side computation (codegen path)") {
-    GraftFunctions.register(spark)
     val vecs = Seq(
       (1L, Array(1.0f, 0.0f, 2.0f)),
       (2L, Array(0.5f, -1.0f, 1.5f)),
@@ -87,7 +85,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cross-corpus ANN recovers planted delta near-dups from the coded base") {
-    GraftFunctions.register(spark)
     val base = Tables(spark, sf0001, "embeddings")
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
     // delta: perturbed copies (cos ~0.9998) of 15 base vectors

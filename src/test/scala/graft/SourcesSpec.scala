@@ -139,12 +139,14 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("GraftExtensions exposes cosine_sim to a pure-SQL session") {
-    // the injection hook itself (a session built with
-    // spark.sql.extensions=graft.GraftExtensions picks this up)
-    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    // SQL surface end-to-end on a derived session
+    // GraftSession.local installs the extension, and a plain fork
+    // inherits it: every name in the table resolves with no install call
     val s2 = spark.newSession()
-    graft.functions.GraftFunctions.register(s2)
+    val missing = graft.functions.GraftFunctions.all.map(_._1).filterNot(n =>
+      s2.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"a fresh fork does not resolve $missing")
+    // SQL surface end-to-end on the same fork
     Tables(s2, sf0001, "embeddings").createOrReplaceTempView("emb")
     val r = s2.sql(
       "SELECT cosine_sim(embedding, embedding) AS c FROM emb LIMIT 5")
@@ -162,22 +164,6 @@ class SourcesSpec extends SparkSpec {
     val hp = s2.sql(
       "SELECT hyperplane_bits(embedding) AS code FROM emb LIMIT 5").collect()
     assert(hp.length === 5)
-    // the extension injects every function register installs: the names
-    // register adds to a fresh session equal the names the extension
-    // adds to an empty registry (registerFunctions is private[sql] in
-    // source, public in bytecode)
-    def names(r: org.apache.spark.sql.catalyst.analysis.FunctionRegistry) =
-      r.listFunction().map(_.funcName).toSet
-    val byRegister = names(s2.sessionState.functionRegistry) --
-      names(spark.newSession().sessionState.functionRegistry)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val injected = ext.getClass
-      .getMethod("registerFunctions",
-        classOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
-      .invoke(ext, new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry)
-      .asInstanceOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry]
-    assert(byRegister.nonEmpty && names(injected) === byRegister)
   }
 
   test("ensureStore: a throwing build leaks no tmp dir, propagates, and retries clean") {
@@ -198,10 +184,11 @@ class SourcesSpec extends SparkSpec {
     val leftovers = Option(parent.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
     assert(leftovers.isEmpty,
       s"half-written build leaked: ${leftovers.map(_.getName).mkString(", ")}")
-    // the same tag then builds clean — no stale marker blocks the retry
+    // the same tag then builds clean — no stale marker blocks the retry;
+    // like a multi-frame store it writes only a subdir, and ensureStore
+    // writes the root completeness marker
     val p = Sources.ensureStore(dir, tag) { t =>
-      new java.io.File(t).mkdirs()
-      new java.io.File(s"$t/_SUCCESS").createNewFile(); ()
+      new java.io.File(s"$t/part").mkdirs(); ()
     }
     assert(new java.io.File(s"$p/_SUCCESS").exists())
   }

@@ -328,7 +328,6 @@ class StreamingSpec extends SparkSpec {
     // drop MORE than the frozen-base door (the fixture carries odd-odd
     // near-dup pairs across arrival groups), which is the semantic
     // difference store maintenance buys.
-    graft.functions.GraftFunctions.register(spark)
     val D = graft.operators.Dedup
     val base = D.ensureBaseSignatureStore(spark, sf0001)
     val delta = Tables(spark, sf0001, "documents")
@@ -366,7 +365,6 @@ class StreamingSpec extends SparkSpec {
     // signature joined the store between the batches. A third, novel doc
     // in the later batch still survives (growth never over-drops).
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val D = graft.operators.Dedup
     val baseDocs = Seq((0L,
       "completely unrelated base corpus sentence about maritime insurance " +
@@ -398,7 +396,6 @@ class StreamingSpec extends SparkSpec {
     // appended store rows must be exactly the fresh (grams, sig) rows of
     // the kept delta docs that HAVE grams — nothing doubled (replay-safe
     // overwrite keys), nothing missing, values bit-identical
-    graft.functions.GraftFunctions.register(spark)
     val D = graft.operators.Dedup
     val base = D.ensureBaseSignatureStore(spark, sf0001)
     val delta = Tables(spark, sf0001, "documents")
@@ -573,7 +570,6 @@ class StreamingSpec extends SparkSpec {
     // whose COUNT semantics would expose any duplication or loss — the
     // probe result against the promoted base must equal the probe
     // against base ∪ grow.
-    graft.functions.GraftFunctions.register(spark)
     val T = graft.operators.Text
     val D = graft.operators.Dedup
     val M = graft.operators.Multimodal
@@ -878,7 +874,6 @@ class StreamingSpec extends SparkSpec {
       s"verbatim re-submissions landed despite growth: ${resubs.take(5)}")
     // the re-submissions' fps are genuinely absent from the base store —
     // i.e. the frozen-fp rule alone would have kept them
-    graft.functions.GraftFunctions.register(spark)
     val T = graft.operators.Text
     val doc = Tables(spark, sf0001, "documents")
       .select("doc_id", "text", "source", "lang")
@@ -1147,7 +1142,6 @@ class StreamingSpec extends SparkSpec {
     // store, so the 4-micro-batch streaming run must equal a one-shot
     // run of the same 2-probe assign + cluster-anti-join (the delta
     // side probes nearest AND runner-up cluster — round 9)
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf0001, "embeddings").select("vec_id", "embedding")
     val baseEmb = e.filter(col("vec_id") % 2 === 0)
     val seeds = graft.operators.Dedup.semanticSeeds(baseEmb)
@@ -1197,7 +1191,6 @@ class StreamingSpec extends SparkSpec {
     // its full encoded sequence (no token lost); (5) within each ingest
     // group, every non-final shard carries exactly 2048 ids; (6) the
     // UNK id 0 actually appears (the suffix word is OOV to the base).
-    graft.functions.GraftFunctions.register(spark)
     val T = graft.operators.Text
     val seg = Streaming.queries("q_stream_pretrain")(spark, sf0001)
       .collect()
@@ -1281,7 +1274,6 @@ class StreamingSpec extends SparkSpec {
     // depends only on itself vs the base), survivors can only SHRINK
     // vs the 2-probe door, and the 3rd probe must catch something on
     // this fixture (else the rung is dead weight)
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf0001, "embeddings").select("vec_id", "embedding")
     val baseEmb = e.filter(col("vec_id") % 2 === 0)
     val seeds = graft.operators.Dedup.semanticSeeds(baseEmb)
@@ -1315,7 +1307,6 @@ class StreamingSpec extends SparkSpec {
     // INDEPENDENT re-derivation of the union arm; survivors can only
     // shrink vs the 2-probe door; and the band family must catch dups
     // the cluster probes miss (complementarity, measured in SCALE.md)
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf0001, "embeddings").select("vec_id", "embedding")
     val baseEmb = e.filter(col("vec_id") % 2 === 0)
     val nBase = baseEmb.count()

@@ -49,6 +49,9 @@ def cell_eq(a, b):
     return a == b
 
 fails = []
+# several queries share one oracle SQL (q_stream_containment's is
+# q_containment_canonical's, ~27 min at sf0.1): run each distinct SQL once
+refs = {}
 import os
 for name, sql in sorted(oracle.items()):
     pq_path = f"{outdir}/{name}"
@@ -64,7 +67,9 @@ for name, sql in sorted(oracle.items()):
             print(f"NESTED   {name}: driver comparator cannot hash {nested}")
             fails.append(name); continue
         mine = tbl.to_pandas()
-        ref = con.sql(sql).df()
+        if sql not in refs:
+            refs[sql] = con.sql(sql).df()
+        ref = refs[sql]
     except Exception as e:
         print(f"ERROR    {name}: {e}")
         fails.append(name); continue
