@@ -1,6 +1,7 @@
 package graft.mr
 
-import scala.collection.mutable
+import scala.collection.{immutable, mutable}
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
@@ -30,6 +31,14 @@ import org.apache.spark.rdd.RDD
   * reference imposes (its master holds ALL keys' lists in RAM,
   * mincemeat.py:344-347; we only ever hold one partition's worth).
   *
+  * Keys group by their own `equals`/`hashCode` on both sides: the
+  * per-task combine group is a `java.util.HashMap`, as Spark's shuffle
+  * and `groupByKey` are, so a combiner never merges keys the shuffle keeps
+  * apart (`0.0` and `-0.0`) or splits keys it merges (`NaN`). The `Seq`
+  * handed to `collectfn` and `reducefn` is an array-backed view of that
+  * key's values; on the map side it is in emission order (mincemeat.py:
+  * 169-176 appends in order), on the reduce side in shuffle-arrival order.
+  *
   * Unlike the reference, functions here are plain Scala closures shipped
   * by Spark's closure serializer — the reference's "no access to enclosing
   * environment" restriction (README.md:93-96) does not apply.
@@ -55,16 +64,18 @@ final case class MapReduceJob[K1, V1, K2: ClassTag, V2: ClassTag](
     val combined = collectfn match {
       case Some(cf) =>
         mapped.mapPartitions { it =>
-          val groups = mutable.LinkedHashMap.empty[K2, mutable.ArrayBuffer[V2]]
+          val groups = new java.util.HashMap[K2, mutable.ArrayBuffer[V2]]
           it.foreach { case (k, v) =>
-            groups.getOrElseUpdate(k, mutable.ArrayBuffer.empty[V2]) += v
+            groups.computeIfAbsent(k, _ => mutable.ArrayBuffer.empty[V2]) += v
           }
-          groups.iterator.map { case (k, vs) => (k, cf(k, vs.toSeq)) }
+          groups.entrySet.iterator.asScala.map { e =>
+            (e.getKey, cf(e.getKey, MapReduceJob.valueSeq(e.getValue)))
+          }
         }
       case None => mapped
     }
     val parts = numPartitions.getOrElse(combined.sparkContext.defaultParallelism)
-    combined.groupByKey(parts).map { case (k, vs) => (k, reducefn(k, vs.toSeq)) }
+    combined.groupByKey(parts).map { case (k, vs) => (k, reducefn(k, MapReduceJob.valueSeq(vs))) }
   }
 
   /** API-fidelity result: the reference returns an in-memory dict from
@@ -82,6 +93,38 @@ final case class MapReduceJob[K1, V1, K2: ClassTag, V2: ClassTag](
 }
 
 object MapReduceJob {
+
+  /** One key's values as the `Seq` `collectfn`/`reducefn` receive: a single
+    * copy into an array of `V2`, wrapped without a second copy. */
+  private def valueSeq[V: ClassTag](vs: Iterable[V]): Seq[V] =
+    immutable.ArraySeq.unsafeWrapArray(vs.toArray[V])
+
+  /** Whitespace tokens of `text`, in order, empty tokens dropped: the same
+    * tokens as a regex split on `\s+` and as Python 2's `str.split()`
+    * (example.py:13). A hand scan over Java's `\s` set, space plus
+    * U+0009..U+000D (`\t \n \x0B \f \r`), with no regex and no
+    * intermediate array.
+    */
+  def words(text: String): Iterator[String] = new Iterator[String] {
+    private[this] var i = skipSpace(text, 0)
+    def hasNext: Boolean = i < text.length
+    def next(): String = {
+      if (!hasNext) throw new NoSuchElementException("words: no more tokens")
+      val start = i
+      while (i < text.length && !isSpace(text.charAt(i))) i += 1
+      val w = text.substring(start, i)
+      i = skipSpace(text, i)
+      w
+    }
+  }
+
+  private def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  private def skipSpace(text: String, from: Int): Int = {
+    var i = from
+    while (i < text.length && isSpace(text.charAt(i))) i += 1
+    i
+  }
 
   /** Associative fast path: when the user's reducer is a commutative,
     * associative binary fold, lower to `reduceByKey` — map-side partial

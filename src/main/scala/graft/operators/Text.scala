@@ -2098,7 +2098,7 @@ object Text {
       val docs = Tables(s, dir, "documents")
         .select("doc_id", "text").as[(Long, String)].rdd
       val job = MapReduceJob[Long, String, String, Long](
-        mapfn = (_, text) => text.split("\\s+").iterator.filter(_.nonEmpty).map(w => (w, 1L)),
+        mapfn = (_, text) => MapReduceJob.words(text).map(w => (w, 1L)),
         reducefn = (_, vs) => vs.sum,
         collectfn = Some((_, vs) => vs.sum))
       job.resultRDD(docs).toDF("word", "cnt")
@@ -2115,8 +2115,7 @@ object Text {
       val docs = Tables(s, dir, "documents")
         .select("doc_id", "text").as[(Long, String)].rdd
       val wc = MapReduceJob[Long, String, String, Long](
-        mapfn = (_, text) =>
-          text.split("\\s+").iterator.filter(_.nonEmpty).map(w => (w, 1L)),
+        mapfn = (_, text) => MapReduceJob.words(text).map(w => (w, 1L)),
         reducefn = (_, vs) => vs.sum,
         collectfn = Some((_, vs) => vs.sum))
       val countOfCounts = MapReduceJob[String, Long, Long, Long](
@@ -2141,8 +2140,7 @@ object Text {
       def merge(vs: Seq[String]): String = vs.iterator.flatMap(_.split("-"))
         .map(_.toLong).toSeq.distinct.sorted.mkString("-")
       val job = MapReduceJob[Long, String, String, String](
-        mapfn = (id, text) => text.split("\\s+").iterator
-          .filter(_.nonEmpty).map(w => (w, id.toString)),
+        mapfn = (id, text) => { val doc = id.toString; MapReduceJob.words(text).map(w => (w, doc)) },
         reducefn = (_, vs) => merge(vs),
         collectfn = Some((_, vs) => merge(vs)))
       job.resultRDD(docs).toDF("word", "postings")
