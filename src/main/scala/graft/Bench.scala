@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints exactly one JSON line.
@@ -21,9 +21,38 @@ object Bench {
     "q_wordcount", "q_fingerprint", "q_ngram_jaccard",
     "q_dedup_minhash", "q_ann_bruteforce", "q_tpch_q3", "q_tpch_q5")
 
+  /** Forces a query end to end with no driver collect. */
+  val noop: DataFrame => Unit = _.write.mode("overwrite").format("noop").save()
+
+  /** The query loop of every driver main (Bench, Verify, JobTrace,
+    * PlanDump, ScaleSmoke): runs the registered query `name` over
+    * `sfDir` into `sink` and returns its seconds and whether it
+    * succeeded. The lookup sits inside the `try`, so a misspelled name
+    * in a filter argument is reported by name like a failing query
+    * instead of ending the sweep. Queries are standalone: the caches
+    * they persist()ed are cleared afterwards, so 120+ of them cannot
+    * pile up and GC-throttle the tail of a sweep, and the clearing is
+    * not billed to the query (the clock stops first).
+    */
+  def runQuery(spark: SparkSession, sfDir: String, name: String)(
+      sink: DataFrame => Unit): (Double, Boolean) = {
+    val t0 = System.nanoTime()
+    val ok =
+      try { sink(SparkEntry.queries(name)(spark, sfDir)); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[query] $name failed: ${e.getMessage}")
+        false
+      }
+    val dt = (System.nanoTime() - t0) / 1e9
+    spark.catalog.clearCache()
+    (dt, ok)
+  }
+
   /** One-time ingest costs (bucketed tables, signature/centroid stores)
     * belong to setup, not the measured query — same split a production
-    * pipeline has between ingest and the nightly query. A failed build
+    * pipeline has between ingest and the nightly query. This is the one
+    * list of stores: Bench, JobTrace and ScaleSmoke all build through
+    * it, so a store added here is setup in every measurement. A failed build
     * must NOT be silent (round-7 verdict): the store name + message go to
     * stderr immediately and the name is returned for the JSON's
     * `setup_failed` list, so downstream query failures are attributable.
@@ -37,9 +66,8 @@ object Bench {
         System.err.println(s"[bench] setup '$name' FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     ensure("warm_noop") {
-      spark.range(1000000).selectExpr("sum(id)").write.mode("overwrite").format("noop").save()
-      SparkEntry.queries("q_distinct")(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+      noop(spark.range(1000000).selectExpr("sum(id)"))
+      if (!runQuery(spark, sfDir, "q_distinct")(noop)._2) sys.error("q_distinct failed")
     }
     ensure("bucketed_tables")(graft.operators.Joins.ensureBucketedTables(spark, sfDir))
     ensure("ivf_centroids")(graft.operators.Similarity.ensureIvfCentroids(spark, sfDir))
@@ -48,6 +76,8 @@ object Bench {
     ensure("signature_store")(graft.operators.Dedup.ensureSignatureStore(spark, sfDir))
     ensure("simhash_store")(graft.operators.Dedup.ensureSimhashStore(spark, sfDir))
     ensure("base_signature_store")(graft.operators.Dedup.ensureBaseSignatureStore(spark, sfDir))
+    ensure("neardup_canon")(graft.operators.Dedup.ensureCanonicalStore(spark, sfDir))
+    ensure("contain_index")(graft.operators.Dedup.ensureContainIndexStore(spark, sfDir))
     ensure("partitioned_events")(graft.operators.Sources.ensurePartitionedEvents(spark, sfDir))
     ensure("graph_store")(graft.operators.Graph.ensureGraphStore(spark, sfDir))
     ensure("media_store")(graft.operators.Multimodal.ensureMediaStore(spark, sfDir))
@@ -62,6 +92,8 @@ object Bench {
     ensure("ppl_cutpoint_store")(graft.operators.Text.ensurePplCutpointStore(spark, sfDir))
     ensure("bpe_store")(graft.operators.Text.ensureBpeStore(spark, sfDir))
     ensure("clean_bpe_store")(graft.operators.Text.ensureCleanBpeStore(spark, sfDir))
+    ensure("pretrain_fp")(graft.operators.Text.ensurePretrainFpStore(spark, sfDir))
+    ensure("pretrain_symtab")(graft.operators.Text.ensurePretrainSymtabStore(spark, sfDir))
     ensure("clustered_lineitem")(graft.operators.Sources.ensureClusteredLineitem(spark, sfDir))
     failed.toSeq
   }
@@ -92,20 +124,8 @@ object Bench {
     // regression" in round 6 was just the first HONEST measurement.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     def run(names: Seq[String]): Seq[(String, Double)] = names.map { name =>
-      val t0 = System.nanoTime()
-      // lookup inside the try: a misspelled name in the filter arg should
-      // report per-query, not crash the whole sweep before any JSON prints
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Queries are standalone: drop their persist()ed subframes so 120+
-      // accumulated caches don't GC-throttle the tail of the sweep (the
-      // drop is AFTER the timestamp — hygiene isn't billed to the query).
-      spark.catalog.clearCache()
+      val (dt, ok) = runQuery(spark, sfDir, name)(noop)
+      if (!ok) failed += name
       name -> dt
     }
     def toJson(rs: Seq[(String, Double)]): String =

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
 
 /** Local measurement probe for the optimization rounds — NOT part of the
-  * driver contract. Same session and methodology as [[Bench]] (noop
+  * driver contract. Same session, set-up and runner as [[Bench]] (noop
   * sink, per-query clearCache, 2-batch doors), but runs each named query
   * `reps` times. A SparkListener prints every job's (start-offset,
   * duration, description) relative to the rep's t0, so the per-door
@@ -25,12 +25,6 @@ object JobTrace {
     val spark = GraftSession.local("graft-jobtrace",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.conf.set(graft.streaming.Streaming.DoorBatchesConf, "2")
-    // optional runtime conf overrides for A/B probes, e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=134217728"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
     try {
       Bench.runSetup(spark, sfDir)
       @volatile var t0 = System.nanoTime()
@@ -59,15 +53,12 @@ object JobTrace {
           starts.clear()
           t0 = System.nanoTime()
           traceOn = true
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (dt, ok) = Bench.runQuery(spark, sfDir, name)(Bench.noop)
           traceOn = false
           // listener delivery is async: give the bus a beat before the
           // next rep clears the start map
           Thread.sleep(300)
-          spark.catalog.clearCache()
-          println(f"[trace] $name rep$r TOTAL $dt%.2f s")
+          println(f"[trace] $name rep$r TOTAL $dt%.2f s" + (if (ok) "" else " FAILED"))
           dt
         }.sorted
         println(f"[trace] $name MIN ${ts.head}%.2f MED ${ts(ts.size / 2)}%.2f")

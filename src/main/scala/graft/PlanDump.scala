@@ -21,15 +21,12 @@ object PlanDump {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
-      val t0 = System.nanoTime()
-      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      val dt = (System.nanoTime() - t0) / 1e9
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-      println(f"[plandump] wrote $outDir/${name}_$suffix.txt " +
-        f"plan_s=$dt%.2f bytes=${plan.length}")
-      spark.catalog.clearCache()
+      val out = java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt")
+      val (dt, ok) = Bench.runQuery(spark, sfDir, name) { df =>
+        java.nio.file.Files.writeString(out, df.queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode))
+      }
+      if (ok) println(f"[plandump] wrote $out plan_s=$dt%.2f bytes=${out.toFile.length}")
     }
     spark.stop()
   }

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Scale smoke test: replicates the sf0.1 fixtures 16x (documents,
-  * embeddings) / 8x (lineitem, orders, events) into a /tmp dataset and
+  * embeddings) / 8x (lineitem, orders, events) into a /tmp dataset with
+  * [[Sf1Build.replicate]], builds [[Bench.runSetup]]'s stores there and
   * runs the scale-sensitive query families against it, printing per-query
   * seconds. The point is trend, not absolutes: a query whose cost grows
   * ~16x on 16x data is scale-shaped; one that grows ~256x is hiding an
@@ -47,107 +45,16 @@ object ScaleSmoke {
   // versioned: bump when the replication scheme changes so stale /tmp
   // copies rebuild instead of skewing the measurements
   private lazy val root =
-    if (factor == 16) s"${System.getProperty("java.io.tmpdir")}/graft_scale_v2"
-    else s"${System.getProperty("java.io.tmpdir")}/graft_scale${factor}_v1"
-
-  private def ensureScaled(s: SparkSession, src: String): Unit = {
-    val marker = new java.io.File(s"$root/_built")
-    if (marker.exists()) return
-    val docs = s.read.parquet(s"$src/documents.parquet")
-    (0 until factor).map { i =>
-      docs.select(
-        (col("doc_id") + lit(10000000L * i)).as("doc_id"),
-        concat(col("text"), lit(s" scaletag$i")).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$root/documents.parquet")
-    val emb = s.read.parquet(s"$src/embeddings.parquet")
-    (0 until factor).map { i =>
-      emb.select(
-        (col("vec_id") + lit(10000000L * i)).as("vec_id"),
-        transform(col("embedding"), x => (x + lit(i * 1e-4f)).cast("float"))
-          .as("embedding"),
-        col("label"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$root/embeddings.parquet")
-    val li = s.read.parquet(s"$src/lineitem.parquet")
-    (0 until factFactor).map { i =>
-      li.withColumn("l_orderkey", col("l_orderkey") + lit(10000000L * i))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$root/lineitem.parquet")
-    // o_custkey is NOT shifted: the customer dim passes through unscaled,
-    // so shifting would dangle 7/8 of the fact side and customer joins
-    // would silently measure 1x data — replicated orders instead share
-    // customers (each customer simply has 8x the orders)
-    val o = s.read.parquet(s"$src/orders.parquet")
-    (0 until factFactor).map { i =>
-      o.withColumn("o_orderkey", col("o_orderkey") + lit(10000000L * i))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$root/orders.parquet")
-    val ev = s.read.parquet(s"$src/events.parquet")
-    (0 until factFactor).map { i =>
-      ev.withColumn("event_id", col("event_id") + lit(10000000L * i))
-        .withColumn("user_id", col("user_id") + lit(100000L * i))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$root/events.parquet")
-    // customer/nation/region/supplier/part pass through unscaled (dims)
-    Seq("customer", "nation", "region", "supplier", "part").foreach { t =>
-      s.read.parquet(s"$src/$t.parquet")
-        .write.mode("overwrite").parquet(s"$root/$t.parquet")
-    }
-    marker.createNewFile()
-  }
+    if (factor == 16) s"${System.getProperty("java.io.tmpdir")}/graft_scale_v3"
+    else s"${System.getProperty("java.io.tmpdir")}/graft_scale${factor}_v2"
 
   def main(args: Array[String]): Unit = {
     val _ = factor // force the env parse/require before any Spark setup
     val src = "/root/testdata/sf0.1"
     val spark = GraftSession.local("graft-scale-smoke", 32)
-    ensureScaled(spark, src)
-    spark.range(1000000).selectExpr("sum(id)").write.mode("overwrite").format("noop").save()
-    // one-time stores for the scaled dir (ingest, not measured)
-    try graft.operators.Dedup.ensureGramStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] gramstore: $e") }
-    try graft.operators.Dedup.ensureSignatureStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] fullsig: $e") }
-    try graft.operators.Dedup.ensureSimhashStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] simhashfp: $e") }
-    try graft.operators.Dedup.ensureBaseSignatureStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] sigstore: $e") }
-    try graft.operators.Similarity.ensureBaseCodeStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] codestore: $e") }
-    try graft.operators.TpchExt.ensurePartsuppStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] partsupp: $e") }
-    try graft.operators.Text.ensureSpanStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] spanstore: $e") }
-    try graft.operators.Text.ensureBenchGramStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] benchgrams: $e") }
-    try graft.operators.Text.ensureDsirModelStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] dsirstore: $e") }
-    try graft.operators.Text.ensureBigramLmStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] bigramlm: $e") }
-    try graft.operators.Text.ensureBaseBigramLmStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] basebigramlm: $e") }
-    try graft.operators.Multimodal.ensureMediaStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] mediastore: $e") }
-    try graft.operators.Multimodal.ensureMediaSigStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] mediasig: $e") }
-    try graft.operators.Text.ensurePplCutpointStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] pplcut: $e") }
-    try graft.operators.Text.ensureBpeStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] bpestore: $e") }
-    try graft.operators.Text.ensureCleanBpeStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] cleanbpe: $e") }
-    try graft.operators.Text.ensurePretrainFpStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] pretrainfp: $e") }
-    try graft.operators.Text.ensurePretrainSymtabStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] pretrainsymtab: $e") }
-    try graft.operators.Dedup.ensureCanonicalStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] canonstore: $e") }
-    // round-13: the rarity-order stores (builds contain_cnt_v1 too) —
-    // ingest artifacts, so the containment rows measure probing, not
-    // store construction
-    try graft.operators.Dedup.ensureContainIndexStore(spark, root)
-    catch { case e: Throwable => System.err.println(s"[scale] containidx: $e") }
+    Sf1Build.replicate(spark, src, root, factor, factFactor)
+    // the one store list: ingest, not measured
+    Bench.runSetup(spark, root)
 
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q1_agg", "q_join_inner", "q_wordcount", "q_tf_df", "q_decontaminate",
@@ -310,20 +217,8 @@ object ScaleSmoke {
       // width; must grow ~linearly in assets
       "q_dedup_media")
     names.foreach { name =>
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, root)
-          .write.mode("overwrite").format("noop").save()
-        println(f"[scale] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      } catch { case e: Throwable =>
-        println(s"[scale] $name FAILED: ${e.getMessage}")
-      }
-      // same sweep hygiene as Bench/Verify (SCALE.md "what the smoke
-      // caught" #4): standalone queries persist subframes they can't
-      // unpersist before the lazy write runs; without this, a dozen
-      // dedup-family caches pile up and the tail of the list measures
-      // GC pressure instead of the query
-      spark.catalog.clearCache()
+      val (dt, ok) = Bench.runQuery(spark, root, name)(Bench.noop)
+      println(if (ok) f"[scale] $name: $dt%.2f s" else s"[scale] $name FAILED")
     }
     spark.stop()
   }

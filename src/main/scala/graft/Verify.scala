@@ -15,10 +15,7 @@ object Verify {
     // int64 micros so DuckDB/pyarrow read the same instants back
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
-    val selected = only match {
-      case Some(f) => SparkEntry.queries.filter { case (n, _) => f(n) }
-      case None    => SparkEntry.queries
-    }
+    val selected = SparkEntry.queries.keySet.filter(n => only.forall(_(n)))
     // q_line_dedup shuffles 64-bit md5-prefix segment ids where the
     // oracle sees strings: make the (astronomically unlikely) id
     // collision fail loudly here, not as a bare hash mismatch
@@ -35,7 +32,7 @@ object Verify {
     // oracle-green runs); q_dedup_semantic_recall needs no guard (its
     // top-3 assignToSeeds runs the default Exact search at any k).
     def guardExactAssign(queries: Set[String], nVecs: => Long): Unit =
-      if (selected.keySet.exists(queries)) {
+      if (selected.exists(queries)) {
         val n = nVecs
         val k = operators.Dedup.semanticK(n)
         require(k <= operators.Dedup.ExactAssignMaxSeeds,
@@ -52,14 +49,9 @@ object Verify {
       Tables(spark, sfDir, "embeddings")
         .filter(org.apache.spark.sql.functions.col("vec_id") % 2 === 0)
         .count())
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // standalone queries: don't let 120+ persisted subframes accumulate
-      spark.catalog.clearCache()
+    selected.foreach { name =>
+      Bench.runQuery(spark, sfDir, name)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -51,8 +51,7 @@ import org.apache.spark.rdd.RDD
 final case class MapReduceJob[K1, V1, K2: ClassTag, V2: ClassTag](
     mapfn: (K1, V1) => IterableOnce[(K2, V2)],
     reducefn: (K2, Seq[V2]) => V2,
-    collectfn: Option[(K2, Seq[V2]) => V2] = None,
-    numPartitions: Option[Int] = None) extends Serializable {
+    collectfn: Option[(K2, Seq[V2]) => V2] = None) extends Serializable {
 
   /** Distributed result as an RDD — the scalable output surface. */
   def resultRDD(data: RDD[(K1, V1)]): RDD[(K2, V2)] = {
@@ -74,8 +73,10 @@ final case class MapReduceJob[K1, V1, K2: ClassTag, V2: ClassTag](
         }
       case None => mapped
     }
-    val parts = numPartitions.getOrElse(combined.sparkContext.defaultParallelism)
-    combined.groupByKey(parts).map { case (k, vs) => (k, reducefn(k, MapReduceJob.valueSeq(vs))) }
+    // an explicit count: a bare groupByKey() would take the upstream
+    // partition count instead of the context's default parallelism
+    combined.groupByKey(combined.sparkContext.defaultParallelism)
+      .map { case (k, vs) => (k, reducefn(k, MapReduceJob.valueSeq(vs))) }
   }
 
   /** API-fidelity result: the reference returns an in-memory dict from
@@ -134,22 +135,15 @@ object MapReduceJob {
     */
   def associative[K1, V1, K2: ClassTag, V2: ClassTag](
       mapfn: (K1, V1) => IterableOnce[(K2, V2)],
-      op: (V2, V2) => V2,
-      numPartitions: Option[Int] = None): AssociativeJob[K1, V1, K2, V2] =
-    AssociativeJob(mapfn, op, numPartitions)
+      op: (V2, V2) => V2): AssociativeJob[K1, V1, K2, V2] =
+    AssociativeJob(mapfn, op)
 
   final case class AssociativeJob[K1, V1, K2: ClassTag, V2: ClassTag](
       mapfn: (K1, V1) => IterableOnce[(K2, V2)],
-      op: (V2, V2) => V2,
-      numPartitions: Option[Int]) extends Serializable {
+      op: (V2, V2) => V2) extends Serializable {
 
-    def resultRDD(data: RDD[(K1, V1)]): RDD[(K2, V2)] = {
-      val mapped = data.flatMap { case (k, v) => mapfn(k, v) }
-      numPartitions match {
-        case Some(n) => mapped.reduceByKey(op, n)
-        case None    => mapped.reduceByKey(op)
-      }
-    }
+    def resultRDD(data: RDD[(K1, V1)]): RDD[(K2, V2)] =
+      data.flatMap { case (k, v) => mapfn(k, v) }.reduceByKey(op)
 
     def run(data: RDD[(K1, V1)]): Map[K2, V2] =
       resultRDD(data).collectAsMap().toMap

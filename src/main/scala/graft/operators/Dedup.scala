@@ -48,9 +48,7 @@ object Dedup {
     * Graph.ensureGraphStore.
     */
   def ensureGramStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "gram_store_v1") { tmp =>
-      hashedGrams(s, dir).write.mode("overwrite").parquet(tmp)
-    }
+    val store = Sources.parquetStore(s, dir, "gram_store_v1")(hashedGrams(s, dir))
     // Scan-granularity insurance: the store is compact (8-byte hashes),
     // so file packing (maxPartitionBytes >> store size) can hand the
     // WHOLE table to one scan task — and the family's expensive map
@@ -60,7 +58,7 @@ object Dedup {
     // guarantees full map width; it costs <1% of the gram-level volume
     // every consumer shuffles downstream anyway, so it stays negligible
     // at 100 TB where file splits would provide the width by themselves.
-    s.read.parquet(path).repartition(col("doc_id"))
+    store.repartition(col("doc_id"))
   }
 
   /** (doc_id, sig) -> 16 bands of 4 -> (doc_id, band, bh). */
@@ -87,15 +85,12 @@ object Dedup {
     * `documents`), so every oracle is unchanged; DedupSpec pins
     * store sig == freshly-computed minhash64(grams).
     */
-  def ensureSignatureStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "minhash_sig_v1") { tmp =>
+  def ensureSignatureStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "minhash_sig_v1") {
       ensureGramStore(s, dir)
         .withColumn("sig", call_function("minhash64", col("grams")))
         .select("doc_id", "sig")
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** One-time base-corpus signature store (the incremental-dedup side
     * table the round-2 verdict asked for): hashed grams + MinHash
@@ -109,18 +104,15 @@ object Dedup {
     * full signature store so there is exactly ONE signature fold per
     * corpus across all stores.
     */
-  def ensureBaseSignatureStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "minhash_base_v1") { tmp =>
+  def ensureBaseSignatureStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "minhash_base_v1") {
       // derived from the gram + signature stores, not a second corpus
       // tokenize or signature fold
       ensureGramStore(s, dir)
         .filter(col("doc_id") % 2 === 0)
         .join(ensureSignatureStore(s, dir), "doc_id")
         .select("doc_id", "grams", "sig")
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** Ingest-time near-dup filter for ONE delta batch against the
     * persisted base signature store: the batch's gram frame `withG`
@@ -1140,16 +1132,13 @@ object Dedup {
     * anyway. Content is a deterministic function of `documents`, so
     * every oracle is unchanged.
     */
-  def ensureContainCountStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "contain_cnt_v1") { tmp =>
+  def ensureContainCountStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "contain_cnt_v1") {
       ensureGramStore(s, dir)
         .join(ensureCanonicalStore(s, dir), Seq("doc_id"))
         .select(explode(col("grams")).as("h"))
         .groupBy("h").agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** One-time containment-index SETS store (`contain_index_v1`): each
     * canonical container's rarity-ordered hash set (doc_id, hs, n),
@@ -1162,17 +1151,14 @@ object Dedup {
     * re-sorted. DedupSpec pins store == fresh derivation bit-identically
     * and stored-order output == the recount path's output.
     */
-  def ensureContainIndexStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "contain_index_v1") { tmp =>
+  def ensureContainIndexStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "contain_index_v1") {
       val cnt = ensureContainCountStore(s, dir)
       raritySets(ensureGramStore(s, dir)
           .join(ensureCanonicalStore(s, dir), Seq("doc_id"))
           .select(col("doc_id"), explode(col("grams")).as("h"))
           .join(cnt, "h"), "doc_id")
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** Postings view of the sets store — (doc_id_b, n_b, p_b, h), the
     * equi-join side of the stored-order PPJoin. A long-lived door
@@ -1461,12 +1447,8 @@ object Dedup {
     * deterministic function of `documents`, so every oracle is
     * unchanged; DedupSpec pins store == fresh computation.
     */
-  def ensureCanonicalStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "neardup_canon_v1") { tmp =>
-      nearDupCanonicals(s, dir).write.mode("overwrite").parquet(tmp)
-    }
-    s.read.parquet(path)
-  }
+  def ensureCanonicalStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "neardup_canon_v1")(nearDupCanonicals(s, dir))
 
   /** SimHash banded near-dedup over any (doc_id, text) frame. Pigeonhole
     * guarantee: two fingerprints at Hamming distance <= nBands - 1 agree
@@ -1528,13 +1510,8 @@ object Dedup {
     * oracle-facing output is unchanged; DedupSpec pins store == fresh
     * fingerprints bit-identically.
     */
-  def ensureSimhashStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "simhash_fp_v1") { tmp =>
-      simhashFps(Tables(s, dir, "documents"))
-        .write.mode("overwrite").parquet(tmp)
-    }
-    s.read.parquet(path)
-  }
+  def ensureSimhashStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "simhash_fp_v1")(simhashFps(Tables(s, dir, "documents")))
 
   /** Banded Hamming near-dup over a PERSISTED (doc_id, sig) fingerprint
     * frame (the caller persists: the frame feeds the band-count sizing

@@ -307,7 +307,7 @@ object Joins {
 
     // TPC-H Q3-shaped headline query: customer ⋈ orders ⋈ lineitem with
     // selective filters on all three inputs, revenue agg, top-10. The scale
-    // shape Catalyst should pick (and PlanAuditSpec pins): the filtered
+    // shape Catalyst should pick (and PlanShapeSpec pins): the filtered
     // customer dim broadcasts (no fact shuffle for it), lineitem⋈orders is
     // the one big key shuffle, the date filters push down to the parquet
     // scans, and the top-10 is TakeOrderedAndProject (no global sort).

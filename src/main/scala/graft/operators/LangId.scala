@@ -93,13 +93,8 @@ object LangId {
       .select(col("k").as("lang"), col("tg"), col("rank"))
 
   /** The one-time `langprof_v1` store for the fixture at `dir`. */
-  def ensureProfileStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "langprof_v1") { tmp =>
-      trainProfiles(Tables(s, dir, "documents"))
-        .write.mode("overwrite").parquet(tmp)
-    }
-    s.read.parquet(path)
-  }
+  def ensureProfileStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "langprof_v1")(trainProfiles(Tables(s, dir, "documents")))
 
   /** Out-of-place classification of `docs` against `profiles`: per doc,
     * distance to lang = K·n_tgs + Σ_matches (|doc_rank − prof_rank| − K)

@@ -175,7 +175,7 @@ object Multimodal {
     // ingest, the lakehouse convention that lets catalog queries prune
     // the payload column entirely (ReadSchema without `payload` — pinned
     // in PlanShapeSpec via q_multimodal_catalog)
-    val path = Sources.ensureStore(dir, "media_v2") { tmp =>
+    Sources.parquetStore(s, dir, "media_v2") {
       val blocks = (0 to 7).map { i =>
         when(lit(i) <= col("doc_id") % 8,
           unhex(md5(concat(col("text"), lit(i.toString)))))
@@ -188,9 +188,7 @@ object Multimodal {
           when(col("nbytes") % 3 === 0, "png")
             .when(col("nbytes") % 3 === 1, "jpeg")
             .otherwise("webp"))
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
   }
 
   /** Decoded signature of any (doc_id, payload) frame — ONE decode
@@ -222,12 +220,8 @@ object Multimodal {
     * media store (codec determinism pinned by MultimodalSpec's
     * conformance law), so every oracle is unchanged.
     */
-  def ensureMediaSigStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "media_sig_v1") { tmp =>
-      decodedSig(ensureMediaStore(s, dir)).write.mode("overwrite").parquet(tmp)
-    }
-    s.read.parquet(path)
-  }
+  def ensureMediaSigStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "media_sig_v1")(decodedSig(ensureMediaStore(s, dir)))
 
   /** THE media band-join block keys and verify-side signature struct —
     * ONE definition each, shared by q_dedup_media, the ingest-door

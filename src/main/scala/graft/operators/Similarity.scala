@@ -100,15 +100,12 @@ object Similarity {
     * similarity: (vec_id, embedding, code) for the base half, written once
     * per sf dir — the daily delta then hashes only itself.
     */
-  def ensureBaseCodeStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "embedding_codes_base_v1") { tmp =>
+  def ensureBaseCodeStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "embedding_codes_base_v1") {
       Tables(s, dir, "embeddings").select("vec_id", "embedding")
         .filter(col("vec_id") % 2 === 0)
         .withColumn("code", call_function("hyperplane_bits", col("embedding")))
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** Cross-corpus banded ANN: delta queries against a pre-coded base frame
     * (vec_id, embedding, code). Band width adapts to the BASE size (the

@@ -67,6 +67,12 @@ object Sources {
       path
     }
 
+  /** The common store: one frame written once per sf dir under `tag`
+    * (through [[ensureStore]]) and read back from parquet. */
+  def parquetStore(s: SparkSession, dir: String, tag: String)(
+      frame: => DataFrame): DataFrame =
+    s.read.parquet(ensureStore(dir, tag)(tmp => frame.write.mode("overwrite").parquet(tmp)))
+
   private[graft] def deleteRec(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(deleteRec))
     f.delete(); ()

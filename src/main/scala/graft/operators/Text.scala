@@ -151,15 +151,12 @@ object Text {
     * is O(delta spans + hits), independent of base size, exactly like
     * the minhash signature store (Dedup.ensureBaseSignatureStore).
     */
-  def ensureSpanStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "span_base_v1") { tmp =>
+  def ensureSpanStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "span_base_v1") {
       spanHashes(Tables(s, dir, "documents")
         .filter(col("doc_id") % 2 === 0))
         .select("gh").distinct()
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** Per-document base-duplication profile of `docs` (doc_id, text, ...)
     * against a DISTINCT base span-hash frame — the q_span_dedup_cross
@@ -281,15 +278,12 @@ object Text {
     * batch or at the ingest door — probes without ever re-deriving it
     * from documents.
     */
-  def ensureBenchGramStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "bench_grams_v1") { tmp =>
+  def ensureBenchGramStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "bench_grams_v1") {
       contamGrams(Tables(s, dir, "documents")
         .filter(col("doc_id") % 53 === 0))
         .select("gram").distinct()
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** Per-document contamination profile of `docs` against a benchmark
     * gram frame — the q_decontaminate computation, factored so
@@ -1182,10 +1176,9 @@ object Text {
     * executor loss — unlike the superseded persist+count variant, which
     * could recompute (but whose plan nesting doubled analysis time per
     * round after round 8; SCALE.md round-11). Irrelevant on the
-    * single-JVM local[32] harness; a real-cluster deployment should
-    * either accept restart-the-training-from-scratch on executor loss
-    * (the training is minutes, and deterministic) or switch to reliable
-    * `checkpoint()` with a configured checkpoint dir.
+    * single-JVM local[32] harness; a real-cluster deployment restarts
+    * the training from scratch on executor loss (the training is
+    * minutes, and deterministic).
     */
   /** likelihoodScore = false ranks candidate pairs by raw weighted count
     * (Sennrich BPE); true ranks by count(a,b) / (count(a) · count(b)) —
@@ -1199,14 +1192,8 @@ object Text {
     */
   def bpeTrainVocab(wordFreq: DataFrame, rounds: Int,
       mergesPerRound: Int = 1,
-      reliableCheckpoint: Boolean = false,
       likelihoodScore: Boolean = false)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
-    require(!reliableCheckpoint ||
-      wordFreq.sparkSession.sparkContext.getCheckpointDir.nonEmpty,
-      "reliableCheckpoint requires sparkContext.setCheckpointDir(...) — " +
-        "the per-round checkpoint needs a (durable) directory to survive " +
-        "executor loss")
     require(mergesPerRound >= 1 && mergesPerRound <= 64,
       s"mergesPerRound $mergesPerRound: the batch is applied as ONE fold " +
         "whose when-chain grows with k — keep it codegen-sized (<= 64)")
@@ -1297,7 +1284,7 @@ object Text {
           // round 8, DOUBLING per round after (102 s by round 18, dead
           // by 19). With the checkpoint every round is one flat
           // fold-over-cached-rows: ~constant per round.
-          val next0 = prev.select(col("f"),
+          val next = prev.select(col("f"),
             aggregate(col("syms"), typedLit(Seq.empty[String]),
               (acc, sym) => selected.foldRight(
                 concat(acc, array(sym)): Column) { case ((a, b, _), els) =>
@@ -1309,13 +1296,8 @@ object Text {
               }).as("syms"))
           // eager: materialized HERE, lineage cut. localCheckpoint blocks
           // are UNRECOVERABLE on executor loss (fine single-JVM; scaladoc
-          // caveat); reliableCheckpoint=true writes each round to the
-          // configured checkpoint dir instead — measured overhead in
-          // SCALE.md round-12 — for real-cluster trainings
-          val next =
-            if (reliableCheckpoint) next0.checkpoint(true)
-            else next0.localCheckpoint(true)
-          vocab = next
+          // caveat)
+          vocab = next.localCheckpoint(true)
           // releases the ROUND-0 persisted frame; for later rounds prev
           // is checkpoint-backed and this is a no-op — superseded
           // rounds' RDD blocks are reclaimed by the ContextCleaner once
@@ -1576,12 +1558,12 @@ object Text {
   def pretrainEncodedDocsWith(s: SparkSession, dir: String,
       vocab: DataFrame): DataFrame = {
     val stream = pretrainSymbolStreamWith(s, dir, vocab).persist()
-    // ONE bounds collect doubles as the emptiness guard AND replaces the
-    // bounds broadcast-subquery inside symtabOf (round-16: the separate
-    // isEmpty action, the bounds crossJoin's broadcast job, and the
-    // first full-stream pass they each implied fold into this single
-    // driver-bounded row; null min ⇔ empty survivor corpus — the same
-    // condition the old isEmpty guarded)
+    // ONE bounds collect doubles as the emptiness guard AND the rank's
+    // count bounds, as in symtabOf (round-16: the separate isEmpty
+    // action, a bounds broadcast job, and the first full-stream pass
+    // they each implied fold into this single driver-bounded row; null
+    // min ⇔ empty survivor corpus — the same condition the old isEmpty
+    // guarded)
     val counts = stream.groupBy("sym").agg(count(lit(1)).as("cnt")).persist()
     val b = counts
       .agg(min(col("cnt")).as("minc"), max(col("cnt")).as("maxc")).head()
@@ -1605,25 +1587,17 @@ object Text {
     */
   def symtabOf(stream: DataFrame): DataFrame = {
     val counts = stream.groupBy("sym").agg(count(lit(1)).as("cnt"))
-    val bounds = counts.agg(
-      min(col("cnt")).as("minc"), max(col("cnt")).as("maxc"))
-    val banded = counts.crossJoin(broadcast(bounds))
-      .withColumn("bkt", Banding.bucketizeDesc(col("cnt").cast(DoubleType),
-        col("minc").cast(DoubleType), col("maxc").cast(DoubleType)))
-    val offN = Banding.offsets(
-      banded.groupBy("bkt").agg(count(lit(1)).as("bc")), Seq("off_n"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy("bkt").orderBy(col("cnt").desc, col("sym"))
-    banded.join(broadcast(offN), "bkt")
-      .select(col("sym"),
-        (row_number().over(wIn) + col("off_n")).cast(IntegerType).as("tid"))
+    val b = counts
+      .agg(min(col("cnt")).as("minc"), max(col("cnt")).as("maxc")).head()
+    // null min ⇔ empty stream: an empty (sym, tid) table
+    if (b.isNullAt(0)) counts.select(col("sym"), lit(0).as("tid")).limit(0)
+    else symtabOfCounts(counts, b.getLong(0), b.getLong(1))
   }
 
-  /** [[symtabOf]] over a PRECOMPUTED (sym, cnt) table with the count
-    * bounds already collected (round-16): same bucketizeDesc arithmetic
-    * on the same (min, max) doubles — tids bit-identical to symtabOf —
-    * minus the bounds crossJoin's broadcast subquery and one full pass
-    * over the symbol stream. Caller owns the counts frame's cache.
+  /** [[symtabOf]]'s rank over a (sym, cnt) table whose count bounds
+    * are already collected: bucketizeDesc on the (min, max) doubles,
+    * banded offsets, then a per-bucket `row_number`. Caller owns the
+    * counts frame's cache.
     */
   private def symtabOfCounts(counts: DataFrame, minc: Long,
       maxc: Long): DataFrame = {
@@ -1657,7 +1631,7 @@ object Text {
   def ensurePretrainSymtabStore(s: SparkSession, dir: String): DataFrame = {
     val path = Sources.ensureStore(dir, "pretrain_symtab_v1") { tmp =>
       // persist the stream for the build: symtabOf reads it twice (the
-      // band-offsets collect and the written rank), and the stream is
+      // count-bounds collect and the written rank), and the stream is
       // the dominant cost (battery -> dedup window -> encode join)
       val stream = pretrainSymbolStream(s, dir).persist()
       try symtabOf(stream).write.mode("overwrite").parquet(tmp)
@@ -1711,15 +1685,12 @@ object Text {
     * one-column table (optionally bloom-prefiltered, q_dedup_bloom),
     * never by re-reading the base corpus.
     */
-  def ensurePretrainFpStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "pretrain_fp_v1") { tmp =>
+  def ensurePretrainFpStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "pretrain_fp_v1") {
       // kept docs are fp-unique by construction (first-id-per-fp dedup)
       batteryKeptDocs(Tables(s, dir, "documents")).select("fp")
         .distinct()
-        .write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** The streaming pretrain door's synthesized delta crawl (the
     * q_dedup_bloom convention; the oracle rebuilds it via CTE — the

@@ -51,32 +51,27 @@ object TpchExt {
     * convention) while oracles rebuild it from the same arithmetic in a
     * CTE ([[psCte]]).
     */
-  def ensurePartsuppStore(s: SparkSession, dir: String): DataFrame = {
-    val path = Sources.ensureStore(dir, "partsupp_v2") { tmp =>
-      {
-        val sc = Tables(s, dir, "supplier")
-          .agg(count(lit(1)).cast(LongType).as("scnt"))
-        val ring = Tables(s, dir, "part").select(col("p_partkey"))
-          .crossJoin(s.range(4).select(col("id").as("i")))
-          .crossJoin(broadcast(sc))
-          .select(col("p_partkey").as("pk"),
-            ((col("p_partkey") + col("i") * expr("(scnt + 3) div 4"))
-              % col("scnt")).as("sk"))
-        val shipped = Tables(s, dir, "lineitem")
-          .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
-        ring.union(shipped).distinct()
-          .select(
-            col("pk").as("ps_partkey"),
-            col("sk").as("ps_suppkey"),
-            (lit(1L) + (col("pk") * 4 + col("sk") * 7) % 9999)
-              .as("ps_availqty"),
-            (lit(1.0) + ((col("pk") * 7 + col("sk") * 13) % 80000)
-              / lit(100.0)).cast(DecimalType(12, 2)).as("ps_supplycost"))
-          .write.mode("overwrite").parquet(tmp)
-      }
+  def ensurePartsuppStore(s: SparkSession, dir: String): DataFrame =
+    Sources.parquetStore(s, dir, "partsupp_v2") {
+      val sc = Tables(s, dir, "supplier")
+        .agg(count(lit(1)).cast(LongType).as("scnt"))
+      val ring = Tables(s, dir, "part").select(col("p_partkey"))
+        .crossJoin(s.range(4).select(col("id").as("i")))
+        .crossJoin(broadcast(sc))
+        .select(col("p_partkey").as("pk"),
+          ((col("p_partkey") + col("i") * expr("(scnt + 3) div 4"))
+            % col("scnt")).as("sk"))
+      val shipped = Tables(s, dir, "lineitem")
+        .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
+      ring.union(shipped).distinct()
+        .select(
+          col("pk").as("ps_partkey"),
+          col("sk").as("ps_suppkey"),
+          (lit(1L) + (col("pk") * 4 + col("sk") * 7) % 9999)
+            .as("ps_availqty"),
+          (lit(1.0) + ((col("pk") * 7 + col("sk") * 13) % 80000)
+            / lit(100.0)).cast(DecimalType(12, 2)).as("ps_supplycost"))
     }
-    s.read.parquet(path)
-  }
 
   /** DuckDB CTE rebuilding [[ensurePartsuppStore]]'s table verbatim —
     * spliced into every oracle that touches partsupp.

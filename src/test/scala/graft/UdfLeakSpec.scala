@@ -2,9 +2,8 @@ package graft
 
 /** Repo-wide plan hygiene gate: no registered query may carry a boxed
   * Scala UDF (or a Python eval node) in its optimized plan — every scalar
-  * hot path must be a built-in or a native codegen Expression. PlanAudit
-  * prints these markers for eyeballing; this spec makes the invariant a
-  * failing test instead of a dashboard.
+  * hot path must be a built-in or a native codegen Expression, as a
+  * failing test rather than printed plan markers.
   *
   * Typed operations (mapGroups / Aggregator / the MapReduceJob RDD core)
   * are object-operators, not ScalaUDF nodes, so they pass — the gate
