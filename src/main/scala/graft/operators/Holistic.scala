@@ -164,33 +164,19 @@ object Holistic {
     *
     * Scores are continuous, so the distinct-score frame grows with the
     * corpus — a naive `Window.orderBy(s)` prefix sum would serialize it
-    * through one task. Instead the same two-level banded prefix sum as
-    * q_ks_2samp (Stats.scala): scores band into ≤1024 value-range
-    * buckets, per-band count partials roll up on the band-bounded
-    * table, and the broadcast band offsets turn every within-band
-    * cumulative window into an independent partition. Band boundaries
-    * only shape the plan — cum_before is the same exact long either
-    * way — so the result is bit-identical to the single-window form.
-    * byScore persists because three branches (bounds, band partials,
-    * ranking) read it; released under the harness cache-hygiene
-    * contract (Bench/Verify clearCache between queries).
+    * through one task. Instead cum_before is [[Banding.sumsBefore]] of
+    * the counts: band boundaries only shape the plan, so the result is
+    * bit-identical to the single-window form. byScore persists because
+    * three branches (bounds, band partials, ranking) read it; released
+    * under the harness cache-hygiene contract (Bench/Verify clearCache
+    * between queries).
     */
   def aucExact(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byScore = df.groupBy("s").agg(count(lit(1)).as("c"),
       sum(col("y").cast(LongType)).as("p"))
       .persist()
-    val bounds = byScore.agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
-    val banded = byScore.crossJoin(broadcast(bounds))
-      .withColumn("bkt", Banding.bucketize(col("s"), col("lo"), col("hi")))
-      .drop("lo", "hi")
-    val off = Banding.offsets(
-      banded.groupBy("bkt").agg(sum(col("c")).as("pc")), Seq("off"))
-    val wIn = Window.partitionBy("bkt").orderBy("s")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = banded.join(broadcast(off), "bkt")
-      .withColumn("cum_before",
-        coalesce(sum(col("c")).over(wIn), lit(0L)) + col("off"))
+    val ranked = Banding.sumsBefore(byScore, col("s"), Seq(col("s")),
+        Seq("cum_before" -> col("c")))
       .withColumn("avg_rank",
         col("cum_before") + (col("c") + lit(1L)) / lit(2.0))
     ranked.agg(sum(col("p")).as("n_pos"),
@@ -545,7 +531,7 @@ object Holistic {
     // defaults differ (Spark windows NULLS FIRST, DuckDB NULLS LAST), so
     // the only parity-safe contract is to define AUC over non-null
     // scores — which also satisfies the banded plan's non-null band-key
-    // precondition (Banding.bucketize).
+    // precondition (Banding.sumsBefore).
     "q_auc" -> ((s, dir) =>
       aucExact(graft.Tables(s, dir, "events")
         .filter(col("value").isNotNull)

@@ -36,30 +36,16 @@ import graft.Tables
 object Mining {
 
   /** Global 1-based rank `i` over (rev, sk) — ties broken by sk — via
-    * the two-level banded prefix sum (the q_ks_2samp pattern,
-    * Stats.scala): rows band into ≤1024 value-range buckets of the
-    * double image of `rev`, per-band counts roll up on the band-bounded
-    * table, broadcast offsets turn the within-band row_number into an
-    * independent per-band partition. The double cast is monotone, so
-    * equal decimals can never straddle a band and the composite rank is
-    * bit-identical to row_number over an (impossible-at-scale) global
-    * sort. Input: columns (sk: long, rev: decimal), already persisted by
-    * the caller (three branches read it). Output: input plus `i: long`.
+    * the banded prefix sum ([[Banding.sumsBefore]], banded on the
+    * monotone double image of `rev`): bit-identical to row_number over
+    * an (impossible-at-scale) global sort. Input: columns (sk: long,
+    * rev: decimal), already persisted by the caller (three branches read
+    * it). Output: input plus `i: long`.
     */
-  private def bandedRevRank(sup: DataFrame): DataFrame = {
-    val bounds = sup.agg(min(col("rev").cast(DoubleType)).as("lo"),
-      max(col("rev").cast(DoubleType)).as("hi"))
-    val banded = sup.crossJoin(broadcast(bounds))
-      .withColumn("bkt",
-        Banding.bucketize(col("rev").cast(DoubleType), col("lo"), col("hi")))
-      .drop("lo", "hi")
-    val off = Banding.offsets(
-      banded.groupBy("bkt").agg(count(lit(1)).as("bc")), Seq("off"))
-    val wIn = Window.partitionBy("bkt").orderBy(col("rev"), col("sk"))
-    banded.join(broadcast(off), "bkt")
-      .withColumn("i", row_number().over(wIn).cast(LongType) + col("off"))
-      .drop("bkt", "off")
-  }
+  private def bandedRevRank(sup: DataFrame): DataFrame =
+    Banding.sumsBefore(sup, col("rev"), Seq(col("rev"), col("sk")),
+        Seq("i" -> lit(1L)))
+      .withColumn("i", col("i") + 1)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

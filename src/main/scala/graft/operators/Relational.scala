@@ -490,8 +490,7 @@ object Relational {
     "q_stratified_sample" -> ((s, dir) =>
       Tables(s, dir, "events")
         .withColumn("bucket",
-          (conv(substring(md5(col("event_id").cast("string")), 1, 8), 16, 10)
-            .cast(LongType) % 100))
+          (Parity.md5Key(col("event_id")) % 100))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_total"),
           count(when(col("bucket") < 10, 1)).as("n_kept"))

@@ -174,8 +174,7 @@ object Similarity {
       val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
       val anchors = e
         .withColumn("ak",
-          conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
-            .cast("long"))
+          Parity.md5Key(col("vec_id")))
         .orderBy(col("ak"), col("vec_id")).limit(100)
         .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
       val pairs = e.crossJoin(broadcast(anchors))
@@ -190,8 +189,8 @@ object Similarity {
           round(col("p.cos"), 6).as("pos_cos"))
       val neg = pairs.filter(col("cos") < 0.2)
         .withColumn("nk",
-          conv(substring(md5(concat_ws("-", col("a_id").cast("string"),
-            col("vec_id").cast("string"))), 1, 8), 16, 10).cast("long"))
+          Parity.md5Key(concat_ws("-", col("a_id").cast("string"),
+            col("vec_id").cast("string"))))
         .groupBy("a_id")
         .agg(min(struct(col("nk"), col("vec_id"), col("cos"))).as("n"))
         .select(col("a_id"), col("n.vec_id").as("neg_id"),

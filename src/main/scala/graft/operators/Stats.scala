@@ -168,11 +168,9 @@ object Stats {
     // distribution different from the rest? The ECDF difference needs a
     // global prefix sum, which a naive unpartitioned running-sum window
     // would serialize through one task — instead the classic two-level
-    // distributed prefix sum: per-value counts bucket into ≤1024
-    // value-range bands (Banding.bucketize), per-band partials roll up
-    // on the band-bounded table, and the broadcast band offsets turn
-    // every within-band window into an independent partition. At 100 TB
-    // the only global structure is the ≤1024-row offset table.
+    // distributed prefix sum (Banding.sumsBefore) over the per-value
+    // counts: at 100 TB the only global structure is its ≤1024-row band
+    // offset table.
     "q_ks_2samp" -> ((s, dir) => {
       val o = Tables(s, dir, "orders").select(
         col("o_totalprice").as("x"),
@@ -180,25 +178,11 @@ object Stats {
       val byX0 = o.groupBy("x").agg(
         sum(col("a")).as("ca"), sum(lit(1L) - col("a")).as("cb"))
         .persist() // bounds + band partials + totals + main all read it
-      // value-range bucketize (≤1024 bands) rather than a fixed
-      // floor(x/10000) band: the fixed width made the band count — and
-      // therefore Banding.offsets' driver collect — data-dependent,
-      // violating the machinery's documented B-bounded contract
-      val bounds = byX0.agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      val byX = byX0.crossJoin(broadcast(bounds))
-        .withColumn("bkt", Banding.bucketize(col("x"), col("lo"), col("hi")))
-        .drop("lo", "hi")
-      val bands = byX.groupBy("bkt")
-        .agg(sum("ca").as("pa"), sum("cb").as("pb"))
-      // strictly-preceding cumulative folded driver-side over the
-      // band-bounded partials table (Banding.offsets — metadata, not data)
-      val off = Banding.offsets(bands, Seq("offa", "offb"))
-      val tot = bands.agg(sum("pa").as("n1"), sum("pb").as("n2"))
-      val wIn = Window.partitionBy("bkt").orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      byX.join(broadcast(off), "bkt")
-        .withColumn("cuma", sum("ca").over(wIn) + col("offa"))
-        .withColumn("cumb", sum("cb").over(wIn) + col("offb"))
+      val tot = byX0.agg(sum("ca").as("n1"), sum("cb").as("n2"))
+      Banding.sumsBefore(byX0, col("x"), Seq(col("x")),
+          Seq("cuma" -> col("ca"), "cumb" -> col("cb")))
+        .withColumn("cuma", col("cuma") + col("ca"))
+        .withColumn("cumb", col("cumb") + col("cb"))
         .crossJoin(broadcast(tot))
         // ECDF at each distinct x includes all ties at x (group-then-cum),
         // so this is the exact sup over the pooled sample; each term is
@@ -391,9 +375,8 @@ object Stats {
         .spreadScanForCpu(o.select(col("o_orderkey"), col("o_totalprice").as("x")))
         .crossJoin(broadcast(reps))
         .withColumn("u",
-          conv(substring(md5(concat(col("o_orderkey").cast(StringType),
-            lit(":"), col("b").cast(StringType))), 1, 8), 16, 10)
-            .cast(LongType) % 1000000)
+          Parity.md5Key(concat(col("o_orderkey").cast(StringType),
+            lit(":"), col("b").cast(StringType))) % 1000000)
         .withColumn("wgt",
           when(col("u") < 367879, 0L).when(col("u") < 735759, 1L)
             .when(col("u") < 919699, 2L).when(col("u") < 981012, 3L)

@@ -40,8 +40,7 @@ object Text {
 
   /** Reingest-stable md5 bucket in [0, 100) keyed on doc_id. */
   def mixtureBucket: Column =
-    conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-      .cast(LongType) % 100
+    Parity.md5Key(col("doc_id")) % 100
 
   /** The lang-id predictor oracle, shared by q_lang_id and the
     * q_lang_confusion evaluation (one definition of the CASE tie-break
@@ -360,34 +359,44 @@ object Text {
       .select("doc_id", "start_tok", "end_tok", "n_dup_spans")
   }
 
-  /** The packing family's reingest-stable global token prefix sum,
-    * factored out of q_pack_sequences / q_pack_emit / q_pack_masked
-    * (ONE definition of the banding convention instead of three): each
-    * doc of `perDoc` gets `cum_before` = the sum of `weight` over all
-    * docs strictly before it in md5-key order. Rides the banded
-    * two-level machinery (bucketize + driver-folded band offsets +
-    * within-band windows) — NO unpartitioned running-sum window at any
-    * corpus size; all arithmetic exact longs. `perDoc` must carry
-    * `doc_id` plus the long `weight` column; every input column passes
-    * through.
+  /** The packing family's reingest-stable global prefix sum — ONE
+    * definition of the md5 ordering shared by q_pack_sequences /
+    * q_pack_emit / q_pack_masked, [[packedSegmentsOf]] and
+    * q_corpus_shuffle (weight 1, a rank): each doc of `perDoc` gets
+    * `cum_before` = the sum of `weight` over all docs strictly before it
+    * in (md5 key `k`, doc_id) order, through [[Banding.sumsBefore]] on
+    * the key's fixed [0, 2^32) range. All arithmetic exact longs.
+    * `perDoc` must carry `doc_id`; every input column passes through.
     */
-  private def packCumBefore(perDoc: DataFrame, weight: String): DataFrame = {
-    val keyed = perDoc
-      .withColumn("k",
-        conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast(LongType))
-      .withColumn("bkt", Banding.bucketize(
-        col("k").cast(DoubleType), lit(0.0), lit(4294967296.0)))
-    val off = Banding.offsets(
-      keyed.groupBy("bkt").agg(sum(col(weight)).as("tc")), Seq("off"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy("bkt").orderBy(col("k"), col("doc_id"))
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    keyed.join(broadcast(off), "bkt")
-      .withColumn("cum_before",
-        coalesce(sum(col(weight)).over(wIn), lit(0L)) + col("off"))
-  }
+  private def packCumBefore(perDoc: DataFrame, weight: Column): DataFrame =
+    Banding.sumsBefore(perDoc.withColumn("k", Parity.md5Key(col("doc_id"))),
+      col("k"), Seq(col("k"), col("doc_id")), Seq("cum_before" -> weight),
+      Some((lit(0.0), lit(4294967296.0))))
+
+  /** The packer's segment table: one row per (shard, doc) overlap of a
+    * [[packCumBefore]] frame in fixed `budget`-token shards, straggler
+    * splits included — a doc spanning k shards explodes into k rows via
+    * sequence(first_shard, last_shard), each carrying the doc-local
+    * token range [start_tok, end_tok] (0-based inclusive) and its
+    * in-shard position `off_in_shard`. Empty docs occupy no slot. The
+    * `carry` columns pass through.
+    */
+  private def packSegments(packed: DataFrame, budget: Long,
+      carry: String*): DataFrame =
+    packed.filter(col("n_tokens") > 0)
+      .select(Seq(col("doc_id"), col("n_tokens"), col("cum_before"),
+        explode(expr(s"sequence(cum_before div $budget," +
+          s" (cum_before + n_tokens - 1) div $budget)")).as("shard"))
+        ++ carry.map(col): _*)
+      .select(Seq(col("shard"), col("doc_id"),
+        greatest(col("shard") * budget - col("cum_before"), lit(0L))
+          .as("start_tok"),
+        (least((col("shard") + 1) * budget,
+          col("cum_before") + col("n_tokens")) - col("cum_before") - 1)
+          .as("end_tok"),
+        (greatest(col("shard") * budget, col("cum_before"))
+          - col("shard") * budget).as("off_in_shard"))
+        ++ carry.map(col): _*)
 
   /** The Gopher rule-battery statistics (Rae et al. 2021, appendix
     * A1.1) over a documents frame — one codegen'd map pass adding
@@ -1112,8 +1121,7 @@ object Text {
   def corpusSplitAssign(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("source"),
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast(LongType) % 1000000).as("u"))
+        (Parity.md5Key(col("doc_id")) % 1000000).as("u"))
       .withColumn("split",
         when(col("u") < 800000, "train")
           .when(col("u") < 900000, "val")
@@ -1507,34 +1515,42 @@ object Text {
     * returned lazy frame (the rank and id-mapping joins both read it);
     * callers release via `spark.catalog.clearCache()` when done — the
     * harness does this per query; long-lived library callers must too.
-    * An EMPTY survivor corpus short-circuits to an empty frame (the
-    * banded rank's min/max bounds would otherwise be null and trip
-    * Banding.offsets' null-band require).
+    * An EMPTY survivor corpus short-circuits to an empty frame (there
+    * are no count bounds to band the rank on).
     */
   def pretrainEncodedDocs(s: SparkSession, dir: String): DataFrame =
     pretrainEncodedDocsWith(s, dir, cleanTokenizerVocab(s, dir))
 
-  /** The cleaned-survivor corpus' exploded symbol stream
-    * (doc_id, pos, spos, sym): curation survivors tokenized word-wise,
-    * each word mapped to its post-merge symbol sequence via the
-    * PERSISTED cleaned tokenizer store (sub-floor words pass through as
-    * single self-tokens). Factored (round-12) so the base symbol-id
-    * table can be built without re-deriving the stream inline.
+  /** The exploded symbol stream (doc_id, pos, spos, sym) of a
+    * (doc_id, w) frame under a (word, syms) segmentation view: each word
+    * maps to its post-merge symbol sequence; words the view lacks
+    * (sub-floor or unseen) pass through as single self-tokens. ONE body
+    * for the base corpus (the symbol-id table and [[pretrainEncodedDocs]])
+    * and every delta batch ([[encodeWithVocab]]).
     */
-  private def pretrainSymbolStream(s: SparkSession, dir: String): DataFrame =
-    pretrainSymbolStreamWith(s, dir, cleanTokenizerVocab(s, dir))
-
-  /** The symbol stream under an EXPLICIT (word, syms) segmentation view
-    * — the [[Tokenizer]]-swap entry: same battery survivors, same
-    * sub-floor self-token rule, only the segmentations differ. */
-  private[graft] def pretrainSymbolStreamWith(s: SparkSession, dir: String,
-      vocab: DataFrame): DataFrame =
-    pipelineKeptDocs(s, dir)
+  private def symbolStream(kept: DataFrame, vocab: DataFrame): DataFrame =
+    kept
       .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "word")))
       .join(vocab, Seq("word"), "left")
       .select(col("doc_id"), col("pos"),
         posexplode(coalesce(col("syms"), array(col("word"))))
           .as(Seq("spos", "sym")))
+
+  /** (doc_id, ids, n_tokens) of a symbol stream under a (sym, tid)
+    * table: ids in (pos, spos) document order; a symbol the table lacks
+    * takes the UNK id 0 (table ids start at 1).
+    */
+  private def idsOf(stream: DataFrame, symtab: DataFrame): DataFrame =
+    stream
+      .join(symtab, Seq("sym"), "left")
+      .select(col("doc_id"), col("pos"), col("spos"),
+        coalesce(col("tid"), lit(0)).as("tid"))
+      .groupBy("doc_id")
+      .agg(transform(
+        array_sort(collect_list(struct(col("pos"), col("spos"), col("tid")))),
+        x => x.getField("tid")).as("ids"))
+      .select(col("doc_id"), col("ids"),
+        size(col("ids")).cast(LongType).as("n_tokens"))
 
   /** A tokenizer store's (word, syms) view — each trained word's
     * post-merge symbol sequence (the word key reconstructed as the
@@ -1557,7 +1573,7 @@ object Text {
     * (no-token-lost, shard tiling) unchanged. */
   def pretrainEncodedDocsWith(s: SparkSession, dir: String,
       vocab: DataFrame): DataFrame = {
-    val stream = pretrainSymbolStreamWith(s, dir, vocab).persist()
+    val stream = symbolStream(pipelineKeptDocs(s, dir), vocab).persist()
     // ONE bounds collect doubles as the emptiness guard AND the rank's
     // count bounds, as in symtabOf (round-16: the separate isEmpty
     // action, a bounds broadcast job, and the first full-stream pass
@@ -1570,13 +1586,7 @@ object Text {
     if (b.isNullAt(0))
       return stream.limit(0).select(col("doc_id"),
         array().cast("array<int>").as("ids"), lit(0L).as("n_tokens"))
-    stream.join(symtabOfCounts(counts, b.getLong(0), b.getLong(1)), "sym")
-      .groupBy("doc_id")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("spos"), col("tid")))),
-        x => x.getField("tid")).as("ids"))
-      .select(col("doc_id"), col("ids"),
-        size(col("ids")).cast(LongType).as("n_tokens"))
+    idsOf(stream, symtabOfCounts(counts, b.getLong(0), b.getLong(1)))
   }
 
   /** Frequency-ranked symbol-id table (sym → tid, id 1 = most frequent)
@@ -1595,30 +1605,22 @@ object Text {
   }
 
   /** [[symtabOf]]'s rank over a (sym, cnt) table whose count bounds
-    * are already collected: bucketizeDesc on the (min, max) doubles,
-    * banded offsets, then a per-bucket `row_number`. Caller owns the
-    * counts frame's cache.
+    * are already collected: the banded rank keyed on the negated count,
+    * within the known (-max, -min) range. Caller owns the counts frame's
+    * cache.
     */
   private def symtabOfCounts(counts: DataFrame, minc: Long,
-      maxc: Long): DataFrame = {
-    val banded = counts
-      .withColumn("bkt", Banding.bucketizeDesc(col("cnt").cast(DoubleType),
-        lit(minc.toDouble), lit(maxc.toDouble)))
-    val offN = Banding.offsets(
-      banded.groupBy("bkt").agg(count(lit(1)).as("bc")), Seq("off_n"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy("bkt").orderBy(col("cnt").desc, col("sym"))
-    banded.join(broadcast(offN), "bkt")
-      .select(col("sym"),
-        (row_number().over(wIn) + col("off_n")).cast(IntegerType).as("tid"))
-  }
+      maxc: Long): DataFrame =
+    Banding.sumsBefore(counts, -col("cnt"), Seq(col("cnt").desc, col("sym")),
+        Seq("n_before" -> lit(1L)), Some((lit(-maxc), lit(-minc))))
+      .select(col("sym"), (col("n_before") + 1).cast(IntegerType).as("tid"))
 
   /** The BASE corpus' symbol-id table — a fresh (un-persisted) build;
     * the door reads the PERSISTED store below, this entry exists for
     * the store-determinism law and ad-hoc callers.
     */
   def pretrainSymtab(s: SparkSession, dir: String): DataFrame =
-    symtabOf(pretrainSymbolStream(s, dir))
+    symtabOf(symbolStream(pipelineKeptDocs(s, dir), cleanTokenizerVocab(s, dir)))
 
   /** One-time BASE symbol-id-table store (vocabulary-sized parquet,
     * fit once per sf dir beside the tokenizer store — the
@@ -1633,7 +1635,8 @@ object Text {
       // persist the stream for the build: symtabOf reads it twice (the
       // count-bounds collect and the written rank), and the stream is
       // the dominant cost (battery -> dedup window -> encode join)
-      val stream = pretrainSymbolStream(s, dir).persist()
+      val stream = symbolStream(pipelineKeptDocs(s, dir),
+        cleanTokenizerVocab(s, dir)).persist()
       try symtabOf(stream).write.mode("overwrite").parquet(tmp)
       finally { stream.unpersist(); () }
     }
@@ -1662,21 +1665,7 @@ object Text {
     */
   def encodeWithVocab(kept: DataFrame, vocab: DataFrame,
       symtab: DataFrame): DataFrame =
-    kept
-      .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "word")))
-      .join(vocab, Seq("word"), "left")
-      .select(col("doc_id"), col("pos"),
-        posexplode(coalesce(col("syms"), array(col("word"))))
-          .as(Seq("spos", "sym")))
-      .join(symtab, Seq("sym"), "left")
-      .select(col("doc_id"), col("pos"), col("spos"),
-        coalesce(col("tid"), lit(0)).as("tid"))
-      .groupBy("doc_id")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("spos"), col("tid")))),
-        x => x.getField("tid")).as("ids"))
-      .select(col("doc_id"), col("ids"),
-        size(col("ids")).cast(LongType).as("n_tokens"))
+    idsOf(symbolStream(kept, vocab), symtab)
 
   /** One-time BASE-corpus fingerprint store (the signature/LM/DSIR-store
     * convention): the content fingerprints of the curation survivors,
@@ -1719,54 +1708,20 @@ object Text {
     * ingest group into its own shard-id range (group g owns
     * [g·shardBase0, (g+1)·shardBase0): disjoint as long as a group
     * stays under shardBase0 × budget tokens — the caller's documented
-    * contract). Same banded prefix sum, straggler-split explode, and
-    * id-slice emission as the capstone.
+    * contract). The pack prefix sum and segment emitter of q_pack_emit
+    * plus the id slice of each segment. `docs` is read twice (band
+    * partials, then the segments): a caller whose input is expensive
+    * persists it and owns its release.
     */
-  def packedSegmentsOf(docs0: DataFrame, shardBase: Long,
-      budget: Long = 2048L, persistInput: Boolean = true): DataFrame = {
-    // persistInput: the band-offsets job and the emit pass both read
-    // the (potentially expensive) encoded input, so the default caches
-    // it here — but the cache is unreachable by the caller (round-12
-    // review), so a long-lived caller that has ALREADY persisted an
-    // upstream frame (the streaming door's per-batch `encoded`) passes
-    // false and keeps release in its own hands; the recompute between
-    // the two passes is then just the cheap k/bkt hash columns over its
-    // cached rows.
-    val keyed = docs0
-      .withColumn("k",
-        conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast(LongType))
-      .withColumn("bkt", Banding.bucketize(
-        col("k").cast(DoubleType), lit(0.0), lit(4294967296.0)))
-    val docs = if (persistInput) keyed.persist() else keyed
-    val off = Banding.offsets(
-      docs.groupBy("bkt").agg(sum(col("n_tokens")).as("tc")), Seq("off"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy("bkt").orderBy(col("k"), col("doc_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    docs.join(broadcast(off), "bkt")
-      .withColumn("cum_before",
-        coalesce(sum(col("n_tokens")).over(wIn), lit(0L)) + col("off"))
-      .filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens"), col("cum_before"), col("ids"),
-        explode(expr(s"sequence(cum_before div $budget," +
-          s" (cum_before + n_tokens - 1) div $budget)")).as("shard"))
-      .select(col("shard"), col("doc_id"),
-        greatest(col("shard") * budget - col("cum_before"), lit(0L))
-          .as("start_tok"),
-        (least((col("shard") + 1) * budget,
-          col("cum_before") + col("n_tokens")) - col("cum_before") - 1)
-          .as("end_tok"),
-        (greatest(col("shard") * budget, col("cum_before"))
-          - col("shard") * budget).as("off_in_shard"),
-        col("ids"))
+  def packedSegmentsOf(docs: DataFrame, shardBase: Long,
+      budget: Long = 2048L): DataFrame =
+    packSegments(packCumBefore(docs, col("n_tokens")), budget, "ids")
       .select((col("shard") + lit(shardBase)).as("shard"), col("doc_id"),
         col("start_tok"), col("end_tok"), col("off_in_shard"),
         array_join(transform(
           slice(col("ids"), (col("start_tok") + 1).cast(IntegerType),
             (col("end_tok") - col("start_tok") + 1).cast(IntegerType)),
           x => x.cast(StringType)), "-").as("ids"))
-  }
 
   /** One-time DSIR model store (the incremental-ingest convention of the
     * span/signature/centroid stores): per-bucket target (lang=en) and
@@ -2510,8 +2465,7 @@ object Text {
           round(col("wt") / col("mw") * 1000000, 0).cast(LongType))
         .select("source", "n_docs", "n_tokens", "rate_ppm")
       val kept = d.join(broadcast(rates), "source")
-        .filter(conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast(LongType) % 1000000 < col("rate_ppm"))
+        .filter(Parity.md5Key(col("doc_id")) % 1000000 < col("rate_ppm"))
         .groupBy("source").agg(
           count(lit(1)).as("kept_docs"), sum("n_tok").as("kept_tokens"))
       rates.join(kept, Seq("source"), "left")
@@ -2520,30 +2474,22 @@ object Text {
           coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"))
     }),
 
-    // Deterministic training-shard shuffle — the final data op of an
-    // LLM run: turn the curated corpus into randomized shards. A
-    // reingest-stable md5 key gives each doc a uniform position, the
-    // BANDED global rank (the q_auc/q_gini prefix-sum machinery — no
-    // unpartitioned window at any corpus size) orders the corpus by it,
-    // and strided assignment deals ranks round-robin into 64 shards, so
-    // every shard is itself a uniform sample in shuffled order. Cost:
-    // one banded window + the ≤1024-row offsets fold; no global sort.
     // Sequence PACKING for pretraining batches — the step after the
     // shard shuffle: stream the corpus in reingest-stable md5 order and
     // fill fixed 2048-token shards contiguously (greedy fill: a doc
     // belongs to the shard its FIRST token lands in — the standard
     // document-packing rule; the trainer's loader splits stragglers).
-    // The global token prefix sum rides the banded two-level machinery
-    // (bucketize + driver-folded band offsets + within-band windows), so
-    // there is NO unpartitioned running-sum window at any corpus size
-    // and every output column is exact integer arithmetic — fully
-    // oracled. One corpus scan, one ≤1024-row metadata collect.
+    // The global token prefix sum is Banding.sumsBefore (via
+    // packCumBefore), so there is NO unpartitioned running-sum window at
+    // any corpus size and every output column is exact integer
+    // arithmetic — fully oracled. One corpus scan, one ≤1024-row
+    // metadata collect.
     "q_pack_sequences" -> ((s, dir) => {
       val budget = 2048L
       packCumBefore(Tables(s, dir, "documents")
         .select(col("doc_id"),
           size(filter(split(col("text"), "\\s+"), t => length(t) > 0))
-            .cast(LongType).as("n_tokens")), "n_tokens")
+            .cast(LongType).as("n_tokens")), col("n_tokens"))
         .select(col("doc_id"), col("n_tokens"),
           // integer div, not double-divide-then-cast: exact at any scale
           expr(s"cum_before div $budget").as("shard"),
@@ -2560,29 +2506,14 @@ object Text {
     // exactly the row boundaries). A doc spanning k shards explodes into
     // k rows via sequence(first_shard, last_shard) — total output is
     // n_docs + total_tokens/2048 rows, both linear in corpus size; the
-    // prefix sum itself rides the same banded two-level machinery (no
-    // unpartitioned window at any corpus size). Every column is exact
+    // prefix sum is q_pack_sequences' packCumBefore and the emitter is
+    // packSegments, shared with packedSegmentsOf. Every column is exact
     // integer arithmetic — fully oracled.
-    "q_pack_emit" -> ((s, dir) => {
-      val budget = 2048L
-      packCumBefore(Tables(s, dir, "documents")
+    "q_pack_emit" -> ((s, dir) =>
+      packSegments(packCumBefore(Tables(s, dir, "documents")
         .select(col("doc_id"),
           size(filter(split(col("text"), "\\s+"), t => length(t) > 0))
-            .cast(LongType).as("n_tokens")), "n_tokens")
-        .filter(col("n_tokens") > 0) // an empty doc occupies no shard slot
-        .select(col("doc_id"), col("n_tokens"), col("cum_before"),
-          explode(expr(s"sequence(cum_before div $budget," +
-            s" (cum_before + n_tokens - 1) div $budget)")).as("shard"))
-        .select(col("shard"), col("doc_id"),
-          // the slice of THIS doc that lands in THIS shard, and where
-          greatest(col("shard") * budget - col("cum_before"), lit(0L))
-            .as("start_tok"),
-          (least((col("shard") + 1) * budget,
-            col("cum_before") + col("n_tokens")) - col("cum_before") - 1)
-            .as("end_tok"),
-          (greatest(col("shard") * budget, col("cum_before"))
-            - col("shard") * budget).as("off_in_shard"))
-    }),
+            .cast(LongType).as("n_tokens")), col("n_tokens")), 2048L)),
 
     // Detection → training-data effect, closed (SURVEY §7.9 candidate,
     // landed round 14): pack the SPAN-MASKED corpus — q_span_intervals
@@ -2616,7 +2547,7 @@ object Text {
         .select(col("doc_id"), col("n_tokens"),
           coalesce(col("_m"), lit(0L)).as("n_masked"),
           (col("n_tokens") - coalesce(col("_m"), lit(0L))).as("n_kept"))
-      packCumBefore(perDoc, "n_kept")
+      packCumBefore(perDoc, col("n_kept"))
         .select(col("doc_id"), col("n_tokens"), col("n_masked"),
           col("n_kept"),
           expr(s"cum_before div $budget").as("shard"),
@@ -2638,7 +2569,7 @@ object Text {
     // shuffle — unavoidable and correct: it IS the emitted artifact.
     // Every column is exact integer arithmetic — fully oracled.
     "q_pipeline_pretrain" -> ((s, dir) =>
-      packedSegmentsOf(pretrainEncodedDocs(s, dir), shardBase = 0L)),
+      packedSegmentsOf(pretrainEncodedDocs(s, dir).persist(), shardBase = 0L)),
 
     // THE CAPSTONE, v2 — the FULL published funnel as ONE oracled
     // artifact (round-14 verdict task 8): PII scrub → word battery →
@@ -2656,7 +2587,7 @@ object Text {
       packedSegmentsOf(
         encodeWithTokenizer(s, dir,
           corpusCleanKeptDocs(s, dir).select("doc_id", "w"),
-          ensurePretrainSymtabStore(s, dir)),
+          ensurePretrainSymtabStore(s, dir)).persist(),
         shardBase = 0L)),
 
     // THE ARTIFACT'S INTEGRITY MANIFEST — what a trainer validates
@@ -2669,7 +2600,7 @@ object Text {
     // metadata-sized at any corpus). Fully oracled: the DuckDB side
     // groups the IDENTICAL shared `emitted` CTE relation.
     "q_pretrain_manifest" -> ((s, dir) =>
-      packedSegmentsOf(pretrainEncodedDocs(s, dir), shardBase = 0L)
+      packedSegmentsOf(pretrainEncodedDocs(s, dir).persist(), shardBase = 0L)
         .groupBy("shard")
         .agg(count(lit(1)).as("n_segments"),
           sum(col("end_tok") - col("start_tok") + 1).as("n_tokens"),
@@ -2677,23 +2608,20 @@ object Text {
             array_sort(collect_list(struct(col("off_in_shard"), col("ids")))),
             x => x.getField("ids")), "-")).as("shard_checksum"))),
 
+    // Deterministic training-shard shuffle — the final data op of an
+    // LLM run: turn the curated corpus into randomized shards. A
+    // reingest-stable md5 key gives each doc a uniform position, the
+    // BANDED global rank (the pack family's packCumBefore at weight 1 — no
+    // unpartitioned window at any corpus size) orders the corpus by it,
+    // and strided assignment deals ranks round-robin into 64 shards, so
+    // every shard is itself a uniform sample in shuffled order. Cost:
+    // one banded window + the ≤1024-row offsets fold; no global sort.
     "q_corpus_shuffle" -> ((s, dir) => {
       val nShards = 64
-      val keyed = Tables(s, dir, "documents")
-        .select(col("doc_id"),
-          conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast(LongType).as("shuffle_key"))
-        .withColumn("bkt", Banding.bucketize(
-          col("shuffle_key").cast(DoubleType), lit(0.0), lit(4294967296.0)))
-      val off = Banding.offsets(
-        keyed.groupBy("bkt").agg(count(lit(1)).as("bc")), Seq("off"))
-      val wIn = org.apache.spark.sql.expressions.Window
-        .partitionBy("bkt").orderBy(col("shuffle_key"), col("doc_id"))
-      keyed.join(broadcast(off), "bkt")
-        .withColumn("rnk", row_number().over(wIn).cast(LongType) + col("off"))
-        .select(col("doc_id"), col("shuffle_key"),
-          ((col("rnk") - 1) % nShards).as("shard"),
-          expr(s"((rnk - 1) div $nShards) + 1").as("pos"))
+      packCumBefore(Tables(s, dir, "documents").select("doc_id"), lit(1L))
+        .select(col("doc_id"), col("k").as("shuffle_key"),
+          (col("cum_before") % nShards).as("shard"),
+          expr(s"(cum_before div $nShards) + 1").as("pos"))
     }),
 
     // DSIR data selection (Xie et al. 2023, "Data Selection for Language
@@ -2715,8 +2643,7 @@ object Text {
         .persist() // model build (explode) + per-doc scoring share it
       dsirScore(t, dsirModelsOf(dsirCountsOf(t)))
         .withColumn("score", col("log_w") - log(-log(
-          (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast(LongType) % 1000000 + 0.5) / 1000000.0)))
+          (Parity.md5Key(col("doc_id")) % 1000000 + 0.5) / 1000000.0)))
         .orderBy(col("score").desc, col("doc_id"))
         .limit(100)
         .select(col("doc_id"), col("lang"),
@@ -2893,9 +2820,9 @@ object Text {
     // token share. The vocabulary is unbounded at corpus scale (typos,
     // URLs, junk tokens grow with the data), so the frequency rank and
     // the cumulative token share go through the BANDED two-level prefix
-    // sum (Banding): rows band by descending count, the ≤1024-row band
-    // table's strictly-preceding (count, token-count) offsets fold on
-    // the driver, and every window is partitionBy(bkt) — zero
+    // sum (Banding.sumsBefore, banded on the negated count): the
+    // ≤1024-row band table's strictly-preceding (count, token-count)
+    // offsets fold on the driver, and every window is per band — zero
     // unpartitioned windows (pinned inventory-wide in PlanShapeSpec).
     // All offsets are exact longs, so rank and cum_share are value-
     // identical to the single-reducer form the oracle computes.
@@ -2908,21 +2835,14 @@ object Text {
       // second corpus-scale tokenize pass
       val tot = counts.agg(sum(col("cnt")).as("n_total"),
         min(col("cnt")).as("minc"), max(col("cnt")).as("maxc"))
-      val banded = counts.crossJoin(broadcast(tot))
-        .withColumn("bkt", Banding.bucketizeDesc(col("cnt").cast(DoubleType),
-          col("minc").cast(DoubleType), col("maxc").cast(DoubleType)))
-      val off = Banding.offsets(
-        banded.groupBy("bkt").agg(count(lit(1)).as("bc"),
-          sum(col("cnt")).as("bs")), Seq("off_n", "off_s"))
-      val wIn = org.apache.spark.sql.expressions.Window
-        .partitionBy("bkt").orderBy(col("cnt").desc, col("word"))
-      banded.join(broadcast(off), "bkt").select(
-        col("word"), col("cnt"),
-        (row_number().over(wIn) + col("off_n")).cast(IntegerType).as("rnk"),
-        ((sum(col("cnt")).over(wIn.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)) + col("off_s"))
-          .cast(DoubleType) / col("n_total")).as("cum_share"))
+      Banding.sumsBefore(counts.crossJoin(broadcast(tot)), -col("cnt"),
+          Seq(col("cnt").desc, col("word")),
+          Seq("n_before" -> lit(1L), "s_before" -> col("cnt")),
+          Some((-col("maxc"), -col("minc"))))
+        .select(col("word"), col("cnt"),
+          (col("n_before") + 1).cast(IntegerType).as("rnk"),
+          ((col("s_before") + col("cnt")).cast(DoubleType) / col("n_total"))
+            .as("cum_share"))
     }),
 
     // Weight-PROPORTIONAL Bernoulli (Poisson) sampling + Horvitz-Thompson
@@ -2952,8 +2872,7 @@ object Text {
     "q_weighted_sample" -> ((s, dir) => {
       Tables(s, dir, "documents")
         .withColumn("u",
-          conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast(LongType) % 1000)
+          Parity.md5Key(col("doc_id")) % 1000)
         .filter(col("u") < col("n_chars"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_kept"),
@@ -3065,17 +2984,9 @@ object Text {
           posexplode(split(lower(col("text")), "\\s+")).as(Seq("pos", "word")))
         .filter(length(col("word")) > 0)
       val counts = tok.groupBy("word").agg(count(lit(1)).as("cnt"))
-      val bounds = counts.agg(min(col("cnt")).as("minc"), max(col("cnt")).as("maxc"))
-      val banded = counts.crossJoin(broadcast(bounds))
-        .withColumn("bkt", Banding.bucketizeDesc(col("cnt").cast(DoubleType),
-          col("minc").cast(DoubleType), col("maxc").cast(DoubleType)))
-      val off = Banding.offsets(
-        banded.groupBy("bkt").agg(count(lit(1)).as("bc")), Seq("off_n"))
-      val wIn = org.apache.spark.sql.expressions.Window
-        .partitionBy("bkt").orderBy(col("cnt").desc, col("word"))
-      val vocab = banded.join(broadcast(off), "bkt")
-        .select(col("word"),
-          (row_number().over(wIn) + col("off_n")).cast(IntegerType).as("tid"))
+      val vocab = Banding.sumsBefore(counts, -col("cnt"),
+          Seq(col("cnt").desc, col("word")), Seq("n_before" -> lit(1L)))
+        .select(col("word"), (col("n_before") + 1).cast(IntegerType).as("tid"))
       tok.join(vocab, Seq("word"), "left")
         .select(col("doc_id"), col("pos"), coalesce(col("tid"), lit(0)).as("tid"))
         .groupBy("doc_id")
@@ -3090,8 +3001,7 @@ object Text {
     "q_train_test_split" -> ((s, dir) =>
       Tables(s, dir, "documents").select(
         col("doc_id"),
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast(LongType) % 100).as("bucket"))
+        (Parity.md5Key(col("doc_id")) % 100).as("bucket"))
         .withColumn("split",
           when(col("bucket") < 90, "train")
             .when(col("bucket") < 95, "valid")
@@ -3110,8 +3020,7 @@ object Text {
       val cap = 50
       val d = Tables(s, dir, "documents").select(
         col("doc_id"), col("source"),
-        conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast(LongType).as("h"))
+        Parity.md5Key(col("doc_id")).as("h"))
       d.withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("source").orderBy(col("h"), col("doc_id"))))
@@ -3141,8 +3050,7 @@ object Text {
           org.apache.spark.sql.Encoders.scalaLong))
       Tables(s, dir, "documents").select(
           col("doc_id"), col("source"),
-          conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast(LongType).as("h"))
+          Parity.md5Key(col("doc_id")).as("h"))
         .groupBy("source").agg(
           count(lit(1)).as("n_total"),
           top(-col("h").cast(DoubleType), col("doc_id")).as("kept"))
@@ -3966,7 +3874,7 @@ object Text {
          FROM r LEFT JOIN k ON r.source = k.source""",
 
     // the oracle computes the global rank directly (single node); the
-    // banded two-level rank equals it exactly because bucketize is
+    // banded two-level rank equals it exactly because the band is
     // monotone in the key
     // same md5 stream order; the banded prefix sum equals the plain
     // running-sum window exactly (band boundaries only shape the plan)

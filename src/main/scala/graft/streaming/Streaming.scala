@@ -1967,12 +1967,11 @@ object Streaming {
       val gids = encoded.select("gid").distinct()
         .collect().map(_.getLong(0)).sorted
       gids.foreach { g =>
-        // persistInput = false: `encoded` above is the cache — a
-        // packedSegmentsOf-internal persist would only add a copy
+        // `encoded` above is the cache packedSegmentsOf's two passes read
         T.packedSegmentsOf(
             encoded.filter(col("gid") === g)
               .select("doc_id", "ids", "n_tokens"),
-            shardBase = g * 1000000L, persistInput = false)
+            shardBase = g * 1000000L)
           .withColumn("ingest_group", lit(g))
           .write.mode("overwrite").parquet(s"$root/out/group_g$g")
       }

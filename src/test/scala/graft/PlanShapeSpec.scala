@@ -505,7 +505,7 @@ class PlanShapeSpec extends SparkSpec {
       "two-level prefix sum partitions every cumulative by band") {
     // q_auc / q_gini / q_lorenz ranked corpus-scale tables through
     // Window.orderBy(...) until round 7; the banded rewrite (plus the
-    // driver-folded Banding.offsets band metadata) must keep every
+    // driver-folded band offsets of Banding.sumsBefore) must keep every
     // WindowExec partitioned — an empty partitionSpec here means a
     // single-task global sort came back. Walk the executed plan: the
     // formatted string can't distinguish partitioned windows.
@@ -523,9 +523,11 @@ class PlanShapeSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       // q_zipf / q_encode_ids joined the banded family in round 8 (the
-      // vocabulary is unbounded at corpus scale)
+      // vocabulary is unbounded at corpus scale); the md5-ordered shuffle
+      // and pack queries ride the same Banding.sumsBefore
       for (q <- Seq("q_auc", "q_gini", "q_lorenz", "q_ks_2samp",
-          "q_zipf", "q_encode_ids")) {
+          "q_zipf", "q_encode_ids", "q_corpus_shuffle", "q_pack_sequences",
+          "q_pack_emit", "q_pack_masked", "q_pipeline_pretrain")) {
         spark.catalog.clearCache() // fresh persists per query
         val ws = windows(
           SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan)
